@@ -39,6 +39,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -164,11 +165,12 @@ def main() -> None:
                 if v:
                     by[leg["code"]].append(v)
             if by["ref"] and by["head"]:
-                med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
                 summary[mode] = {
                     "ref_sustained_eps": by["ref"],
                     "head_sustained_eps": by["head"],
-                    "head_over_ref_median": round(med(by["head"]) / med(by["ref"]), 3),
+                    "head_over_ref_median": round(
+                        statistics.median(by["head"]) / statistics.median(by["ref"]), 3
+                    ),
                 }
         result = {
             "protocol": "interleaved mirrored A/B, fresh pinned JVM per leg, shared seeded feed, warmup equalized",

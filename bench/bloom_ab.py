@@ -29,6 +29,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import time
@@ -137,7 +138,7 @@ def main() -> None:
     for leg in legs:
         by[leg["variant"]].append(leg["merge_epoch_seconds"])
         rows[leg["variant"]].add(leg["final_rows"])
-    med = {k: sorted(v)[len(v) // 2] for k, v in by.items()}
+    med = {k: statistics.median(v) for k, v in by.items()}
     result = {
         "protocol": "interleaved mirrored bloom-vs-smj A/B, fresh pinned "
                     "JVM per leg, shared low-churn feed, warmup equalized",

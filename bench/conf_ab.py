@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -106,7 +107,7 @@ def main() -> None:
         by = {"base": [], "conf": []}
         for leg in legs:
             by[leg["variant"]].append(leg[m]["sustained_events_per_sec"])
-        med = {k: sorted(v)[len(v) // 2] for k, v in by.items()}
+        med = {k: statistics.median(v) for k, v in by.items()}
         summary[m] = {
             "base_sustained_eps": by["base"],
             "conf_sustained_eps": by["conf"],

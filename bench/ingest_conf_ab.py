@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -116,7 +117,7 @@ def main() -> None:
     for leg in legs:
         by[leg["variant"]].append(leg["sustained_events_per_sec"])
         rows[leg["variant"]].add(leg["final_rows"])
-    med = {k: sorted(v)[len(v) // 2] for k, v in by.items()}
+    med = {k: statistics.median(v) for k, v in by.items()}
     result = {
         "protocol": "interleaved mirrored IngestConfig A/B, fresh pinned "
                     "JVM per leg, shared seeded feed, warmup equalized",

@@ -448,7 +448,7 @@ def test_point_read_prunes_to_one_bucket(spark, feed, tmp_path):
         )
         assert got["text"].tolist() == want["text"].tolist(), storage
         # pruning really happened: the plan reads only the conv's bucket
-        b = job.table.bucket_of(spark, conv)
+        b = job.table.bucket_of(conv)
         state, _ = job.table._current_state()
         all_files = {f for fl in state.values() for f in fl}
         bucket_files = set(state.get(str(b), []))

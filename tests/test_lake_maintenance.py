@@ -126,7 +126,7 @@ def test_selective_compaction_targets_fragmented_buckets(spark, feed, tmp_path):
     # conversation (commit_epoch append=True is the unit under test's input
     # shape — the ingest loop writes the same thing).
     conv = feed["oracle"]["conv_id"].iloc[0]
-    b = t.bucket_of(spark, conv)
+    b = t.bucket_of(conv)
     last = t.last_committed()
     delta = (
         t.read_resolved(spark, buckets=[b], with_version_cols=True)

@@ -104,7 +104,7 @@ def test_bucket_pruned_point_read_has_no_exchange(spark, cow_job):
     # (files_for_key: bucket routing + per-file min/max key stats), which
     # is contained in the target bucket's manifested files
     state, _ = cow_job.table._current_state()
-    b = cow_job.table.bucket_of(spark, conv)
+    b = cow_job.table.bucket_of(conv)
     n_inputs = {p.replace("file://", "").replace("file:", "") for p in df.inputFiles()}
     assert n_inputs == {
         os.path.join(cow_job.table.root, f)
@@ -143,7 +143,7 @@ def test_local_fold_matches_window_fold(spark, mor_job):
 def test_local_fold_respects_bucket_pruning_and_time_travel(spark, mor_job):
     t = mor_job.table
     conv = t.read_resolved(spark).select("conv_id").first()["conv_id"]
-    b = t.bucket_of(spark, conv)
+    b = t.bucket_of(conv)
     pruned = t.read_resolved(spark, buckets=[b])
     full = t.read_resolved(spark)
     assert (

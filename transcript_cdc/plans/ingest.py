@@ -1037,9 +1037,9 @@ class CdcIngestJob:
                         self.feed.read_range(lo2, hi2),
                         time.time(),
                     )
-                    # Pre-pay analysis while epoch k's stages run; the
-                    # write command wraps this DataFrame's ANALYZED plan.
-                    nplanned["new_state"]._jdf.queryExecution().analyzed()
+                    # Pre-pay analysis while epoch k's stages run (.schema
+                    # forces it); the write command wraps the analyzed plan.
+                    nplanned["new_state"].schema
                 pre = fut.result()
                 nfut = (
                     pool.submit(self._write_planned, nplanned)

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from transcript_cdc import schemas
+from transcript_cdc.functions.portable import py_xxhash64
 
 BUCKET_COL = "__bucket"
 
@@ -465,16 +466,12 @@ class ParquetSnapshotTable:
             )
         return df
 
-    def bucket_of(self, spark: SparkSession, key_value: str) -> int:
-        """Bucket id for one key value (1-row JVM job — xxhash64 has no
-        public Python twin, and bucket routing must match the writer
-        bit-for-bit)."""
-        row = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(key_value)), F.lit(self.n_buckets))
-            .cast("int")
-            .alias("b")
-        ).first()
-        return int(row["b"])
+    def bucket_of(self, key_value: str) -> int:
+        """Bucket id for one key value, computed in the driver: the
+        ``py_xxhash64`` twin matches the writer's ``bucket_expr``
+        (``pmod(xxhash64(key), N)``) bit-for-bit, so routing a point read
+        launches no Spark job. Python's ``%`` is ``pmod`` for N > 0."""
+        return py_xxhash64(key_value) % self.n_buckets
 
     def files_for_key(
         self, key_value: str, bucket: int, as_of_epoch: int | None = None
@@ -505,7 +502,7 @@ class ParquetSnapshotTable:
         layered: bucket routing (no I/O outside one bucket), then per-file
         min/max key stats (files_for_key — no I/O outside overlapping
         files), then the conv_id filter prunes row groups within them."""
-        b = self.bucket_of(spark, conv_id)
+        b = self.bucket_of(conv_id)
         df = self.read_files(spark, self.files_for_key(conv_id, b))
         if with_bucket_col:
             df = df.withColumn(
@@ -1224,7 +1221,7 @@ class MergeOnReadTable(ParquetSnapshotTable):
         conversation) → a key row-group predicate inside the fold's
         parquet reads. Sound under LWW: a key's winner depends only on
         its own rows, and every file that can contain the key is kept."""
-        b = self.bucket_of(spark, conv_id)
+        b = self.bucket_of(conv_id)
         df = self._read_resolved_local(
             spark,
             buckets=[b],
