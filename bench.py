@@ -113,9 +113,9 @@ def run_cdc_replay(spark, n_events_target: int, epochs: int = 4, modes=("cow", "
         # the CPU budget that the second mode's timing then pays for.
         timed: dict[str, tuple] = {}
         # BENCH_CDC_INGEST_CONF: JSON dict of IngestConfig overrides —
-        # lets config A/Bs (bloom vs smj survivor regime, pipeline on/off)
-        # reuse the whole pinned-subprocess leg machinery (bench/ab.py,
-        # bench/bloom_ab.py) without code forks.
+        # lets config A/Bs (survivor regime caps, pipeline on/off) reuse
+        # the whole pinned-subprocess leg machinery (bench/ab.py,
+        # bench/ingest_conf_ab.py) without code forks.
         ing_over = json.loads(os.environ.get("BENCH_CDC_INGEST_CONF", "{}"))
         for mode in modes:
             # Overrides win over the bench defaults (passing both to the
@@ -223,7 +223,7 @@ def run_cdc_replay(spark, n_events_target: int, epochs: int = 4, modes=("cow", "
                 "epoch_seconds": [r.get("seconds") for r in results],
                 # per-epoch plan evidence straight from the manifests (which
                 # survivor regime / control path / dedup strategy actually
-                # fired — the bloom A/B's "regime survived" receipt)
+                # fired — the config A/Bs' "regime survived" receipt)
                 "epoch_plan": [
                     {
                         k: m.get(k)

@@ -1,6 +1,6 @@
 """Generic interleaved same-host A/B of two IngestConfig variants on one
 shared seeded feed (the IngestConfig twin of bench/conf_ab.py's spark-conf
-A/B; bench/bloom_ab.py is the shape-specific ancestor).
+A/B).
 
 Each leg runs `BENCH_REPLAY_ONLY=1 python bench.py` in a fresh pinned
 subprocess with the variant shipped via BENCH_CDC_INGEST_CONF; legs are
@@ -10,8 +10,8 @@ which-plan-actually-ran receipt.
 
 Built to answer (round-5): did the zstd codec flips reverse the HASH
 prefilter regime's 1.57-1.59x win over full-SMJ (measured on lz4,
-bench/ab_result_hash_prefilter.json) the way they reversed the bloom
-regime's? Shape: the standard scaling feed (16M events, 8M x 2 epochs,
+bench/ab_result_hash_prefilter.json) the way they reversed the (since
+removed) bloom regime's? Shape: the standard scaling feed (16M events, 8M x 2 epochs,
 ~5.9M distinct keys per epoch — over broadcast_max_rows, under the 16M
 hash cap).
 

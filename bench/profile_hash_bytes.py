@@ -3,8 +3,7 @@ regime at the standard scaling shape (16M events, 8M x 2 epochs, ~5.9M
 keys/epoch — the shape every round-5 scaling window ran with
 merge_anti=hash).
 
-Companion to bench/profile_bloom_bytes.py (same method, different regime
-+ shape): wall-clock A/Bs at this shape are weather-dominated
+Wall-clock A/Bs at this shape are weather-dominated
 (bench/ab_result_hash_zstd.json: pairwise replay walls 0.85 / 1.00 — the
 lz4-era 1.57x hash win, ab_result_hash_prefilter.json, does NOT survive
 the zstd codec flip), so the regime-default decision rests on the

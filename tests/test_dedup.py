@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from transcript_cdc.operators.dedup import lww_dedup, union_dedup
+from transcript_cdc.plans.ingest import CdcIngestJob, IngestConfig
 
 
 def _changes(spark, rows):
@@ -52,28 +54,6 @@ def test_lww_order_robust_to_input_order(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_lww_aggregate_strategy_equivalent(spark):
-    """The max_by aggregate strategy (partial map-side combine — the CDC
-    ingest path) must produce byte-identical output to the window strategy
-    on unique-lsn input, including surviving delete ops, null payload
-    fields, and column order."""
-    rows = [
-        (
-            i,
-            ["I", "U", "D"][i % 3],
-            f"c{i % 7}",
-            i % 4,
-            None if i % 5 == 0 else f"t{i}",
-        )
-        for i in range(500)
-    ]
-    df = _changes(spark, rows).repartition(8)
-    a = lww_dedup(df, strategy="window")
-    b = lww_dedup(df, strategy="aggregate")
-    assert a.columns == b.columns
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_lww_broadcast_strategy_equivalent(spark):
     """The broadcast strategy (winner max-lsn set from a column-pruned
     scan, semi-joined back as a broadcast — the high-churn CDC ingest
@@ -97,18 +77,32 @@ def test_lww_broadcast_strategy_equivalent(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_lww_aggregate_plan_has_partial_aggregate(spark):
-    """The aggregate strategy's whole point is the map-side partial
-    combine before the exchange; pin that plan shape."""
-    df = _changes(spark, [(1, "I", "c1", 0, "a"), (2, "U", "c1", 0, "b")])
-    plan = (
-        lww_dedup(df, strategy="aggregate")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def _dedup_aggregate(spark, tmp_path):
+    lww_dedup(_changes(spark, [(1, "I", "c1", 0, "a")]), strategy="aggregate")
+
+
+def _cow_clustered(spark, tmp_path):
+    CdcIngestJob(
+        spark,
+        str(tmp_path / "feed"),
+        str(tmp_path / "table"),
+        IngestConfig(storage="cow", dedup_strategy="clustered"),
     )
-    assert "partial_max_by" in plan.lower() or "Partial" in plan, plan
-    assert "row_number" not in plan
+
+
+@pytest.mark.parametrize(
+    "build,name",
+    [(_dedup_aggregate, "aggregate"), (_cow_clustered, "clustered")],
+    ids=["lww_dedup-aggregate", "cow-clustered"],
+)
+def test_unknown_dedup_strategy_raises(spark, tmp_path, build, name):
+    """A strategy the engine does not implement must raise instead of
+    silently running another plan: lww_dedup rejects any unknown name
+    (e.g. the removed "aggregate"), and a COW job rejects the MOR-only
+    "clustered" before it creates the table."""
+    with pytest.raises(ValueError, match=name):
+        build(spark, tmp_path)
+    assert not (tmp_path / "table").exists()
 
 
 def test_lww_broadcast_plan_never_shuffles_payload(spark):

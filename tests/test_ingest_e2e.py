@@ -102,7 +102,6 @@ def test_cow_overcap_observe_control_matches_oracle(spark, feed, tmp_path):
         file_prune_max_keys=0,
         broadcast_max_rows=0,
         merge_hash_prefilter_max_keys=0,
-        merge_bloom_max_keys=0,
     )
     job = CdcIngestJob(spark, feed["dir"], root, cfg)
     results = job.run()
@@ -144,37 +143,6 @@ def test_cow_hash_prefilter_merge_matches_oracle(spark, feed, tmp_path):
         assert m["merge_anti"] == "hash"
     _assert_equal(_engine_state(job), feed["oracle"])
     # fresh process resumes cleanly past hash-regime commits
-    job2 = CdcIngestJob(spark, feed["dir"], root, cfg)
-    assert job2.run() == []
-    _assert_equal(_engine_state(job2), feed["oracle"])
-
-
-def test_cow_bloom_prefilter_merge_matches_oracle(spark, feed, tmp_path):
-    """The FOURTH survivor regime (round-5): key count over BOTH the
-    string-key broadcast cap and the sorted-array hash cap but under the
-    bloom cap → the split probes an EXECUTOR-built bloom blob
-    (operators/merge.build_bloom_filter) and only probable hits pay the
-    exact sliver anti-join. Bloom false positives enlarge the sliver but
-    can never change the result, so the replay must hit the oracle
-    exactly, resumably, with every epoch recording merge_anti="bloom".
-    (The regime is opt-in since the post-zstd A/B reversal — the cap is
-    set explicitly here.)"""
-    root = str(tmp_path / "table")
-    cfg = IngestConfig(
-        n_buckets=8,
-        epoch_events=400,
-        broadcast_max_rows=0,
-        merge_hash_prefilter_max_keys=0,
-        merge_bloom_max_keys=128_000_000,
-    )
-    job = CdcIngestJob(spark, feed["dir"], root, cfg)
-    results = job.run()
-    assert len(results) > 2
-    for r in results:
-        m = job.table.read_manifest(r["epoch"])["metrics"]
-        assert m["merge_anti"] == "bloom"
-    _assert_equal(_engine_state(job), feed["oracle"])
-    # fresh process resumes cleanly past bloom-regime commits
     job2 = CdcIngestJob(spark, feed["dir"], root, cfg)
     assert job2.run() == []
     _assert_equal(_engine_state(job2), feed["oracle"])
@@ -482,59 +450,6 @@ def test_mor_auto_picks_clustered_and_matches_forced_window(spark, feed, tmp_pat
     mw = [jw.table.read_manifest(e)["metrics"] for e in jw.table.committed_epochs()]
     assert mw and all(m["dedup"] == "window" for m in mw)
     pd.testing.assert_frame_equal(_engine_state(jc), _engine_state(jw))
-
-
-def test_cow_forced_fused_clustered_matches_window_and_oracle(
-    spark, feed, tmp_path
-):
-    """The FUSED COW epoch (forced dedup_strategy='clustered': LWW dedup
-    deferred past the merge into the range-clustering write exchange —
-    one full-payload shuffle per epoch instead of two) must be
-    value-identical to the default plan. It was A/B-REJECTED as the
-    default (survivors ride through the deferred window; CHANGES_r4.md
-    #19) but stays a supported forced strategy, so this pins: every epoch
-    manifest records dedup='clustered', the exact key metric survives
-    (pre-dedup countDistinct == post-dedup row count), and the final
-    state equals (a) the dict oracle and (b) a replay on the classic
-    dedup-first window plan — across this feed's mid-stream schema
-    evolution, deletes and 30% out-of-order events."""
-    jf = CdcIngestJob(
-        spark, feed["dir"], str(tmp_path / "f"),
-        IngestConfig(
-            n_buckets=8, epoch_events=400, storage="cow",
-            dedup_strategy="clustered",
-        ),
-    )
-    jf.run()
-    mf = [jf.table.read_manifest(e)["metrics"] for e in jf.table.committed_epochs()]
-    assert mf and all(m["dedup"] == "clustered" for m in mf)
-    _assert_equal(_engine_state(jf), feed["oracle"])
-
-    jw = CdcIngestJob(
-        spark, feed["dir"], str(tmp_path / "fw"),
-        IngestConfig(
-            n_buckets=8, epoch_events=400, storage="cow",
-            dedup_strategy="window",
-        ),
-    )
-    jw.run()
-    mw = [jw.table.read_manifest(e)["metrics"] for e in jw.table.committed_epochs()]
-    assert mw and all(m["dedup"] == "window" for m in mw)
-    pd.testing.assert_frame_equal(_engine_state(jf), _engine_state(jw))
-    # The keys metric is strategy-independent wherever it is exact: fused
-    # counts distinct keys pre-dedup (exact countDistinct in the collect
-    # regime, HLL flagged keys_estimated in the first-epoch observe
-    # regime), window counts post-dedup rows.
-    exact = [
-        (a["keys"], b["keys"])
-        for a, b in zip(mf, mw)
-        if not a.get("keys_estimated")
-    ]
-    assert exact and all(a == b for a, b in exact), exact
-    # first epoch (no live files → observe regime) is the estimated one,
-    # and the estimate lands within HLL tolerance of the exact count
-    assert mf[0].get("keys_estimated")
-    assert abs(mf[0]["keys"] - mw[0]["keys"]) <= max(5, mw[0]["keys"] * 0.05)
 
 
 def test_mor_pipelined_max_epochs_zero_is_noop(spark, feed, tmp_path):

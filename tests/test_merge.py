@@ -119,6 +119,14 @@ def test_hash_prefilter_same_result(spark):
     assert _apply(spark, snap, batch, hash_prefilter=True) == base
 
 
+def test_hash_prefilter_empty_batch_keeps_snapshot(spark):
+    """An empty batch broadcasts an empty hash array: every probe misses
+    and the whole snapshot survives on the zero-shuffle branch."""
+    snap = [(f"c{i}", 0, "keep") for i in range(5)]
+    out = _apply(spark, snap, [], hash_prefilter=True)
+    assert out == {(f"c{i}", 0): "keep" for i in range(5)}
+
+
 def test_hash_prefilter_exact_under_forced_collisions(spark):
     """survivors_anti_join is exact for ANY hash: collisions only enlarge
     the candidate set that pays the exact anti-join. pmod(hash, 2) makes
@@ -160,81 +168,3 @@ def test_hash_prefilter_plan_probes_arrow_side(spark):
     # the candidate sliver joins the narrow key set
     assert plan.count("SortMergeJoin") <= 1, plan
 
-
-def test_bloom_prefilter_same_result(spark):
-    snap = [(f"c{i}", j, f"t{i}.{j}") for i in range(40) for j in range(3)]
-    batch = (
-        [(100 + i, "U", f"c{i}", 0, f"new{i}") for i in range(0, 40, 3)]
-        + [(200 + i, "D", f"c{i}", 1, None) for i in range(0, 40, 5)]
-        + [(300, "I", "cx", 7, "ins")]
-    )
-    base = _apply(spark, snap, batch)
-    assert (
-        _apply(spark, snap, batch, bloom_prefilter=True, expected_keys=30)
-        == base
-    )
-
-
-def test_bloom_prefilter_exact_under_forced_collisions(spark):
-    """Bloom-regime exactness for ANY hash: a weak (2-valued) key hash
-    saturates the filter so nearly every snapshot row becomes a probable
-    hit — the candidate sliver degenerates toward the full snapshot, but
-    the exact anti-join keeps the result identical to the baseline."""
-    from pyspark.sql import functions as F
-
-    snap = [(f"c{i}", j, f"t{i}.{j}") for i in range(60) for j in range(2)]
-    batch = [(100 + i, "U", f"c{i}", 0, f"new{i}") for i in range(0, 60, 4)]
-    base = _apply(spark, snap, batch)
-    weak = F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(2))
-    assert (
-        _apply(
-            spark,
-            snap,
-            batch,
-            bloom_prefilter=True,
-            expected_keys=15,
-            prefilter_hash=weak,
-        )
-        == base
-    )
-
-
-def test_bloom_prefilter_empty_batch_keeps_snapshot(spark):
-    snap = [(f"c{i}", 0, "keep") for i in range(5)]
-    out = _apply(spark, snap, [], bloom_prefilter=True, expected_keys=0)
-    assert out == {(f"c{i}", 0): "keep" for i in range(5)}
-
-
-def test_bloom_filter_has_no_false_negatives(spark):
-    """The one property bloom correctness rests on: every inserted hash
-    probes positive (misses may only happen for non-members)."""
-    import numpy as np
-
-    from transcript_cdc.operators.merge import (
-        _bloom_test_bits,
-        build_bloom_filter,
-    )
-
-    df = spark.range(0, 5000).selectExpr("xxhash64(id) AS __kh")
-    words, m_bits = build_bloom_filter(df, expected_keys=5000)
-    v = (
-        df.toPandas()["__kh"].to_numpy().astype(np.int64).view(np.uint64)
-    )
-    assert _bloom_test_bits(words, v, m_bits).all()
-    # and the fpp on disjoint probes is in the designed ballpark (<2%)
-    probe = np.arange(10_000_000, 10_050_000, dtype=np.int64).view(np.uint64)
-    fpp = _bloom_test_bits(words, probe, m_bits).mean()
-    assert fpp < 0.02, fpp
-
-
-def test_bloom_prefilter_plan_shape(spark):
-    """Same split plan as the hash regime, bloom-backed: two Arrow probe
-    branches, one sliver anti-join, never a full-snapshot SMJ pair."""
-    snap = _snap(spark, [(f"c{i}", 0, "x") for i in range(8)])
-    batch = _batch(spark, [(1, "U", "c1", 0, "y"), (2, "I", "c9", 0, "z")])
-    out = merge_apply(snap, batch, bloom_prefilter=True, expected_keys=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "_in_key_set" in plan, plan
-    assert plan.count("ArrowEvalPython") == 2, plan
-    assert "LeftAnti" in plan, plan
-    assert plan.count("SortMergeJoin") <= 1, plan

@@ -56,10 +56,21 @@ def cow_job(spark, tmp_path_factory):
                       delete_ratio=0.1, seed=5, events_per_file=300)
     feed = str(base / "feed")
     write_change_feed(spec, feed)
+    # "window" pinned: the auto gate could otherwise pick "broadcast"
     job = CdcIngestJob(
         spark, feed, str(base / "cow"),
-        IngestConfig(n_buckets=8, epoch_events=400, storage="cow"),
+        IngestConfig(n_buckets=8, epoch_events=400, storage="cow",
+                     dedup_strategy="window"),
     )
+    # Keep each epoch's plan as it is at commit time, while the epoch's
+    # batch is still persisted (afterwards the plan would recompute it).
+    commit = job.table.commit_epoch
+
+    def commit_and_capture(epoch, new_state, *args, **kwargs):
+        job.live_plan = plan_of(job._last_epoch_plan)
+        return commit(epoch, new_state, *args, **kwargs)
+
+    job.table.commit_epoch = commit_and_capture
     job.run()
     return job
 
@@ -275,45 +286,40 @@ def test_mor_epoch_plan_single_full_payload_exchange(spark, mor_job):
     assert "lead(" in plan and "row_number" not in plan, plan
 
 
-@pytest.fixture(scope="module")
-def cow_fused_job(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("plans_cow_fused")
-    spec = StreamSpec(n_conversations=120, avg_turns=4, update_ratio=0.4,
-                      delete_ratio=0.1, seed=5, events_per_file=300)
-    feed = str(base / "feed")
-    write_change_feed(spec, feed)
-    job = CdcIngestJob(
-        spark, feed, str(base / "cow"),
-        IngestConfig(n_buckets=8, epoch_events=400, storage="cow",
-                     dedup_strategy="clustered"),
-    )
-    job.run()
-    return job
+def _outside_cache(plan: str) -> str:
+    """``plan`` minus every InMemoryRelation subtree (the persisted batch's
+    own plan, which the tree string repeats under each scan of the cache)."""
+    out, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
 
 
-def test_cow_fused_epoch_plan_single_full_payload_exchange(spark, cow_fused_job):
-    """The fused COW epoch (forced dedup_strategy='clustered'; A/B-rejected
-    as the default — CHANGES_r4.md #19 — but kept as a supported plan) must
-    plan ONE full-payload shuffle: the range-clustering routing exchange
-    on __range_tok, which the deferred LWW window rides (its
-    ClusteredDistribution(__range_tok, bucket, key) is satisfied by
-    HashPartitioning(__range_tok)). The snapshot side reaches the merge
-    via a BROADCAST anti join (no snapshot shuffle), and the sampled
-    RangePartitioner must not appear (stats-driven routing). cow_fused_job
-    has replayed; _last_epoch_plan is its final epoch's pre-write frame."""
+def test_cow_epoch_plan_default_shape(spark, cow_job):
+    """The default COW epoch (window dedup, broadcast survivor anti join,
+    stats-routed range write), as planned for its write while the batch is
+    persisted. The batch's dedup exchange on (conv_id, turn_idx) runs once,
+    inside the cache that both merge branches scan (anti-join keys and
+    upserts); the write plan itself has ONE exchange, the stats-routed
+    hash on __range_tok — never the sampled RangePartitioner — and the
+    snapshot reaches the anti join unshuffled against a broadcast."""
     import re
 
-    plan = (
-        cow_fused_job._last_epoch_plan._jdf.queryExecution().executedPlan().toString()
-    )
-    hash_ex = re.findall(r"Exchange hashpartitioning\(__range_tok", plan)
-    assert len(hash_ex) == 1, plan
-    # no OTHER shuffle exchange: the dedup window adds none (it rides the
-    # routing exchange) and the batch side of the anti join broadcasts
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    plan = cow_job.live_plan
+    m = cow_job.table.last_committed()["metrics"]
+    assert (m["dedup"], m["merge_anti"]) == ("window", "broadcast"), m
+    outer = _outside_cache(plan)
+    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", outer)) == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning", outer)) == 1, plan
     assert "Exchange rangepartitioning" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
-    assert "lead(" in plan and "row_number" not in plan, plan
-    # the routing token is internal: dropped before the write
-    head = plan.splitlines()[0]
-    assert "__range_tok" not in head, head
+    assert "BroadcastExchange" in outer and "LeftAnti" in outer, plan
+    assert outer.count("InMemoryTableScan") == 2, plan
+    # exactly one dedup exchange: the tree string repeats it (per cache
+    # scan, initial and final AQE plan), always with the same attributes,
+    # where a batch recomputed per branch would show two attribute sets
+    dedup = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+", plan)
+    assert len(set(dedup)) == 1, plan

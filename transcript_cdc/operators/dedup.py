@@ -7,13 +7,12 @@ replaces prior state. We make the ordering explicit: a window over the
 natural key ordered by lsn descending, keep row 1 — including the *op*,
 so a delete that is the last event for a key survives dedup as a delete.
 
-Scale notes: both strategies shuffle once on the full composite key
+Scale notes: both strategies shuffle on the full composite key
 (conv_id, turn_idx). Hot conversations do NOT skew this shuffle because
 turn_idx spreads each conversation across partitions — skew handling is
 only needed where we hash on conv_id alone (see skew.py). The
-``aggregate`` strategy additionally gets a PARTIAL map-side combine: the
-exchange carries ~|distinct keys| rows instead of |events|, which is the
-difference between shuffling 10^10 rows and ~10^8 on a high-churn feed.
+``broadcast`` strategy shuffles only the column-pruned winner aggregate
+(~|distinct keys| narrow rows), never the full payload.
 """
 
 from __future__ import annotations
@@ -39,17 +38,6 @@ def lww_dedup(
 
     - ``"window"``: ``row_number`` over the key ordered by ``order_col``
       desc — shuffles every input row, then sorts each partition.
-    - ``"aggregate"``: ``groupBy(key).agg(max_by(struct(payload),
-      order_col))`` — identical output when ``order_col`` has no ties
-      within a key (WAL LSNs are unique by construction; with ties the
-      surviving row is arbitrary under BOTH strategies). The hash
-      aggregate is partial: each map task combines its local duplicates
-      before the exchange, so with churn c (events per key per batch) the
-      shuffle carries ~1/c of the rows and the per-partition sort
-      disappears. Requires non-null ``order_col`` (an all-null key group
-      would surface a null row). Measured: the struct copy per input row
-      costs more than the shuffle saves on a single node — prefer
-      ``broadcast`` where its key-set bound holds.
     - ``"broadcast"``: two passes — ``groupBy(key).agg(max(order_col))``
       over a COLUMN-PRUNED scan (fixed-width partial hash agg, the
       exchange carries |distinct keys| narrow rows), then a broadcast
@@ -57,23 +45,19 @@ def lww_dedup(
       never shuffled at all. The CDC ingest path uses this when the
       epoch's key set is broadcastable (lag-gated, plans/ingest.py).
       Requires ``order_col`` unique within a key — a tie would keep BOTH
-      tied rows (window/aggregate keep an arbitrary one). WAL LSNs are
+      tied rows (window keeps an arbitrary one). WAL LSNs are
       unique by construction. Measured on a 16M-event high-churn feed,
       local[8]: 4.0-5.4 s vs window 9.7-30.4 s.
+
+    Any other ``strategy`` raises ValueError.
     """
-    if strategy == "aggregate":
-        payload = [c for c in df.columns if c not in key_cols]
-        return (
-            df.groupBy(*key_cols)
-            .agg(F.max_by(F.struct(*payload), F.col(order_col)).alias("__w"))
-            .select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload])
-            .select(*df.columns)
-        )
     if strategy == "broadcast":
         winners = df.groupBy(*key_cols).agg(F.max(order_col).alias(order_col))
         return df.join(
             F.broadcast(winners), [*key_cols, order_col], "left_semi"
         ).select(*df.columns)  # the semi join moves join keys first; restore
+    if strategy != "window":
+        raise ValueError(f"unknown LWW dedup strategy {strategy!r}")
     w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))

@@ -49,13 +49,6 @@ from pyspark.sql import functions as F
 
 HASH_COL = "__kh"
 
-# Bloom regime sizing (survivors_anti_join bloom_prefilter): k=8 double
-# hashes at 12 bits/key → fpp ≈ (1 - e^(-8/12))^8 ≈ 0.3%. False positives
-# only enlarge the exact-SMJ candidate sliver — never a wrong result — so
-# the parameters trade shuffle bytes against blob size, not correctness.
-BLOOM_BITS_PER_KEY = 12
-BLOOM_NUM_HASHES = 8
-
 # Hash-prefilter broadcasts created by survivors_anti_join, strongest-ref
 # tracked so the epoch loop can release executor copies deterministically
 # once the epoch's write is committed (ADVICE r4: relying on GC-driven
@@ -82,93 +75,6 @@ def release_prefilter_broadcasts() -> None:
             pass  # SparkContext already stopped — nothing to release
 
 
-def _bloom_m_bits(expected_keys: int) -> int:
-    """Bitmap size: BLOOM_BITS_PER_KEY per key, rounded up to a power of
-    two so the index computation is a mask instead of a modulo. The
-    rounding slack also absorbs an HLL-estimated key count (the fused
-    observe regime's ±2%) — an undersized m only raises the false-positive
-    rate, never breaks exactness."""
-    target = max(1024, BLOOM_BITS_PER_KEY * int(expected_keys))
-    return 1 << (target - 1).bit_length()
-
-
-def _bloom_mark_bytes(bytemap: np.ndarray, v: np.ndarray, m_bits: int) -> None:
-    """Mark k=BLOOM_NUM_HASHES double-hashed positions for hashes ``v``
-    (uint64) in a one-byte-per-bit map. The BYTE map + one final packbits
-    (in the caller, once per partition — not per Arrow batch, which would
-    make the build O(n_batches * m_bits)) is ~70x faster than
-    bitwise_or.at and sort+reduceat at 5M keys (measured on this
-    container) at the cost of m_bits transient bytes per build task
-    (12 B/key — size merge_bloom_max_keys against executor memory)."""
-    mask = np.uint64(m_bits - 1)
-    h2 = (v >> np.uint64(33)) | np.uint64(1)
-    for i in range(BLOOM_NUM_HASHES):
-        idx = (v + np.uint64(i) * h2) & mask
-        bytemap[idx] = 1
-
-
-def _bloom_test_bits(words: np.ndarray, v: np.ndarray, m_bits: int) -> np.ndarray:
-    """Vectorized membership probe: AND of k gathered bits per hash."""
-    mask = np.uint64(m_bits - 1)
-    h2 = (v >> np.uint64(33)) | np.uint64(1)
-    hit = np.ones(len(v), dtype=bool)
-    for i in range(BLOOM_NUM_HASHES):
-        idx = (v + np.uint64(i) * h2) & mask
-        hit &= (
-            (words[(idx >> np.uint64(6)).astype(np.int64)] >> (idx & np.uint64(63)))
-            & np.uint64(1)
-        ).astype(bool)
-    return hit
-
-
-def build_bloom_filter(hashes_df: DataFrame, expected_keys: int) -> tuple:
-    """EXECUTOR-built bloom filter over an int64 hash column (round-5: the
-    scale path past the sorted-array prefilter's driver-collect cap).
-
-    Each partition folds its hashes into a local m-bit numpy bitmap inside
-    one Arrow-batched pass (``mapInArrow``, iterator form — bloom inserts
-    are idempotent, so no distinct shuffle is needed at all, unlike the
-    sorted-array build); the per-partition bitmaps are OR-combined in a
-    depth-2 tree (``treeReduce``) so the driver only ever receives the
-    final blob — 1.5 bytes/key at BLOOM_BITS_PER_KEY=12 vs the sorted
-    array's 8, a ~6.7x regime extension at the same driver/executor
-    footprint. Returns (words ndarray | None, m_bits)."""
-    import pyarrow as pa
-
-    m_bits = _bloom_m_bits(expected_keys)
-
-    def gen(batches):
-        # One partition-scoped byte map, packed to bits ONCE after all
-        # batches fold in: per-batch packbits over the full bitmap would
-        # cost O(n_batches * m_bits) — at the 128M-key cap that is a 2 GiB
-        # memset+pack per ~10k-row Arrow batch.
-        bytemap = np.zeros(m_bits, dtype=np.uint8)
-        for b in batches:
-            v = b.column(0).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            ).view(np.uint64)
-            _bloom_mark_bytes(bytemap, v, m_bits)
-        words = np.packbits(bytemap, bitorder="little").view(np.uint64)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([words.tobytes()], type=pa.binary())], ["bm"]
-        )
-
-    # ≤16 build partitions bounds the tree-combine transfer to 16 blobs
-    # regardless of the batch's shuffle-partition count. gen yields one
-    # (possibly all-zero) bitmap row per partition, so the reduce input is
-    # non-empty whenever the plan has any partition at all.
-    parts = hashes_df.rdd.getNumPartitions()
-    if parts == 0:
-        return None, m_bits
-    if parts > 16:
-        hashes_df = hashes_df.coalesce(16)
-    bitmaps = hashes_df.mapInArrow(gen, "bm binary")
-    words = bitmaps.rdd.map(
-        lambda r: np.frombuffer(r.bm, dtype=np.uint64)
-    ).treeReduce(np.bitwise_or, depth=2)
-    return words, m_bits
-
-
 def survivors_anti_join(
     snapshot: DataFrame,
     batch: DataFrame,
@@ -176,15 +82,13 @@ def survivors_anti_join(
     *,
     broadcast_keys: bool = False,
     hash_prefilter: bool = False,
-    bloom_prefilter: bool = False,
-    expected_keys: int | None = None,
     prefilter_hash=None,
 ) -> DataFrame:
     """Snapshot rows whose key is NOT in the batch's key set (the merge's
     survivor side). ``batch`` needs only the key columns and may carry
     duplicate keys (duplicates never change anti-join semantics).
 
-    Four physical regimes, picked by the caller from the epoch's key
+    Three physical regimes, picked by the caller from the epoch's key
     count (plans/ingest.py):
 
     - ``broadcast_keys``: broadcast anti-join on the full key columns —
@@ -214,29 +118,15 @@ def survivors_anti_join(
       collisions and prove it. NOTE: building the set runs one eager
       (narrow, longs-only) Spark job at plan-construction time; the
       epoch loop calls this on its already-persisted batch.
-    - ``bloom_prefilter`` (round-5; OPT-IN from the epoch loop — the
-      post-zstd A/B + byte receipt put the SMJ fallback ahead at the
-      measured 18M-key shape, see IngestConfig.merge_bloom_max_keys):
-      past the sorted array's driver-collect cap, the SAME split probes
-      an EXECUTOR-built bloom filter instead (:func:`build_bloom_filter` — per-partition numpy
-      bitmaps OR-combined in a depth-2 tree; the driver only holds the
-      final blob, 1.5 bytes/key at BLOOM_BITS_PER_KEY=12 vs the array's
-      8 — a ~6.7x regime extension at the same footprint, and the build
-      needs no distinct shuffle because bloom inserts are idempotent).
-      A false positive (~0.3%) only routes one more row through the
-      exact SMJ sliver — never a wrong result — so the regime stays
-      exact for ANY hash, including test-forced collision hashes.
-      Requires ``expected_keys`` (the control pass's key count; an HLL
-      estimate is fine — sizing slack only moves the fpp).
-    - none of the above: plain anti-join — Catalyst picks SMJ, exchanging
-      + sorting the full snapshot payload. The fallback once even 1.5
+    - neither: plain anti-join — Catalyst picks SMJ, exchanging +
+      sorting the full snapshot payload. The fallback once even 8
       bytes/key would not fit driver/executor memory.
     """
     key_cols = list(key_cols)
     batch_keys = batch.select(*key_cols)
     if broadcast_keys:
         return snapshot.join(F.broadcast(batch_keys), on=key_cols, how="left_anti")
-    if not (hash_prefilter or bloom_prefilter):
+    if not hash_prefilter:
         return snapshot.join(batch_keys, on=key_cols, how="left_anti")
 
     h = (
@@ -252,41 +142,20 @@ def survivors_anti_join(
             "before the hash-prefilter merge"
         )
     release_prefilter_broadcasts()  # drain any prior epoch's filter
-    sc = snapshot.sparkSession.sparkContext
-    if hash_prefilter:
-        hashes = (
-            batch.select(h.alias(HASH_COL)).distinct().toArrow()[HASH_COL]
-        ).to_numpy(zero_copy_only=False)
-        sorted_hashes = np.sort(hashes.astype(np.int64, copy=False))
-        bc = sc.broadcast(sorted_hashes)
+    hashes = (
+        batch.select(h.alias(HASH_COL)).distinct().toArrow()[HASH_COL]
+    ).to_numpy(zero_copy_only=False)
+    sorted_hashes = np.sort(hashes.astype(np.int64, copy=False))
+    bc = snapshot.sparkSession.sparkContext.broadcast(sorted_hashes)
 
-        @F.pandas_udf("boolean")
-        def _in_key_set(kh: pd.Series) -> pd.Series:
-            a = bc.value
-            v = kh.to_numpy()
-            if len(a) == 0:
-                return pd.Series(np.zeros(len(v), dtype=bool))
-            idx = np.minimum(np.searchsorted(a, v), len(a) - 1)
-            return pd.Series(a[idx] == v)
-
-    else:
-        if expected_keys is None:
-            raise ValueError("bloom_prefilter requires expected_keys")
-        words, m_bits = build_bloom_filter(
-            batch.select(h.alias(HASH_COL)), expected_keys
-        )
-        bc = sc.broadcast(words)
-
-        @F.pandas_udf("boolean")
-        def _in_key_set(kh: pd.Series) -> pd.Series:
-            w = bc.value
-            v = kh.to_numpy()
-            if w is None:
-                return pd.Series(np.zeros(len(v), dtype=bool))
-            hit = _bloom_test_bits(
-                w, v.astype(np.int64, copy=False).view(np.uint64), m_bits
-            )
-            return pd.Series(hit)
+    @F.pandas_udf("boolean")
+    def _in_key_set(kh: pd.Series) -> pd.Series:
+        a = bc.value
+        v = kh.to_numpy()
+        if len(a) == 0:
+            return pd.Series(np.zeros(len(v), dtype=bool))
+        idx = np.minimum(np.searchsorted(a, v), len(a) - 1)
+        return pd.Series(a[idx] == v)
 
     _LIVE_PREFILTER_BROADCASTS.append(bc)
     # The split below consumes snap_h TWICE (kept_direct + candidates), so
@@ -313,8 +182,6 @@ def merge_apply(
     broadcast_batch: bool | None = None,
     drop_cols: Sequence[str] = ("lsn",),
     hash_prefilter: bool = False,
-    bloom_prefilter: bool = False,
-    expected_keys: int | None = None,
     prefilter_hash=None,
 ) -> DataFrame:
     """Apply a LWW-dedup'd change batch to a snapshot; return the new state.
@@ -323,9 +190,8 @@ def merge_apply(
     carry op + payload columns; `snapshot` carries key + payload columns.
     Result schema is the union-by-name of both payload schemas; op/lsn and
     any `drop_cols` are dropped. Deterministic: result content depends only
-    on the two inputs, never on partitioning. ``hash_prefilter`` /
-    ``bloom_prefilter`` select the middle survivor regimes — see
-    :func:`survivors_anti_join`.
+    on the two inputs, never on partitioning. ``hash_prefilter`` selects
+    the middle survivor regime — see :func:`survivors_anti_join`.
     """
     key_cols = list(key_cols)
     survivors = survivors_anti_join(
@@ -334,8 +200,6 @@ def merge_apply(
         key_cols,
         broadcast_keys=bool(broadcast_batch),
         hash_prefilter=hash_prefilter,
-        bloom_prefilter=bloom_prefilter,
-        expected_keys=expected_keys,
         prefilter_hash=prefilter_hash,
     )
     upserts = batch.filter(F.col(op_col) != F.lit("D")).drop(

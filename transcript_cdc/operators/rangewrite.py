@@ -125,7 +125,6 @@ def assign_range_partition(
     n_parts: int,
     bucket_col: str,
     key_col: str,
-    keep_token: bool = False,
 ) -> DataFrame:
     """Shuffle ``df`` so reducer i holds exactly value-range i.
 
@@ -134,22 +133,10 @@ def assign_range_partition(
     token[range_id] (see module docstring) so partition id == range id.
     NULL keys (none post-dedup, keys are non-null by contract) compare
     false everywhere and land in range 0.
-
-    ``keep_token=True`` retains the ``__range_tok`` routing column so a
-    downstream window can CLUSTER on it and ride this exchange — the
-    fused COW epoch's LWW dedup (plans/ingest.py) windows over
-    ``(__range_tok, bucket, key...)``, whose ClusteredDistribution is
-    satisfied by this HashPartitioning(__range_tok), adding no second
-    exchange. The token is emitted in every branch (a constant when there
-    is only one range) so callers can cluster on it unconditionally; the
-    caller drops it before the write.
     """
     n_ranges = len(bounds) + 1
     if n_ranges < 2:
-        out = df
-        if keep_token:
-            out = out.withColumn("__range_tok", F.lit(0))
-        return out.repartition(max(1, n_parts), F.col(bucket_col))
+        return df.repartition(max(1, n_parts), F.col(bucket_col))
     row = F.struct(F.col(bucket_col), F.col(key_col))
     rng = None
     for b, k in bounds:
@@ -157,5 +144,8 @@ def assign_range_partition(
         rng = c if rng is None else rng + c
     tokens = partition_tokens(n_ranges)
     tok = F.element_at(F.array(*[F.lit(t) for t in tokens]), rng + 1)
-    out = df.withColumn("__range_tok", tok).repartition(n_ranges, F.col("__range_tok"))
-    return out if keep_token else out.drop("__range_tok")
+    return (
+        df.withColumn("__range_tok", tok)
+        .repartition(n_ranges, F.col("__range_tok"))
+        .drop("__range_tok")
+    )

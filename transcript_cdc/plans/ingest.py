@@ -12,39 +12,26 @@ clustering (bucket[, salt]) so the dedup and the sink repartition are the
 same exchange (operators/dedup.lww_dedup_clustered). COW epochs:
 
   changes(lsn∈(lo,hi])              parquet scan, lsn range pushed down
-    → normalize_text (Arrow)        narrow
     → lww_dedup                     SHUFFLE 1: hash(conv_id,turn_idx) window
+    → normalize_text (Arrow)        narrow, winners only
     → __bucket = pmod(xxhash64(conv_id), N)    narrow
-    ⨝ snapshot(HOT FILES of touched buckets)   SHUFFLE 2: merge join
-                                    (keys ≤ broadcast cap → broadcast anti
-                                    join, snapshot side not shuffled;
+    ⨝ snapshot(HOT FILES of touched buckets)   survivor anti join, three
+                                    rungs by the epoch's key count:
+                                    keys ≤ broadcast_max_rows → broadcast
+                                    anti join (snapshot side not shuffled);
                                     keys ≤ merge_hash_prefilter_max_keys →
                                     broadcast distinct key-HASH longs, only
                                     hash-hit rows pay the exact SMJ;
-                                    keys ≤ merge_bloom_max_keys (opt-in,
-                                    default off — the zstd codecs flipped
-                                    its A/B; see the config comment) →
-                                    same split over an EXECUTOR-built
-                                    bloom blob at 1.5 B/key;
-                                    beyond → full SMJ). Hot files = the
+                                    beyond → full SMJ. Hot files = the
                                     manifest's per-file key-range stats ∩
                                     this batch's key set (plan_cow_merge);
                                     provably-untouched files carry forward
                                     unread and unrewritten.
-    → range-cluster on (bucket, conv_id)       (cow: keeps every output
-                                    file on a tight key interval so the
-                                    NEXT epoch's pruning stays selective;
+    → range-cluster on (bucket, conv_id)       SHUFFLE 2 (cow: keeps every
+                                    output file on a tight key interval so
+                                    the NEXT epoch's pruning stays selective;
                                     mor: salted repartition by bucket)
     → write data/epoch=K/ + manifest commit (+ footer key stats)
-
-A FUSED single-exchange COW variant exists (forced
-``dedup_strategy="clustered"``: skip SHUFFLE 1, route all batch versions
-through the range-clustering exchange, resolve LWW + op='D' in a window
-over (__range_tok, bucket, key) riding it). It is value-correct and
-plan-shape-tested but A/B-REJECTED as the default: survivors must ride
-through the deferred window while the classic plan lets them bypass dedup
-entirely — measured 0.85-0.91x on local[8] across churn 1.06-1.44 and
-151k vs 204k sustained ev/s at 4 executors (CHANGES_r4.md #19).
 
 At 10^10 events the loop is bounded per-epoch: cost scales with
 |epoch slice| + |files containing batch keys|, never with |full table|,
@@ -71,7 +58,9 @@ from transcript_cdc.operators.dedup import lww_dedup, lww_dedup_clustered
 from transcript_cdc.operators.merge import (
     merge_apply,
     release_prefilter_broadcasts,
-    survivors_anti_join,
+    # Unused here; the benchmark tracer (perfbench/spans.py) patches this
+    # module binding by name, so it stays until the tracer drops it.
+    survivors_anti_join,  # noqa: F401
 )
 from transcript_cdc.plans.control import JobControl, job_group
 from transcript_cdc.operators.rangewrite import (
@@ -113,30 +102,8 @@ class IngestConfig:
     # route provably-untouched snapshot rows around the sort-merge anti
     # join; only the hash hits pay the exact SMJ. Size against 8 B/key
     # driver+executor headroom when raising it. Past this bound the
-    # ladder falls to full SMJ (or the opt-in bloom regime below).
+    # ladder falls to full SMJ.
     merge_hash_prefilter_max_keys: int = 16_000_000
-    # Fourth survivor regime (round-5), OPT-IN: past the sorted-array cap,
-    # build a BLOOM filter over the batch's distinct key hashes
-    # EXECUTOR-SIDE (per-partition numpy bitmaps OR-combined in a tree —
-    # the driver only ever holds the final blob, 1.5 bytes/key: 128M keys
-    # = 192 MB, ~6.7x the sorted array's reach at the same footprint) and
-    # probe it in the same Arrow-batched split; false positives only
-    # enlarge the exact-SMJ sliver, never a wrong result. Default 0 = OFF:
-    # with the zstd codecs the regime LOST its own re-run A/B at an
-    # 18M-key epoch (smj merge epoch 75-81s vs bloom 126-135s, both
-    # mirrored pairs, bench/ab_result_bloom.json) and the deterministic
-    # byte receipt says the loss is structural, not weather — bloom pays
-    # +33% input bytes (double snapshot scan) and 1.6x task CPU to save
-    # only 8% shuffle bytes, because the write's range-cluster exchange
-    # dominates shuffle in both variants and zstd already shrank the
-    # SMJ's snapshot exchange (bench/profile_bloom_bytes.json; the
-    # pre-codec-flip A/B it reverses is ab_result_bloom_r5_prebuildfix).
-    # Enable (e.g. 128_000_000) when the deployment inverts the receipt:
-    # network-constrained shuffle, memory-tight executors where the
-    # SMJ sort spills to slow disk (smj spilled 3.0 GB vs bloom 0.4 GB
-    # at the A/B shape — tmpfs hides that cost here), or hot-file row
-    # counts many times the batch key count.
-    merge_bloom_max_keys: int = 0
     # True → exact in-epoch heavy-hitter probe (one extra Spark job per
     # epoch, per-key counts in the manifest). Default: salt from the
     # previous manifest's bucket_rows (lagged_salt) — zero extra jobs.
@@ -189,10 +156,8 @@ class IngestConfig:
     # window runs over the write clustering (bucket[, salt]) so dedup and
     # sink share ONE exchange (operators/dedup.lww_dedup_clustered;
     # measured 1.3-1.4x per-epoch on the cross-JVM topology) — and COW
-    # epochs to "window". "window"/"broadcast"/"aggregate"/"clustered"
-    # force one strategy. COW+clustered is the FUSED epoch (dedup deferred
-    # into the range-clustering exchange): value-correct and plan-tested,
-    # but A/B-rejected as the default — see _pick_dedup_strategy.
+    # epochs to "window". "window"/"broadcast" force one strategy for
+    # either storage; "clustered" is MOR-only.
     dedup_strategy: str = "auto"
     extra: dict = field(default_factory=dict)
 
@@ -209,6 +174,14 @@ class CdcIngestJob:
     ):
         self.spark = spark
         self.cfg = config or IngestConfig()
+        strategies = {"auto", "window", "broadcast"}
+        if self.cfg.storage == "mor":
+            strategies.add("clustered")
+        if self.cfg.dedup_strategy not in strategies:
+            raise ValueError(
+                f"dedup_strategy={self.cfg.dedup_strategy!r} is not one of "
+                f"{sorted(strategies)} for storage={self.cfg.storage!r}"
+            )
         self.feed = ChangeFeed(spark, changes_path)
         cls = MergeOnReadTable if self.cfg.storage == "mor" else ParquetSnapshotTable
         self.table = cls(table_root)
@@ -231,7 +204,6 @@ class CdcIngestJob:
                 f"{self.cfg.storage!r}"
             )
         self.control = JobControl(table_root)
-        self._last_dedup_strategy = "window"  # set per-epoch in _dedup_strategy
 
     # ---------- resume ----------
 
@@ -245,16 +217,14 @@ class CdcIngestJob:
 
     # ---------- the epoch ----------
 
-    def prepare_batch(self, batch: DataFrame) -> DataFrame:
+    def prepare_batch(self, batch: DataFrame, strategy: str) -> DataFrame:
         """LWW dedup → normalize → bucket column.
 
         Dedup runs FIRST: the winner is chosen by lsn, never by text, so
         normalizing only the surviving rows is equivalent and sends ~30%
         fewer rows through the Arrow python workers (update/delete losers
         never cross the JVM↔Arrow boundary)."""
-        batch = lww_dedup(
-            batch, schemas.KEY_COLS, schemas.LSN_COL, self._dedup_strategy()
-        )
+        batch = lww_dedup(batch, schemas.KEY_COLS, schemas.LSN_COL, strategy)
         if self.cfg.normalize and "text" in batch.columns:
             norm = (
                 normalize_text("text")
@@ -266,7 +236,7 @@ class CdcIngestJob:
             BUCKET_COL, bucket_expr(self.table.n_buckets, self.table.meta["bucket_by"])
         )
 
-    def _dedup_strategy(self) -> str:
+    def _pick_dedup_strategy(self) -> str:
         """Pick the LWW dedup plan for this epoch (cfg.dedup_strategy).
 
         "auto" chooses "broadcast" — the full-payload batch is never
@@ -289,38 +259,20 @@ class CdcIngestJob:
         No lag signal (first epoch) → "window", the safe default. A
         mispredict costs one suboptimal epoch, never a wrong result — lsn
         uniqueness makes all strategies value-identical."""
-        strategy = self._pick_dedup_strategy()
-        self._last_dedup_strategy = strategy
-        return strategy
-
-    def _pick_dedup_strategy(self) -> str:
         if self.cfg.dedup_strategy != "auto":
             return self.cfg.dedup_strategy
-        cap = self.cfg.broadcast_max_rows
-        last_keys = int(
-            ((self.table.last_committed() or {}).get("metrics") or {}).get(
-                "keys"
-            )
-            or 0
-        )
+        last_keys = self._lagged_keys()
         if (
-            0 < last_keys * 2 <= cap
+            0 < last_keys * 2 <= self.cfg.broadcast_max_rows
             and last_keys * 4 <= self.cfg.epoch_events
         ):
             return "broadcast"
         # MOR's default: the single-exchange clustered window (the dedup
         # rides the write-clustering shuffle — measured 1.3-1.4x faster
         # per epoch on the cross-JVM topology and value-identical). COW
-        # keeps the key window. A fused COW variant exists (forced
-        # "clustered": the dedup deferred into the range-clustering
-        # exchange, _run_epoch_cow) and was A/B-REJECTED as the default:
-        # unlike MOR, the merge's SURVIVOR rows must ride through the
-        # deferred window's sort + lead() plus a non-elided second write
-        # sort, a tax that grows with the table, and the batch's losers
-        # cross the exchange and the Arrow normalizer. Measured
-        # interleaved: 0.85x at churn 1.44 and 0.91x at churn 1.06 on
-        # local[8]; 151k vs 204k sustained ev/s at 4 executors
-        # (CHANGES_r4.md #19).
+        # keeps the key window: its merge survivors would have to ride a
+        # deferred window too (the fused COW epoch, A/B-rejected at
+        # 0.85-0.91x, CHANGES_r4.md #19).
         return "clustered" if self.cfg.storage == "mor" else "window"
 
     def run_epoch(self, epoch: int, lsn_lo_excl: int, lsn_hi_incl: int) -> dict:
@@ -369,10 +321,10 @@ class CdcIngestJob:
         write clustering (bucket[, salt]) instead of over the key, so the
         sink's repartition and the dedup shuffle are the same exchange
         (operators/dedup.lww_dedup_clustered; plan pinned in
-        tests/test_plans.py). ``window``/``broadcast``/``aggregate`` keep
-        the classic dedup-then-repartition shape.
+        tests/test_plans.py). ``window``/``broadcast`` keep the classic
+        dedup-then-repartition shape.
         """
-        strategy = self._dedup_strategy()
+        strategy = self._pick_dedup_strategy()
         new_schema = schemas.evolve(self.table.current_schema(), raw.schema)
         # Type-widening evolution (int→long, float→double): delta files are
         # written at the table's (possibly widened) types so a chain never
@@ -472,7 +424,7 @@ class CdcIngestJob:
             "heavy_hitters": hh[:5],
             "salt": salt,
             "salt_source": salt_source,
-            "dedup": self._last_dedup_strategy,
+            "dedup": strategy,
             "duration_prepare_s": round(time.time() - t0, 3),
         }
         return {
@@ -535,201 +487,47 @@ class CdcIngestJob:
             "seconds": round(time.time() - planned["t0"], 3),
         }
 
+    def _lagged_keys(self) -> int:
+        """The last committed epoch's post-dedup key count (0 before any)."""
+        metrics = (self.table.last_committed() or {}).get("metrics") or {}
+        return int(metrics.get("keys") or 0)
+
     def _run_epoch_cow(
         self, epoch: int, lsn_lo: int, lsn_hi: int, raw: DataFrame, t0: float
     ) -> dict:
-        """Copy-on-write epoch: MERGE against only the files of the touched
-        buckets that can contain a batch key (per-file key-range stats from
-        the manifests — plan_cow_merge); provably-untouched files are
-        carried forward unrewritten.
-
-        Two Spark jobs per epoch: ONE bounded control pass + the merge
-        write. The control pass has two regimes, lag-selected: while the
-        epoch's key set is collectable (≤ ``file_prune_max_keys``), a
-        groupBy(bucket) collect returns per-bucket row/delete counts
-        (≤ n_buckets rows) plus each bucket's sorted distinct key set,
-        capped at ``file_prune_max_keys``+1 elements so an oversized bucket
-        degrades to whole-bucket rewrite instead of unbounded driver
-        transfer. Past the cap the key lists would be discarded anyway, so
-        the control pass degenerates to persist().count() with the
-        counts/touched-set riding the materialization as an ``Observation``
-        — no per-bucket aggregate, one driver round-trip of one scalar.
-        (Round 1 ran counts and prune keys as two separate jobs.)
-
-        Dedup placement (the fused epoch, strategy "clustered" — the
-        default): the LWW dedup is DEFERRED past the merge into the
-        range-clustering write exchange, the COW twin of the MOR
-        single-exchange epoch. Three facts make this value-identical to
-        dedup-first: (1) the anti-join that selects survivors keys on the
-        batch's KEY SET, which is identical with or without prior dedup
-        (duplicate build keys don't change anti-join semantics); (2)
-        survivors' keys are disjoint from batch keys, so the post-exchange
-        window — ``lww_dedup_clustered`` over ``(__range_tok, bucket,
-        key...)``, whose ClusteredDistribution the routing
-        HashPartitioning(__range_tok) satisfies — resolves each key from
-        batch rows alone (survivors ride through as 1-row groups with
-        null lsn); (3) the op filter moves after the window (a key whose
-        max-lsn event is a delete drops, exactly ``merge_apply``'s
-        post-dedup ``op != 'D'``). The batch payload crosses ONE exchange
-        per epoch instead of two (the window strategy pays
-        hash(key) for dedup, then the range exchange moves the winners
-        again); the price is ~events/keys more rows through that one
-        exchange (the losers) and through the Arrow normalizer — on this
-        feed shape (~1.44 events/key) the saved exchange+sort of the full
-        winner payload dominates. Forced "window"/"broadcast"/"aggregate"
-        keep the classic dedup-first plan."""
+        """Copy-on-write epoch: LWW dedup (prepare_batch), then the bounded
+        control pass (_cow_control), the merge against only the hot files
+        of the touched buckets (_cow_merge) and the range-clustered write
+        (_cow_write). Two Spark jobs: the control pass + the merge write."""
+        strategy = self._pick_dedup_strategy()
+        batch = self.prepare_batch(raw, strategy)
+        # Lagged size gate (as for the salt): when the previous epoch's key
+        # count says the key lists would be discarded, the control metrics
+        # ride the cache materialization as an Observation instead.
+        # Under-predict pays one epoch of capped transfer; _cow_control
+        # recovers an over-predict.
+        obs = None
+        if not (
+            self.cfg.file_granular_cow
+            and self._lagged_keys() <= self.cfg.file_prune_max_keys
+            and self.table.has_live_files()
+        ):
+            obs = Observation(f"epoch-{epoch}-control")
+            batch = batch.observe(
+                obs,
+                F.count(F.lit(1)).alias("keys"),
+                F.sum((F.col(schemas.OP_COL) == "D").cast("long")).alias(
+                    "deletes"
+                ),
+                F.collect_set(F.col(BUCKET_COL)).alias("buckets"),
+            )
+        batch = batch.persist()
         try:
-            key_col = self.table.meta["bucket_by"]
-            lim = self.cfg.file_prune_max_keys
-            strategy = self._dedup_strategy()
-            fused = strategy == "clustered"
-            if fused:
-                batch = raw
-                if self.cfg.normalize and "text" in batch.columns:
-                    norm = (
-                        normalize_text("text")
-                        if self.cfg.arrow_normalizer
-                        else normalize_text_sql("text")
-                    )
-                    batch = batch.withColumn("text", norm)
-                batch = batch.withColumn(
-                    BUCKET_COL, bucket_expr(self.table.n_buckets, key_col)
-                )
-            else:
-                batch = self.prepare_batch(raw)
-            # Lagged size gate (same trick as the salt): epoch sizes are
-            # stable under a fixed LSN window, so the previous epoch's key
-            # count predicts whether this batch's key set is collectable at
-            # all — when it isn't, skip the key-list aggregation entirely
-            # instead of computing per-bucket sets that would be discarded.
-            # Mispredict cost is bounded in both directions: under-predict
-            # pays one epoch of capped extra transfer (the slice bound
-            # below); over-predict is recovered in the observe path below
-            # (one aggregate over the cached batch), never a full rewrite.
-            last_keys = int(
-                ((self.table.last_committed() or {}).get("metrics") or {}).get(
-                    "keys"
-                )
-                or 0
-            )
-            collect_keys = (
-                self.cfg.file_granular_cow
-                and last_keys <= lim
-                and self.table.has_live_files()
-            )
-            keys_by_bucket: dict[str, list] | None = None
-            if collect_keys:
-                batch = batch.persist()
-                # Fused batches still carry duplicate key versions here, so
-                # "keys" must count DISTINCT keys (a key never spans
-                # buckets — bucket is a function of conv_id — so per-bucket
-                # distinct counts sum exactly); post-dedup batches are
-                # key-unique and count(1) is the same number cheaper.
-                keys_expr = (
-                    F.countDistinct(*[F.col(c) for c in schemas.KEY_COLS])
-                    if fused
-                    else F.count(F.lit(1))
-                )
-                brows = (
-                    batch.groupBy(BUCKET_COL)
-                    .agg(
-                        keys_expr.alias("keys"),
-                        F.sum(
-                            (F.col(schemas.OP_COL) == "D").cast("long")
-                        ).alias("deletes"),
-                        F.slice(
-                            F.sort_array(F.collect_set(F.col(key_col))),
-                            1,
-                            lim + 1,
-                        ).alias("key_list"),
-                    )
-                    .collect()
-                )
-                n_keys = sum(int(r["keys"]) for r in brows)
-                n_deletes = sum(int(r["deletes"] or 0) for r in brows)
-                touched = [int(r[BUCKET_COL]) for r in brows]
-                if n_keys <= lim:
-                    # A missing bucket entry means "unknown" → plan_cow_merge
-                    # rewrites that whole bucket; buckets whose key set
-                    # overflowed the slice cap are simply left out.
-                    keys_by_bucket = {
-                        str(int(r[BUCKET_COL])): list(r["key_list"])
-                        for r in brows
-                        if r["key_list"] is not None
-                        and len(r["key_list"]) <= lim
-                    }
-                control = "groupby-collect"
-            else:
-                # Large-epoch regime: the key lists would be discarded, so
-                # the per-bucket aggregate buys nothing — ride the control
-                # metrics on the cache-materialization pass itself as an
-                # Observation and reduce the driver round-trip to count()
-                # (profiled: the groupBy+collect leg of the control job cost
-                # ~14s per 8M-event epoch at 4 executors on top of the
-                # materialization it shares with this path).
-                obs = Observation(f"epoch-{epoch}-control")
-                # Observed metrics reject DISTINCT aggregates, so the fused
-                # (pre-dedup) batch estimates its key count with HLL
-                # (approx_count_distinct; exact 0 on an empty batch, and
-                # every consumer of this number is a gate or a metric —
-                # never a correctness input). Post-dedup batches count rows.
-                keys_obs = (
-                    F.approx_count_distinct(
-                        F.struct(*[F.col(c) for c in schemas.KEY_COLS])
-                    )
-                    if fused
-                    else F.count(F.lit(1))
-                )
-                batch = batch.observe(
-                    obs,
-                    keys_obs.alias("keys"),
-                    F.sum((F.col(schemas.OP_COL) == "D").cast("long")).alias(
-                        "deletes"
-                    ),
-                    F.collect_set(F.col(BUCKET_COL)).alias("buckets"),
-                ).persist()
-                batch.count()  # one pass: materialize cache + fire observe
-                om = obs.get
-                n_keys = int(om.get("keys") or 0)
-                n_deletes = int(om.get("deletes") or 0)
-                touched = sorted(int(b) for b in (om.get("buckets") or []))
-                control = "observe-count"
-                if (
-                    self.cfg.file_granular_cow
-                    and 0 < n_keys <= lim
-                    and self.table.has_live_files()
-                ):
-                    # Lag-mispredict recovery: the observation just proved
-                    # this batch's key set IS collectable even though the
-                    # previous manifest's count said otherwise (the canonical
-                    # case: the first incremental epoch after a large
-                    # backfill). Without this, keys_by_bucket=None makes
-                    # plan_cow_merge rewrite every touched bucket IN FULL —
-                    # a full-table rewrite at 10^10 scale for one stale
-                    # prediction. One aggregate over the already-cached
-                    # batch buys the file pruning back.
-                    brows = (
-                        batch.groupBy(BUCKET_COL)
-                        .agg(
-                            F.slice(
-                                F.sort_array(F.collect_set(F.col(key_col))),
-                                1,
-                                lim + 1,
-                            ).alias("key_list")
-                        )
-                        .collect()
-                    )
-                    keys_by_bucket = {
-                        str(int(r[BUCKET_COL])): list(r["key_list"])
-                        for r in brows
-                        if r["key_list"] is not None
-                        and len(r["key_list"]) <= lim
-                    }
-                    control = "observe-collect"
-            if n_keys == 0:
+            ctl = self._cow_control(batch, obs)
+            if ctl["keys"] == 0:
                 self.table.commit_epoch(
                     epoch,
-                    empty_df(self.spark, self._state_schema(batch)),
+                    empty_df(self.spark, self._state_schema()),
                     [],
                     lsn_lo,
                     lsn_hi,
@@ -737,157 +535,24 @@ class CdcIngestJob:
                     {"events_in": 0, "keys": 0},
                 )
                 return {"epoch": epoch, "keys": 0}
-
-            hot, kept = self.table.plan_cow_merge(
-                touched, keys_by_bucket, self.cfg.max_files_per_bucket
-            )
-            n_hot, n_kept = len(hot), sum(len(v) for v in kept.values())
-            # Schema evolution: union-by-name the batch's payload columns
-            # into the table schema (additive only).
-            new_schema = schemas.evolve(
-                self.table.current_schema(),
-                batch.drop(schemas.LSN_COL, schemas.OP_COL, BUCKET_COL).schema,
-            )
-            # Type-widening evolution: both merge sides are cast to the
-            # evolved schema EXPLICITLY (the rewritten files carry the wide
-            # type; untouched narrow files upcast at read under the wide
-            # table schema) — the union must never rely on implicit coercion.
-            snapshot = schemas.align_types(
-                self.table.read_files(self.spark, hot), new_schema
-            )
-            batch_al = schemas.align_types(batch.drop(BUCKET_COL), new_schema)
-            bc_keys = n_keys <= self.cfg.broadcast_max_rows
-            hash_pre = (
-                not bc_keys
-                and n_keys <= self.cfg.merge_hash_prefilter_max_keys
-            )
-            bloom_pre = (
-                not bc_keys
-                and not hash_pre
-                and 0 < n_keys <= self.cfg.merge_bloom_max_keys
-            )
-            merge_anti = (
-                "broadcast"
-                if bc_keys
-                else "hash"
-                if hash_pre
-                else "bloom"
-                if bloom_pre
-                else "smj"
-            )
-            if fused:
-                # merge_apply's survivor anti-join, on the deferred-dedup
-                # batch: the key side may carry duplicate keys (same key
-                # set, same anti-join result), op/lsn ride into the union
-                # for the post-exchange window, survivors get nulls for
-                # both (a null-lsn row is a 1-row window group — no batch
-                # row shares its key — so it always survives).
-                survivors = survivors_anti_join(
-                    snapshot,
-                    batch_al,
-                    schemas.KEY_COLS,
-                    broadcast_keys=bc_keys,
-                    hash_prefilter=hash_pre,
-                    bloom_prefilter=bloom_pre,
-                    expected_keys=n_keys,
-                )
-                merged = survivors.unionByName(
-                    batch_al, allowMissingColumns=True
-                )
-            else:
-                merged = merge_apply(
-                    snapshot,
-                    batch_al,
-                    key_cols=schemas.KEY_COLS,
-                    broadcast_batch=bc_keys,
-                    hash_prefilter=hash_pre,
-                    bloom_prefilter=bloom_pre,
-                    expected_keys=n_keys,
-                )
-            # Re-derive the bucket from conv_id (deterministic), then
-            # RANGE-cluster the write on (bucket, key): each output file
-            # covers a tight key interval, which is exactly what makes the
-            # next epoch's file pruning selective.
-            new_state = merged.withColumn(
-                BUCKET_COL,
-                bucket_expr(self.table.n_buckets, self.table.meta["bucket_by"]),
-            )
-            n_parts = self.cfg.write_partitions or int(
-                self.spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            # Range clustering WITHOUT repartitionByRange: its
-            # RangePartitioner samples the child plan, which here is the
-            # merge itself — the hot set would be scanned and merged TWICE
-            # per epoch (measured: the sampling job costs about as much as
-            # the exchange map stage), plus one extra driver-serial job.
-            # The epoch already knows the key distribution — hot files'
-            # footer stats + the control collect's batch key lists — so
-            # split points are computed driver-side and each row is routed
-            # to its range's exact reducer (operators/rangewrite.py).
-            # Deterministic output placement, merge evaluated exactly once.
-            key_col2 = self.table.meta["bucket_by"]
-            atoms = self.table.write_atoms(hot)
-            if keys_by_bucket is not None:
-                atoms += [
-                    (int(b), k, 1.0)
-                    for b, ks in keys_by_bucket.items()
-                    for k in ks
-                ]
-            cluster_cols = [BUCKET_COL]
-            if atoms:
-                bounds = plan_range_bounds(atoms, n_parts)
-                new_state = assign_range_partition(
-                    new_state, bounds, n_parts, BUCKET_COL, key_col2,
-                    keep_token=fused,
-                )
-                if fused:
-                    cluster_cols = ["__range_tok", BUCKET_COL]
-            else:
-                # No stats at all (first epoch with an over-cap key set):
-                # fall back to sampled range partitioning — correctness
-                # identical, just pays the sampling pass this once. Its
-                # RangePartitioning(bucket, key) satisfies the window's
-                # ClusteredDistribution(bucket, key...) directly (equal
-                # values land in one partition), so the fused window still
-                # rides this exchange with cluster_cols=[bucket].
-                new_state = new_state.repartitionByRange(
-                    n_parts, F.col(BUCKET_COL), F.col(key_col2)
-                )
-            if fused:
-                # The deferred LWW dedup: windows over (routing token,
-                # bucket, key...) — required distribution satisfied by the
-                # routing exchange, required sort = the write layout — then
-                # the op resolution that merge_apply applied pre-merge.
-                new_state = lww_dedup_clustered(
-                    new_state, schemas.KEY_COLS, schemas.LSN_COL, cluster_cols
-                )
-                new_state = new_state.filter(
-                    F.col(schemas.OP_COL).isNull()
-                    | (F.col(schemas.OP_COL) != "D")
-                ).drop(schemas.OP_COL, schemas.LSN_COL, "__range_tok")
-            new_state = new_state.sortWithinPartitions(BUCKET_COL, key_col2)
+            merged, hot, kept, new_schema, merge_anti = self._cow_merge(batch, ctl)
+            new_state = self._cow_write(merged, hot, ctl["keys_by_bucket"])
             self._last_epoch_plan = new_state  # plan-shape introspection
-
             metrics = {
                 "storage": "cow",
-                # Fused epochs count keys pre-dedup: exact countDistinct in
-                # the collect regime, HLL estimate in the observe regime
-                # (flagged); deletes_in_batch counts delete EVENTS there
-                # (winner-level deletes are only known post-window).
-                "keys": n_keys,
-                "keys_estimated": bool(fused and control == "observe-count"),
-                "deletes_in_batch": n_deletes,
-                "files_rewritten": n_hot,
-                "files_kept": n_kept,
-                "control": control,
+                "keys": ctl["keys"],
+                "deletes_in_batch": ctl["deletes"],
+                "files_rewritten": len(hot),
+                "files_kept": sum(len(v) for v in kept.values()),
+                "control": ctl["control"],
                 "merge_anti": merge_anti,
-                "dedup": self._last_dedup_strategy,
+                "dedup": strategy,
                 "duration_prepare_s": round(time.time() - t0, 3),
             }
             committed = self.table.commit_epoch(
                 epoch,
                 new_state,
-                touched,
+                ctl["touched"],
                 lsn_lo,
                 lsn_hi,
                 new_schema,
@@ -896,20 +561,173 @@ class CdcIngestJob:
             )
             return {
                 "epoch": epoch,
-                "keys": n_keys,
-                "touched_buckets": len(touched),
+                "keys": ctl["keys"],
+                "touched_buckets": len(ctl["touched"]),
                 "committed": committed,
                 "seconds": round(time.time() - t0, 3),
             }
         finally:
             batch.unpersist()
-            # The epoch's write is committed (or abandoned) — drop the
-            # hash-prefilter broadcast's executor copies now instead of
-            # waiting for GC-driven ContextCleaner (ADVICE r4: up to
-            # ~128 MB/epoch would otherwise linger nondeterministically).
+            # Drop the hash prefilter's executor copies now, not at GC time
+            # (up to ~128 MB/epoch would linger nondeterministically).
             release_prefilter_broadcasts()
 
-    def _state_schema(self, batch: DataFrame):
+    def _cow_control(self, batch: DataFrame, obs: Observation | None) -> dict:
+        """The epoch's one bounded control pass over the persisted batch:
+        key/delete counts, touched buckets and — while collectable — the
+        per-bucket sorted key lists that drive file pruning.
+
+        - ``groupby-collect`` (``obs`` is None): a groupBy(bucket) collect
+          of ≤ n_buckets rows, each key list capped at
+          ``file_prune_max_keys``+1 elements so an oversized bucket
+          degrades to whole-bucket rewrite instead of unbounded driver
+          transfer.
+        - ``observe-count``: the counts ride the cache materialization as
+          the Observation ``obs`` — one count() scalar round trip, no
+          per-bucket aggregate (profiled: the groupBy+collect leg cost
+          ~14s per 8M-event epoch at 4 executors).
+        - ``observe-collect``: the observation proved the key set
+          collectable although the lagged count said otherwise (the first
+          incremental epoch after a large backfill). Without the key lists
+          plan_cow_merge would rewrite every touched bucket in full, so
+          one aggregate over the cached batch buys the pruning back."""
+        lim = self.cfg.file_prune_max_keys
+        key_list = F.slice(
+            F.sort_array(F.collect_set(F.col(self.table.meta["bucket_by"]))),
+            1,
+            lim + 1,
+        ).alias("key_list")
+        if obs is None:
+            rows = (
+                batch.groupBy(BUCKET_COL)
+                .agg(
+                    F.count(F.lit(1)).alias("keys"),
+                    F.sum((F.col(schemas.OP_COL) == "D").cast("long")).alias(
+                        "deletes"
+                    ),
+                    key_list,
+                )
+                .collect()
+            )
+            ctl = {
+                "keys": sum(int(r["keys"]) for r in rows),
+                "deletes": sum(int(r["deletes"] or 0) for r in rows),
+                "touched": [int(r[BUCKET_COL]) for r in rows],
+                "control": "groupby-collect",
+            }
+        else:
+            batch.count()  # one pass: materialize cache + fire observe
+            om = obs.get
+            ctl = {
+                "keys": int(om.get("keys") or 0),
+                "deletes": int(om.get("deletes") or 0),
+                "touched": sorted(int(b) for b in (om.get("buckets") or [])),
+                "control": "observe-count",
+            }
+            rows = None
+            if (
+                self.cfg.file_granular_cow
+                and 0 < ctl["keys"] <= lim
+                and self.table.has_live_files()
+            ):
+                rows = batch.groupBy(BUCKET_COL).agg(key_list).collect()
+                ctl["control"] = "observe-collect"
+        # A missing bucket entry means "unknown" → plan_cow_merge rewrites
+        # that whole bucket; buckets whose key set overflowed the slice cap
+        # are simply left out.
+        ctl["keys_by_bucket"] = (
+            {
+                str(int(r[BUCKET_COL])): list(r["key_list"])
+                for r in rows
+                if r["key_list"] is not None and len(r["key_list"]) <= lim
+            }
+            if rows is not None and ctl["keys"] <= lim
+            else None
+        )
+        return ctl
+
+    def _cow_merge(self, batch: DataFrame, ctl: dict) -> tuple:
+        """The merge plan: hot files, schema evolution and the survivor
+        rung, then merge_apply. Returns (merged, hot, kept, new_schema,
+        merge_anti)."""
+        hot, kept = self.table.plan_cow_merge(
+            ctl["touched"], ctl["keys_by_bucket"], self.cfg.max_files_per_bucket
+        )
+        # Schema evolution: union-by-name the batch's payload columns
+        # into the table schema (additive only).
+        new_schema = schemas.evolve(
+            self.table.current_schema(),
+            batch.drop(schemas.LSN_COL, schemas.OP_COL, BUCKET_COL).schema,
+        )
+        # Type-widening evolution: both merge sides are cast to the
+        # evolved schema EXPLICITLY (the rewritten files carry the wide
+        # type; untouched narrow files upcast at read under the wide
+        # table schema) — the union must never rely on implicit coercion.
+        snapshot = schemas.align_types(
+            self.table.read_files(self.spark, hot), new_schema
+        )
+        batch_al = schemas.align_types(batch.drop(BUCKET_COL), new_schema)
+        # The survivor ladder (operators/merge.survivors_anti_join), by the
+        # epoch's exact key count: broadcast → hash prefilter → SMJ.
+        if ctl["keys"] <= self.cfg.broadcast_max_rows:
+            merge_anti = "broadcast"
+        elif ctl["keys"] <= self.cfg.merge_hash_prefilter_max_keys:
+            merge_anti = "hash"
+        else:
+            merge_anti = "smj"
+        merged = merge_apply(
+            snapshot,
+            batch_al,
+            key_cols=schemas.KEY_COLS,
+            broadcast_batch=merge_anti == "broadcast",
+            hash_prefilter=merge_anti == "hash",
+        )
+        return merged, hot, kept, new_schema, merge_anti
+
+    def _cow_write(
+        self, merged: DataFrame, hot: list, keys_by_bucket: dict | None
+    ) -> DataFrame:
+        """The range-clustered write plan. The bucket is re-derived from
+        conv_id (deterministic), then the write is RANGE-clustered on
+        (bucket, key): each output file covers a tight key interval, which
+        is exactly what makes the next epoch's file pruning selective.
+
+        Range clustering WITHOUT repartitionByRange: its RangePartitioner
+        samples the child plan, which here is the merge itself — the hot
+        set would be scanned and merged TWICE per epoch (measured: the
+        sampling job costs about as much as the exchange map stage), plus
+        one extra driver-serial job. The epoch already knows the key
+        distribution — hot files' footer stats + the control pass's batch
+        key lists — so split points are computed driver-side and each row
+        is routed to its range's exact reducer (operators/rangewrite.py).
+        Deterministic output placement, merge evaluated exactly once."""
+        key_col = self.table.meta["bucket_by"]
+        new_state = merged.withColumn(
+            BUCKET_COL, bucket_expr(self.table.n_buckets, key_col)
+        )
+        n_parts = self.cfg.write_partitions or int(
+            self.spark.conf.get("spark.sql.shuffle.partitions")
+        )
+        atoms = self.table.write_atoms(hot)
+        if keys_by_bucket is not None:
+            atoms += [
+                (int(b), k, 1.0) for b, ks in keys_by_bucket.items() for k in ks
+            ]
+        if atoms:
+            bounds = plan_range_bounds(atoms, n_parts)
+            new_state = assign_range_partition(
+                new_state, bounds, n_parts, BUCKET_COL, key_col
+            )
+        else:
+            # No stats at all (first epoch with an over-cap key set): fall
+            # back to sampled range partitioning — correctness identical,
+            # just pays the sampling pass this once.
+            new_state = new_state.repartitionByRange(
+                n_parts, F.col(BUCKET_COL), F.col(key_col)
+            )
+        return new_state.sortWithinPartitions(BUCKET_COL, key_col)
+
+    def _state_schema(self):
         from pyspark.sql import types as T
 
         s = self.table.current_schema()
