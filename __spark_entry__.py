@@ -296,28 +296,23 @@ def q_exact_dedup_documents(spark, sf):
     )
 
 
-def q_concat_trim_documents(spark, sf):
+def q_string_projections_documents(spark, sf):
+    """One-expression string projections over documents, one column each:
+    content concat + trim (P2/P3), word-boundary truncation (P7), job-name
+    sanitizing (P8), null-guarded optional field (P9: when/otherwise +
+    coalesce, reference document.py:41-46) and stopword language id."""
     docs = _t(spark, sf, "documents")
+    guarded = F.when(F.col("n_chars") > 300, F.col("lang")).otherwise(F.lit(None))
     return docs.select(
         "doc_id",
         tx.content_concat(F.col("lang"), F.trim(F.col("text"))).alias("content"),
-    )
-
-
-def q_truncate_documents(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.select(
-        "doc_id", tx.truncate_on_word("text", 60).alias("truncated")
-    )
-
-
-def q_sanitize_documents(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.select(
-        "doc_id",
+        tx.truncate_on_word("text", 60).alias("truncated"),
         tx.sanitize_job_name(
             F.concat_ws("/", F.col("source"), F.col("lang"), F.col("doc_id"))
         ).alias("job_name"),
+        guarded.alias("lang_if_long"),
+        F.coalesce(guarded, F.lit("unknown")).alias("lang_or_unknown"),
+        tx.lang_id("text").alias("lang_guess"),
     )
 
 
@@ -415,23 +410,6 @@ def q_suffix_filter_documents(spark, sf):
     # sources are src0..src19 → suffix "1" matches src1/src11 at every sf
     docs = _t(spark, sf, "documents")
     return docs.filter(F.col("source").endswith("1")).select("doc_id", "source")
-
-
-def q_null_guard_documents(spark, sf):
-    """P9: null-guarded projection (when/otherwise + coalesce — reference
-    document.py:41-46 optional-field extraction)."""
-    docs = _t(spark, sf, "documents")
-    guarded = F.when(F.col("n_chars") > 300, F.col("lang")).otherwise(F.lit(None))
-    return docs.select(
-        "doc_id",
-        guarded.alias("lang_if_long"),
-        F.coalesce(guarded, F.lit("unknown")).alias("lang_or_unknown"),
-    )
-
-
-def q_lang_id_documents(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.select("doc_id", tx.lang_id("text").alias("lang_guess"))
 
 
 def q_fingerprint_documents(spark, sf):
@@ -1010,7 +988,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk_documents": q_bm25_topk_documents,
         "sessionize_events": q_sessionize_events,
         "suffix_filter_documents": q_suffix_filter_documents,
-        "lang_id_documents": q_lang_id_documents,
+        "string_projections_documents": q_string_projections_documents,
         "fingerprint_documents": q_fingerprint_documents,
         "quality_score_documents": q_quality_score_documents,
         "simhash_documents": q_simhash_documents,
@@ -1033,18 +1011,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivm_agg_events": q_ivm_agg_events,
         "rebucket_events": q_rebucket_events,
         "widen_tokens_events": q_widen_tokens_events,
-        # --- tail: the driver's correctness window covers the FIRST 50
-        # entries (CORRECTNESS_r04 reported exactly the first 50 of 53,
-        # leaving IVM / rebucket / type-widening driver-unverified —
-        # round-4 verdict item #1). These four are one-expression string
-        # wrappers (P2/P3, P7, P8, P9) fully covered by the driver-faithful
-        # local parity harness (tests/test_entry_parity.py runs ALL rows
-        # vs DuckDB with exact stringification), so they take the tail
-        # positions and the machinery-heavy rows stay inside the window.
-        "concat_trim_documents": q_concat_trim_documents,
-        "truncate_documents": q_truncate_documents,
-        "sanitize_documents": q_sanitize_documents,
-        "null_guard_documents": q_null_guard_documents,
     }
 
 
@@ -1159,25 +1125,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             GROUP BY trim(regexp_replace(lower(text), '\s+', ' ', 'g'))
         """,
-        "concat_trim_documents": """
-            SELECT doc_id, lang || chr(10) || chr(10) || trim(text) AS content
-            FROM documents
-        """,
-        "truncate_documents": r"""
-            SELECT doc_id,
-                   CASE WHEN length(text) <= 60 THEN text
-                        WHEN contains(substring(text, 1, 60), ' ')
-                        THEN regexp_extract(substring(text, 1, 60), '^(.*)\s\S*$', 1)
-                        ELSE substring(text, 1, 60) END AS truncated
-            FROM documents
-        """,
-        "sanitize_documents": r"""
-            SELECT doc_id,
-                   substring(regexp_replace(
-                       source || '/' || lang || '/' || doc_id,
-                       '[^a-zA-Z0-9\-_]+', '_', 'g'), 1, 128) AS job_name
-            FROM documents
-        """,
         "json_props_events": """
             SELECT event_id, CAST(props->>'k' AS INT) AS k FROM events
         """,
@@ -1259,16 +1206,9 @@ def oracle_sql() -> dict[str, str]:
         "suffix_filter_documents": """
             SELECT doc_id, source FROM documents WHERE source LIKE '%1'
         """,
-        "null_guard_documents": """
-            SELECT doc_id,
-                   CASE WHEN n_chars > 300 THEN lang ELSE NULL END AS lang_if_long,
-                   coalesce(CASE WHEN n_chars > 300 THEN lang ELSE NULL END,
-                            'unknown') AS lang_or_unknown
-            FROM documents
-        """,
-        "lang_id_documents": r"""
+        "string_projections_documents": r"""
             WITH c AS (
-                SELECT doc_id,
+                SELECT *,
                        len(list_filter(string_split_regex(lower(text), '\s+'),
                            x -> list_contains(['the','and','of','is','to'], x))) AS c_en,
                        len(list_filter(string_split_regex(lower(text), '\s+'),
@@ -1278,6 +1218,17 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents
             )
             SELECT doc_id,
+                   lang || chr(10) || chr(10) || trim(text) AS content,
+                   CASE WHEN length(text) <= 60 THEN text
+                        WHEN contains(substring(text, 1, 60), ' ')
+                        THEN regexp_extract(substring(text, 1, 60), '^(.*)\s\S*$', 1)
+                        ELSE substring(text, 1, 60) END AS truncated,
+                   substring(regexp_replace(
+                       source || '/' || lang || '/' || doc_id,
+                       '[^a-zA-Z0-9\-_]+', '_', 'g'), 1, 128) AS job_name,
+                   CASE WHEN n_chars > 300 THEN lang ELSE NULL END AS lang_if_long,
+                   coalesce(CASE WHEN n_chars > 300 THEN lang ELSE NULL END,
+                            'unknown') AS lang_or_unknown,
                    CASE WHEN greatest(c_en, c_de, c_fr) <= 0 THEN 'unknown'
                         WHEN c_en = greatest(c_en, c_de, c_fr) THEN 'en'
                         WHEN c_de = greatest(c_en, c_de, c_fr) THEN 'de'

@@ -112,23 +112,13 @@ def run_cdc_replay(spark, n_events_target: int, epochs: int = 4, modes=("cow", "
         # burstable host, running them between the timed sections drains
         # the CPU budget that the second mode's timing then pays for.
         timed: dict[str, tuple] = {}
-        # BENCH_CDC_INGEST_CONF: JSON dict of IngestConfig overrides —
-        # lets config A/Bs (survivor regime caps, pipeline on/off) reuse
-        # the whole pinned-subprocess leg machinery (bench/ab.py,
-        # bench/ingest_conf_ab.py) without code forks.
-        ing_over = json.loads(os.environ.get("BENCH_CDC_INGEST_CONF", "{}"))
         for mode in modes:
-            # Overrides win over the bench defaults (passing both to the
-            # constructor would TypeError on n_buckets/epoch_events/...);
-            # storage stays loop-owned — the cow/mor split IS the bench.
-            cfg_kw = dict(
+            cfg = IngestConfig(
                 n_buckets=32,
                 epoch_events=max(1, n // epochs + 1),
                 write_partitions=shuffle_p,
+                storage=mode,
             )
-            cfg_kw.update(ing_over)
-            cfg_kw["storage"] = mode
-            cfg = IngestConfig(**cfg_kw)
             table_root = os.path.join(work, f"table_{mode}")
             t0 = time.time()
             job = CdcIngestJob(spark, feed_dir, table_root, cfg)
@@ -314,11 +304,10 @@ def main() -> None:
     if cdc is None:
         out["gen_seconds"] = res["gen_seconds"]
         out["oracle_seconds"] = res["oracle_seconds"]
-    # Cross-round A/B (bench/ab.py — interleaved same-host comparison of
-    # this code vs the previous round's, the only decision-grade signal on
-    # this burst-throttled host). Embedded from its result file so the
-    # driver-recorded BENCH_r{N}.json carries it next to the absolute
-    # numbers; "head" identifies which working tree the A/B measured.
+    # Cross-round A/B receipt (bench/ab_result.json, written by
+    # `bench/ab.py --out bench/ab_result.json`; other A/Bs land in
+    # BENCH/*.json). Embedded so the driver-recorded BENCH_r{N}.json
+    # carries it next to the absolute numbers.
     ab_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "bench", "ab_result.json")
     if os.path.exists(ab_path):
@@ -359,7 +348,7 @@ def main() -> None:
             k: d[k]
             for k in (
                 # "events"/"epochs"/"epoch_seconds" stay in the compact
-                # record because the scaling/ab/hostbudget harnesses read
+                # record because the scaling harness reads
                 # whichever JSON line survives — dropping them here cost a
                 # full scaling run a KeyError at its final report once.
                 "events",

@@ -1,194 +1,199 @@
-"""Interleaved same-host A/B of two code versions on one shared feed.
+"""A/B of two commits on the benchmark: paired runs, quartiles, verdicts.
 
-Absolute bench numbers on this host are NOT decision-grade: the VM is
-burst-credit throttled and identical runs vary 1.5-4x minutes apart
-(BENCH/BASELINE.md). The round-2 judge adjudicated an apparent 3-5x
-cross-round "regression" by hand with an interleaved A/B — r2 code was
-actually ~35% faster — and asked for the protocol to be scripted
-(round-2 verdict, next-round item 5). This is that script.
+Usage (from the root of a checkout; for an uncommitted tree pass
+``--change $(git stash create)``):
 
-Protocol (everything the hand-run did):
-  - ONE pre-generated seeded feed (datagen is hash-pinned across rounds,
-    so either version generating it is byte-equivalent);
-  - legs interleaved in mirrored order (A B B A ...) so slow host drift
-    cancels instead of biasing one side;
-  - each leg is a FRESH subprocess `python bench.py` (fresh JVM) with
-    BENCH_REPLAY_ONLY=1 BENCH_SKIP_EQUALITY=1, pinned via
-    sched_setaffinity to --cores CPUs (a local[N] JVM otherwise spills
-    onto extra host cores);
-  - warmup equalized: both versions' bench.py runs its own warmup pass
-    before the timed epochs;
-  - a Spark-free pinned ALU probe brackets the legs for host context
-    (it reads healthy even when Spark walls are inflated — see
-    BENCH/BASELINE.md — so it contextualizes, never corrects).
+    python3 bench/ab.py --parent REF --change REF --workloads cow_merge,stream_drain \\
+        --seeds 41-50 [--claim WORKLOAD/METRIC] --out BENCH/NAME.json
 
-Output: one JSON line on stdout AND bench/ab_result.json; bench.py embeds
-that file under an "ab" key so the driver-recorded BENCH_r{N}.json carries
-the decision-grade comparison next to the (host-weather) absolute numbers.
+Each ref is extracted with ``git archive`` into ``.bench_build/ab/<side>``.
+Every run is BENCHMARK.json's ``command`` with its ``run_seconds`` and
+``--trace 0``, one at a time; per seed both sides run every workload, and
+the side that runs first alternates by seed so host drift favours neither.
+``--out`` is rewritten after every run, so a cut A/B keeps its runs.
 
-Usage:
-  python bench/ab.py [--ref <git-ref>] [--events 2000000] [--pairs 2]
-                     [--cores 8] [--modes cow,mor]
---ref defaults to the newest commit whose message starts with "round"
-(the driver's round-boundary commit convention).
+Per workload and end-to-end metric the summary gives each side's median,
+Q1 and Q3 (``perfbench.stats``), pair wins (a seed is a pair; ties count
+for neither) and a verdict, the first of these that holds:
+
+- ``regression``: the change's median is worse by more than the ``bound``;
+- ``unresolved``: the parent's ``spread`` exceeds the bound and not every
+  change run beats every parent run;
+- ``gain`` (``--claim`` only): the change wins >= 9/10 of the pairs, its
+  median is better by more than the parent's Q3 - Q1, and it fails no
+  more operations than the parent;
+- ``ok``.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
 import shutil
-import statistics
 import subprocess
 import sys
-import tempfile
+import tarfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "bench"))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if ROOT not in sys.path:
+    sys.path.insert(0, ROOT)
 
-from scaling import hw_probe, pregenerate_feed  # noqa: E402
+from perfbench.stats import median, quantile, spread  # noqa: E402
 
-
-def _git(*args: str, cwd: str = REPO) -> str:
-    return subprocess.run(
-        ["git", *args], cwd=cwd, capture_output=True, text=True, check=True
-    ).stdout.strip()
+SIDES = ("parent", "change")
 
 
-def default_ref() -> str:
-    """Newest commit whose SUBJECT line starts with 'round ' — the driver
-    commits one per round boundary, so this is the previous round's code.
-    (git --grep matches body lines too, which misfires on commits that
-    merely mention a round — filter subjects explicitly.)"""
-    for line in _git("log", "--format=%H %s").splitlines():
-        sha, _, subject = line.partition(" ")
-        if subject.startswith("round "):
-            return sha
-    return _git("rev-parse", "HEAD~1")
+def _seeds(text: str) -> list[int]:
+    lo, _, hi = text.partition("-")
+    return list(range(int(lo), int(hi or lo) + 1))
 
 
-def run_leg(repo_dir: str, cores: int, events: int, feed_dir: str,
-            modes: str, epochs: int) -> dict:
-    env = dict(os.environ)
-    env.update(
-        {
-            "SPARK_GRAFT_CPUS": str(cores),
-            "BENCH_CDC_EVENTS": str(events),
-            "BENCH_CDC_EPOCHS": str(epochs),
-            "BENCH_CDC_MODES": modes,
-            "BENCH_REPLAY_ONLY": "1",
-            "BENCH_SKIP_EQUALITY": "1",
-            "BENCH_FEED_DIR": feed_dir,
-            "SPARK_DRIVER_MEMORY": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
-        }
-    )
-    cpuset = set(range(cores))
+def _better(a: float, b: float, better: str) -> bool:
+    return a < b if better == "lower" else a > b
 
-    def _pin():
-        os.sched_setaffinity(0, cpuset)
 
+def _stats(values: list[float]) -> dict:
+    return {"n": len(values), "median": median(values), "q1": quantile(values, 0.25), "q3": quantile(values, 0.75)}
+
+
+def compare(parent: dict[int, float], change: dict[int, float], better: str, bound: float,
+            claimed: bool = False, failed: tuple[int, int] = (0, 0)) -> dict:
+    """Compare one metric's values by seed; ``failed`` = (parent, change) failed operations and runs."""
+    p, c = _stats(list(parent.values())), _stats(list(change.values()))
+    parent_spread = spread(list(parent.values()))
+    pairs = sorted(parent.keys() & change.keys())
+    wins = {"parent": sum(_better(parent[s], change[s], better) for s in pairs),
+            "change": sum(_better(change[s], parent[s], better) for s in pairs), "pairs": len(pairs)}
+    gain = p["median"] - c["median"] if better == "lower" else c["median"] - p["median"]
+    worse = -gain / abs(p["median"]) if p["median"] else 0.0
+    every = all(_better(cv, pv, better) for cv in change.values() for pv in parent.values())
+    if worse > bound:
+        verdict = "regression"
+    elif parent_spread > bound and not every:
+        verdict = "unresolved"
+    elif (claimed and pairs and 10 * wins["change"] >= 9 * len(pairs)
+          and gain > p["q3"] - p["q1"] and failed[1] <= failed[0]):
+        verdict = "gain"
+    else:
+        verdict = "ok"
+    ratio = c["median"] / p["median"] if p["median"] else None
+    return {"parent": p, "change": c, "wins": wins, "change_over_parent": ratio,
+            "parent_spread": parent_spread, "bound": bound, "verdict": verdict}
+
+
+def summarize(runs: list[dict], end_to_end: list[dict], claim: str | None = None) -> dict:
+    """Per workload: run counts per side and a ``compare`` per end-to-end metric."""
+    out: dict[str, dict] = {}
+    for w in dict.fromkeys(r["workload"] for r in runs):
+        mine = [r for r in runs if r["workload"] == w]
+        counts = {}
+        for side in SIDES:
+            rs = [r for r in mine if r["side"] == side]
+            counts[side] = {"runs": len(rs), "correct": sum(r["correct"] for r in rs),
+                            "attempted": sum(r["attempted"] for r in rs), "failed": sum(r["failed"] for r in rs),
+                            "exit_nonzero": sum(r["exit"] != 0 for r in rs)}
+        metrics = {}
+        for m in end_to_end:
+            vals = {side: {r["seed"]: r["metrics"][m["name"]] for r in mine
+                           if r["side"] == side and m["name"] in r["metrics"]} for side in SIDES}
+            if vals["parent"] and vals["change"]:
+                metrics[m["name"]] = compare(
+                    vals["parent"], vals["change"], m["better"], m["bound"],
+                    claimed=claim == f"{w}/{m['name']}",
+                    failed=tuple(counts[side]["failed"] + counts[side]["exit_nonzero"] for side in SIDES),
+                )
+        out[w] = {"counts": counts, "metrics": metrics}
+    return out
+
+
+def _extract(sha: str, dest: str) -> None:
+    shutil.rmtree(dest, ignore_errors=True)
+    tar = subprocess.run(["git", "archive", sha], cwd=ROOT, capture_output=True, check=True).stdout
+    with tarfile.open(fileobj=io.BytesIO(tar)) as t:
+        t.extractall(dest)
+
+
+def _run(bench: dict, cwd: str, workload: str, seed: int) -> dict:
+    cmd = bench["command"] + ["--workload", workload, "--seed", str(seed),
+                              "--seconds", str(bench["run_seconds"]), "--trace", "0"]
     t0 = time.time()
-    out = subprocess.run(
-        [sys.executable, os.path.join(repo_dir, "bench.py")],
-        cwd=repo_dir, env=env, capture_output=True, text=True, check=True,
-        preexec_fn=_pin,
-    )
-    # longest JSON line = the full record (head's bench.py also prints a
-    # compact trailing summary; ref legs may print only the full record)
-    line = max(
-        (ln for ln in out.stdout.splitlines() if ln.startswith("{")), key=len
-    )
-    res = json.loads(line)
-    leg = {"wall_s": round(time.time() - t0, 1)}
-    for mode_key, out_key in (("cdc", "cow"), ("cdc_mor", "mor")):
-        m = res.get(mode_key)
-        if m:
-            leg[out_key] = {
-                "sustained_events_per_sec": m.get("sustained_events_per_sec"),
-                "events_per_sec": m.get("events_per_sec"),
-                "seconds": m.get("seconds"),
-            }
-    return leg
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--ref", default=None, help="baseline git ref (default: last 'round' commit)")
-    ap.add_argument("--events", type=int, default=2_000_000)
-    ap.add_argument("--pairs", type=int, default=2, help="number of mirrored A/B pairs")
-    ap.add_argument("--cores", type=int, default=8)
-    ap.add_argument("--modes", default="cow,mor")
-    ap.add_argument("--epochs", type=int, default=4)
-    ap.add_argument(
-        "--out",
-        default=os.path.join(REPO, "bench", "ab_result.json"),
-        help="result path (default bench/ab_result.json — the file bench.py "
-        "embeds; point experiment A/Bs elsewhere so the headline record "
-        "is not clobbered)",
-    )
-    args = ap.parse_args()
-
-    ref = args.ref or default_ref()
-    ref_sha = _git("rev-parse", ref)
-    head_sha = _git("rev-parse", "HEAD")
-    if ref_sha == head_sha:
-        print(json.dumps({"error": "ref == HEAD; nothing to compare"}))
-        return
-
-    feed_dir = pregenerate_feed(args.events)
-    wt = tempfile.mkdtemp(prefix="ab_ref_")
-    shutil.rmtree(wt)  # git worktree add wants a nonexistent path
-    _git("worktree", "add", "--detach", wt, ref_sha)
     try:
-        probe_before = hw_probe([args.cores], dur=10.0)[args.cores]
-        # mirrored interleave: ref, head, head, ref, ref, head, ...
-        order: list[tuple[str, str]] = []
-        for i in range(args.pairs):
-            pair = [("ref", wt), ("head", REPO)]
-            order += pair if i % 2 == 0 else pair[::-1]
-        legs = []
-        for name, repo_dir in order:
-            leg = run_leg(repo_dir, args.cores, args.events, feed_dir,
-                          args.modes, args.epochs)
-            leg["code"] = name
-            legs.append(leg)
-            print(json.dumps({"leg": leg}), file=sys.stderr)
-        probe_after = hw_probe([args.cores], dur=10.0)[args.cores]
+        proc = subprocess.run(cmd, cwd=cwd, capture_output=True, text=True, timeout=900)
+    except subprocess.TimeoutExpired as e:
+        proc = subprocess.CompletedProcess(cmd, -9, "", f"timed out after {e.timeout} s")
+    run = {"wall_s": round(time.time() - t0, 1), "exit": proc.returncode,
+           "correct": False, "attempted": 0, "failed": 0, "metrics": {}}
+    lines = [json.loads(ln) for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if proc.returncode != 0 or not lines:
+        run["stderr_tail"] = proc.stderr[-2000:]
+        return run
+    res = lines[-1]
+    run.update(correct=res["correct"], attempted=res["attempted"], failed=res["failed"],
+               metrics={k: v["value"] for k, v in res["metrics"].items()})
+    run["detail"] = next((ln["detail"] for ln in lines if "detail" in ln), None)
+    return run
 
-        summary: dict = {}
-        for mode in args.modes.split(","):
-            by = {"ref": [], "head": []}
-            for leg in legs:
-                v = (leg.get(mode) or {}).get("sustained_events_per_sec")
-                if v:
-                    by[leg["code"]].append(v)
-            if by["ref"] and by["head"]:
-                summary[mode] = {
-                    "ref_sustained_eps": by["ref"],
-                    "head_sustained_eps": by["head"],
-                    "head_over_ref_median": round(
-                        statistics.median(by["head"]) / statistics.median(by["ref"]), 3
-                    ),
-                }
-        result = {
-            "protocol": "interleaved mirrored A/B, fresh pinned JVM per leg, shared seeded feed, warmup equalized",
-            "ref": ref_sha, "head": head_sha,
-            "events": args.events, "cores": args.cores,
-            "epochs": args.epochs, "pairs": args.pairs,
-            "alu_probe_mops": {"before": probe_before, "after": probe_after},
-            "legs": legs,
-            "summary": summary,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        }
-        with open(args.out, "w") as f:
-            json.dump(result, f, indent=1)
-        print(json.dumps(result))
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", required=True)
+    ap.add_argument("--change", required=True)
+    ap.add_argument("--workloads", required=True)
+    ap.add_argument("--seeds", required=True)
+    ap.add_argument("--claim", default=None)
+    ap.add_argument("--out", required=True)
+    args = ap.parse_args(argv)
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    workloads = args.workloads.split(",")
+    unknown = set(workloads) - {w["name"] for w in bench["workloads"]}
+    if unknown:
+        ap.error(f"workloads not in BENCHMARK.json: {sorted(unknown)}")
+    claim_w, _, claim_m = (args.claim or "").partition("/")
+    if args.claim and (claim_w not in workloads or claim_m not in {m["name"] for m in bench["end_to_end"]}):
+        ap.error(f"--claim is not WORKLOAD/METRIC of a run workload and an end-to-end metric: {args.claim}")
+    git = ["git", "rev-parse", "--verify"]
+    shas = {side: subprocess.run(git + [getattr(args, side) + "^{commit}"], cwd=ROOT, capture_output=True,
+                                 text=True, check=True).stdout.strip() for side in SIDES}
+    dirs = {side: os.path.join(ROOT, ".bench_build", "ab", side) for side in SIDES}
+    for side in SIDES:
+        _extract(shas[side], dirs[side])
+
+    record = {
+        "protocol": f"git archive per ref; {' '.join(bench['command'])} --seconds {bench['run_seconds']} "
+        "--trace 0; one run at a time; first side alternates by seed",
+        "parent": {"ref": args.parent, "sha": shas["parent"]},
+        "change": {"ref": args.change, "sha": shas["change"]},
+        "workloads": workloads, "seeds": _seeds(args.seeds), "claim": args.claim,
+        "host": {"cpus": os.cpu_count(), "started": time.strftime("%Y-%m-%dT%H:%M:%S")},
+        "runs": [],
+    }
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    try:
+        for i, seed in enumerate(record["seeds"]):
+            order = SIDES if i % 2 == 0 else SIDES[::-1]
+            for w in workloads:
+                for side in order:
+                    run = {"workload": w, "seed": seed, "side": side, "first": order[0],
+                           **_run(bench, dirs[side], w, seed)}
+                    record["runs"].append(run)
+                    print(f"{w} seed {seed} {side}: exit {run['exit']} wall {run['wall_s']}s "
+                          f"correct={run['correct']} failed={run['failed']}", file=sys.stderr, flush=True)
+                    record["summary"] = summarize(record["runs"], bench["end_to_end"], args.claim)
+                    with open(args.out, "w") as f:
+                        json.dump(record, f, indent=1)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=REPO, capture_output=True)
+        for d in dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+    for w, s in record["summary"].items():
+        print(f"{w}: {json.dumps(s['counts'])}")
+        for name, m in s["metrics"].items():
+            print(f"  {name:20s} {m['parent']['median']:12.4f} -> {m['change']['median']:12.4f}  {m['verdict']}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -153,7 +153,7 @@ def pregenerate_feed(events: int) -> str:
 
 def run_level(
     cores: int, events: int, trials: int, feed_dir: str,
-    topology: str = "threads",
+    topology: str = "threads", extra_env: dict[str, str] | None = None,
 ) -> dict:
     """One pinned replay leg at `cores` (trials kept for signature
     compatibility; multi-trial selection lives in run_levels_interleaved,
@@ -200,6 +200,7 @@ def run_level(
             "BENCH_SKIP_EQUALITY": "1",
         }
     )
+    env.update(extra_env or {})
     # CPU affinity pinning: a local[N] JVM otherwise uses far more than N
     # CPU affinity pinning (see docstring): without it a local JVM uses far
     # more than its nominal cores, inflating the small-N baseline.
@@ -315,11 +316,11 @@ def _mode_keys(res: dict) -> list[tuple[str, str]]:
     ]
 
 
-def profile_inflation(
-    lo: int, hi: int, events: int = 4_000_000
-) -> dict[str, dict]:
+def profile_inflation(lo: int, hi: int, events: int, feed_dir: str) -> dict[str, dict]:
     """Per-mode executor-CPU inflation from lo→hi pinned cores, measured on
-    the engine's OWN tasks via event logs (bench/profile_epoch.py).
+    the engine's OWN tasks: each mode replays the feed once per level as a
+    pinned ``bench.py`` leg with Spark's event log on, and
+    ``perfbench/eventlog.py`` sums the executorCpuTime of its tasks.
 
     Identical input + identical task DAG at both levels, so any growth in
     summed executorCpuTime is the shared box degrading cycle delivery under
@@ -330,31 +331,34 @@ def profile_inflation(
     single-box→cluster correction; it deliberately does NOT correct for
     anything the engine itself does (extra tasks, shuffles, serial driver
     time all still count against it)."""
+    import glob
+    import shutil
+    import tempfile
+
+    sys.path.insert(0, REPO)
+    from perfbench.eventlog import load
+
     out: dict[str, dict] = {}
     for cores in (lo, hi):
-        cpuset = set(range(cores))
-        res = subprocess.run(
-            [
-                sys.executable,
-                os.path.join(REPO, "bench", "profile_epoch.py"),
-                "--cores", str(cores),
-                "--events", str(events),
-                "--modes", "cow,mor",
-            ],
-            capture_output=True,
-            text=True,
-            check=True,
-            preexec_fn=lambda: os.sched_setaffinity(0, cpuset),
-        )
-        for line in res.stdout.splitlines():
-            if not line.startswith("{"):
-                continue
-            r = json.loads(line)
-            out.setdefault(r["mode"], {})[cores] = r
-    for mode, levels in out.items():
-        levels["inflation"] = round(
-            levels[hi]["task_cpu_s"] / levels[lo]["task_cpu_s"], 3
-        )
+        for mode in ("cow", "mor"):
+            log_dir = tempfile.mkdtemp(prefix="scaling_eventlog_")
+            conf = {
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": log_dir,
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+            }
+            try:
+                run_level(cores, events, 1, feed_dir, extra_env={
+                    "BENCH_CDC_MODES": mode,
+                    "SPARK_GRAFT_EXTRA_CONF": ";".join(f"{k}={v}" for k, v in conf.items()),
+                })
+                cpu = sum(t["cpu_s"] for f in glob.glob(os.path.join(log_dir, "*")) for t in load(f).tasks)
+            finally:
+                shutil.rmtree(log_dir, ignore_errors=True)
+            out.setdefault(mode, {})[cores] = {"task_cpu_s": round(cpu, 1)}
+    for levels in out.values():
+        levels["inflation"] = round(levels[hi]["task_cpu_s"] / levels[lo]["task_cpu_s"], 3)
     return out
 
 
@@ -385,13 +389,13 @@ def main() -> None:
     # super-linear probe ratios are measurement noise; ceiling caps at 1
     bw_ceiling = min(1.0, (bw[phi] / bw[plo]) / ratio)
 
+    print("pre-generating feed ...", file=sys.stderr)
+    feed_dir = pregenerate_feed(args.events)
+
     prof = None
     if args.topology == "threads":
         print("measuring per-mode CPU inflation on the engine's own tasks ...", file=sys.stderr)
-        prof = profile_inflation(lo, hi)
-
-    print("pre-generating feed ...", file=sys.stderr)
-    feed_dir = pregenerate_feed(args.events)
+        prof = profile_inflation(lo, hi, args.events, feed_dir)
     print(
         f"running interleaved replay legs at local[{lo}]/local[{hi}] ...",
         file=sys.stderr,
@@ -477,7 +481,7 @@ as the pinned footprint grows:
 Proxy probes under-measure what the replay itself experiences, so the
 report's primary correction is measured ON the engine's own tasks: the
 identical replay (same input, same task DAG) ran pinned at both levels
-with Spark event logs on (`bench/profile_epoch.py`), and summed
+with Spark event logs on (read by `perfbench/eventlog.py`), and summed
 executorCpuTime — identical logical work — inflates by
 
 | mode | task CPU @{lo} cores | task CPU @{hi} cores | inflation {lo}→{hi} |
@@ -490,7 +494,7 @@ has stolen its vCPU, and memory-latency stalls burn on-CPU cycles — so
 this inflation is the shared box degrading cycle delivery under a wider
 footprint (steal + cross-"executor" memory contention), NOT extra work
 scheduled by the engine (task counts and shuffle volumes are identical by
-construction; per-job event timelines in profile_epoch confirm). Scaling
+construction). Scaling
 N→4N *executors* on a real cluster adds whole nodes — each brings its own
 cores and memory system — so those two terms do not exist there, while
 everything the engine itself does wrong (extra tasks, serial driver time,

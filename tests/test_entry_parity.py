@@ -88,16 +88,40 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 ORACLED = sorted(entrymod.oracle_sql().keys())
 ALL = sorted(entrymod.queries().keys())
 
+# One-expression rows folded into a registered query to keep the driver's
+# 50-row window: each is still checked on its own, as its columns (plus the
+# key) of the fused query against the same columns of the fused DuckDB twin.
+FOLDED = {
+    "concat_trim_documents": ("string_projections_documents", ["content"]),
+    "truncate_documents": ("string_projections_documents", ["truncated"]),
+    "sanitize_documents": ("string_projections_documents", ["job_name"]),
+    "null_guard_documents": (
+        "string_projections_documents", ["lang_if_long", "lang_or_unknown"]
+    ),
+    "lang_id_documents": ("string_projections_documents", ["lang_guess"]),
+}
+FOLDED_KEY = "doc_id"
+
 
 def test_every_oracle_has_query():
     assert set(ORACLED) <= set(ALL)
+    assert not set(FOLDED) & set(ALL)
+    assert {row for row, _ in FOLDED.values()} <= set(ORACLED)
 
 
-@pytest.mark.parametrize("name", ORACLED)
+@pytest.mark.parametrize("name", ORACLED + sorted(FOLDED))
 def test_query_matches_oracle(spark, ddb, name):
-    q = entrymod.queries()[name]
-    spark_pdf = q(spark, SF_DIR).toPandas()
-    duck_pdf = ddb.execute(entrymod.oracle_sql()[name]).fetchdf()
+    if name in FOLDED:
+        row, cols = FOLDED[name]
+        cols = [FOLDED_KEY, *cols]
+        spark_pdf = entrymod.queries()[row](spark, SF_DIR).select(*cols).toPandas()
+        duck_pdf = ddb.execute(
+            f"SELECT {', '.join(cols)} FROM ({entrymod.oracle_sql()[row]})"
+        ).fetchdf()
+    else:
+        q = entrymod.queries()[name]
+        spark_pdf = q(spark, SF_DIR).toPandas()
+        duck_pdf = ddb.execute(entrymod.oracle_sql()[name]).fetchdf()
     assert len(spark_pdf) == len(duck_pdf), (
         f"{name}: row count {len(spark_pdf)} vs oracle {len(duck_pdf)}"
     )

@@ -248,9 +248,6 @@ def test_portable_hash_embed_matches_python_twin(spark):
     from transcript_cdc.functions.portable import py_hash_embed
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    rows = docs.select(
-        "text", hash_embed("text", dim=16, hash_fn="md5").alias("v")
-    ).collect()
     # whitespace edges: F.trim strips only U+0020 and Java's \s is ASCII
     # whitespace only, so tabs/newlines at the ends and NBSP/EM SPACE/U+001C
     # inside must tokenize exactly as Spark does
@@ -259,13 +256,12 @@ def test_portable_hash_embed_matches_python_twin(spark):
         "\t", " ", "", "a\x0bb\fc\rd", "x\u00a0y", "x\u2003y", "x\x1cy",
         "\u3000lead", "ÉTUDE Déjà vu 🙂",
     ]
-    rows += (
-        spark.createDataFrame([(t,) for t in edges], "text string")
-        .select("text", hash_embed("text", dim=16, hash_fn="md5").alias("v"))
-        .collect()
-    )
-    for r in rows:
-        assert list(r["v"]) == py_hash_embed(r["text"], 16), repr(r["text"][:50])
+    texts = docs.select("text").unionByName(spark.createDataFrame([(t,) for t in edges], "text string"))
+    for hash_fn in ("md5", "xx64"):
+        rows = texts.select("text", hash_embed("text", dim=16, hash_fn=hash_fn).alias("v")).collect()
+        assert len(rows) == 50 + len(edges)
+        for r in rows:
+            assert list(r["v"]) == py_hash_embed(r["text"], 16, hash_fn), (hash_fn, r["text"][:50])
 
 
 def test_minhash_null_text_rows_never_pair(spark):

@@ -18,8 +18,3 @@ EVENT_PROPS_SCHEMA = T.StructType([T.StructField("k", T.IntegerType())])
 def parse_props(col: Column | str, schema: T.StructType = EVENT_PROPS_SCHEMA) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.from_json(c, schema)
-
-
-def to_json_payload(*cols: str) -> Column:
-    """Manifest/notification-style JSON payload from named columns."""
-    return F.to_json(F.struct(*[F.col(c) for c in cols]))

@@ -107,17 +107,19 @@ def py_xxhash64(s: str, seed: int = 42) -> int:
     return h - (1 << 64) if h >> 63 else h
 
 
-def py_hash_embed(text: str, dim: int = 16) -> list[float]:
-    """Python twin of functions.vectors.hash_embed(hash_fn='md5'):
-    token → portable-hash bucket → L2-normalized counts. Must match the
-    Spark expression bit-for-bit (same tokenization, same IEEE ops)."""
+def py_hash_embed(text: str, dim: int = 16, hash_fn: str = "xx64") -> list[float]:
+    """Python twin of functions.vectors.hash_embed(text, dim, hash_fn):
+    token → hash bucket (``py_hash32`` for md5, ``py_xxhash64`` otherwise)
+    → L2-normalized counts. Must match the Spark expression bit-for-bit
+    (same tokenization, same IEEE ops)."""
     import re
 
+    tok_hash = py_hash32 if hash_fn == "md5" else py_xxhash64
     # F.trim strips only U+0020, and Java's \s is ASCII whitespace only
     toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" ").lower())
     counts = [0.0] * dim
     for w in toks:
-        counts[py_hash32(w) % dim] += 1.0
+        counts[tok_hash(w) % dim] += 1.0
     n = 0.0
     for v in counts:
         n += v * v

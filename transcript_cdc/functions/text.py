@@ -18,9 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SENTENCE_SPLIT_REGEX = r"(?<=[.!?])\s+"
-# BPE-ish token regex: runs of word chars OR single non-space symbols —
-# a deterministic stand-in for a real tokenizer.
-TOKEN_REGEX = r"\w+|[^\w\s]"
 
 
 def content_concat(title: Column | str, body: Column | str, sep: str = "\n\n") -> Column:
@@ -82,12 +79,6 @@ def sentence_chunks(
 
 
 # ---------- training-data text analysis (engine additions) ----------
-
-def token_count(col: Column | str) -> Column:
-    """Whitespace-ish token count via the BPE-ish regex (JVM regexp)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(TOKEN_REGEX), F.lit(0)))
-
 
 def whitespace_token_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col

@@ -49,8 +49,3 @@ def point_lookup(df: DataFrame, key: dict) -> DataFrame:
     """Point lookup by composite key (F5: bm25-as-point-query top_k=1).
     Equality predicates → partition/row-group prunable."""
     return df.filter(conjunction(*[F.col(k) == F.lit(v) for k, v in key.items()]))
-
-
-def suffix_filter(col: str, suffix: str) -> Column:
-    """Suffix routing filter (F6: endswith('.xml') object routing)."""
-    return F.lower(F.col(col)).endswith(suffix.lower())

@@ -261,10 +261,3 @@ def merge_apply_versioned(
         ]
     )
     return winners.select(*exprs)
-
-
-def merge_metrics_agg(batch: DataFrame, op_col: str = "op") -> DataFrame:
-    """Per-epoch commit metrics: rows by op — feeds the commit manifest
-    (the north_star's per-partition lineage; reference analogue is the Slack
-    run-notification payload, ETL/lambda/glue_monitor.py:10-32)."""
-    return batch.groupBy(op_col).agg(F.count(F.lit(1)).alias("n"))

@@ -6,8 +6,9 @@ pass that evaluates the full child plan once before the real exchange
 evaluates it again. For the COW epoch that child is the merge itself
 (hot-file scan + broadcast anti join), so the hot set is read and merged
 TWICE per epoch, plus one extra driver-serial job between the control
-collect and the write (measured: the sampling job costs about as much as
-the exchange map stage at steady state — bench/profile_epoch.py).
+collect and the write (measured from Spark event logs: the sampling job
+costs about as much as the exchange map stage at steady state;
+``perfbench/run.py --trace 1`` counts such jobs as ``stream.sample_jobs``).
 
 This module removes the sampling pass: the epoch already KNOWS the key
 distribution of everything the merge can emit —

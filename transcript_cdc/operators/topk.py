@@ -1,9 +1,10 @@
-"""Top-k / rerank / over-fetch (SURVEY.md §2.4 J4-J8).
+"""Top-k / rerank (SURVEY.md §2.4 J4-J6).
 
 The reference's retrieval shape: filtered top-k from the store
 (services/search.py:27-34), cross-encoder rerank to top_k
-(services/ranker.py:16-22), over-fetch 2k then cut (correlations.py:95-100),
-self-match score override (correlations.py:108-109).
+(services/ranker.py:16-22). Over-fetch then cut (J7) is ``top_k`` of
+``k * 2`` followed by ``rerank``; the self-match override (J8) is one
+``F.when`` at the call site.
 
 Physical note: orderBy(desc(score)).limit(k) plans as
 TakeOrderedAndProject — a distributed top-k (per-partition heap + driver
@@ -32,24 +33,3 @@ def rerank(
     """Re-score candidates and keep top-k (J6: TransformersSimilarityRanker).
     The scorer is any Column — deterministic SQL or a vectorized pandas_udf."""
     return top_k(df.withColumn(score_col, new_score), score_col, k, tiebreak)
-
-
-def overfetch_rerank(
-    df: DataFrame, initial_score: str, new_score: Column, k: int,
-    overfetch_factor: int = 2, tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Fetch k·factor by initial score, re-score, cut to k (J7)."""
-    cand = top_k(df, initial_score, k * overfetch_factor, tiebreak)
-    return rerank(cand, new_score, k, score_col=initial_score, tiebreak=tiebreak)
-
-
-def self_match_override(
-    df: DataFrame, id_col: str, self_id, score_col: str = "score"
-) -> DataFrame:
-    """Force score=1.0 for the query document itself (J8)."""
-    return df.withColumn(
-        score_col,
-        F.when(F.col(id_col) == F.lit(self_id), F.lit(1.0)).otherwise(
-            F.col(score_col)
-        ),
-    )

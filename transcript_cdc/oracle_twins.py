@@ -65,13 +65,6 @@ def hyperplane_sig_sql(vec: str, planes: Sequence[Sequence[float]]) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def py_dot(a: Sequence[float], b: Sequence[float]) -> float:
-    s = 0.0
-    for x, y in zip(a, b):
-        s += float(x) * float(y)
-    return s
-
-
 # --------------------------------------------------------------------------
 # ANN / similarity search
 # --------------------------------------------------------------------------
@@ -439,7 +432,7 @@ def hybrid_search_sql(
     embedding top-k branches, union-dedup keeping max score, blended
     rerank, final cut. The query embedding is the Python twin of what the
     Spark query computes driver-side."""
-    qvec = py_hash_embed(query_text, dim)
+    qvec = py_hash_embed(query_text, dim, "md5")
     lex = lexical_score_sql(text_col, query_text.split())
     sem = dot_sql("vec", qvec, cast_elems=False)
     return f"""

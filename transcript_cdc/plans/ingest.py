@@ -304,8 +304,10 @@ class CdcIngestJob:
 
         ONE Spark action per epoch — the observed write (AQE materializes
         it as ~3 query-stage jobs; steady-state driver gap before the
-        first of them measures 0.55-0.65 s — bench/profile_epoch.py,
-        PROFILE_JOBS=1). Round 1 ran three
+        first of them measured 0.55-0.65 s from Spark event logs; the
+        pipelined loop's receipt is bench/pipelined_gap_r5.json, and
+        ``perfbench/run.py --workload mor_merge --trace 1`` reports the gap
+        as ``ingest.driver_gap_s``). Round 1 ran three
         driver-serial control jobs before it (persist materialization,
         per-bucket count collect, heavy-hitter probe; measured ~0.1-1s of
         un-parallelizable wall each). All three are folded away:

@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from transcript_cdc.functions.portable import py_hash_embed
 from transcript_cdc.functions.vectors import dot, hash_embed
 from transcript_cdc.operators.filters import conjunction, point_lookup
 from transcript_cdc.operators.topk import rerank, top_k
@@ -120,27 +121,17 @@ def embedding_score(
     literal array — Catalyst does not constant-fold higher-order-function
     trees, so embedding the query lazily would re-run hash_embed(query) for
     every scored row. This mirrors the reference embedding the query once
-    per request (services/search.py:72-76). With the portable md5 hash the
-    query vector comes from the pure-Python twin (no 1-row Spark job at
-    all); xx64 needs the JVM for xxhash64.
+    per request (services/search.py:72-76). The query vector comes from the
+    pure-Python twin ``py_hash_embed``, bit-identical to ``hash_embed`` for
+    both hashes, so scoring a query launches no Spark job of its own.
 
     ``cache``: optional operators.cache.LruCache — the J9 get-or-fetch.
     Query embeddings are immutable (pure function of the text), so the key
-    needs no snapshot identity; a hit skips the 1-row Spark job the xx64
-    path otherwise pays per request (the reference's vector-store LRU,
-    repositories/vector_store.py:33-63)."""
+    needs no snapshot identity; a hit skips re-embedding the query (the
+    reference's vector-store LRU, repositories/vector_store.py:33-63)."""
 
     def fetch():
-        if hash_fn == "md5":
-            from transcript_cdc.functions.portable import py_hash_embed
-
-            return py_hash_embed(query_text, dim)
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        return spark.range(1).select(
-            hash_embed(F.lit(query_text), dim, hash_fn).alias("q")
-        ).first()["q"]
+        return py_hash_embed(query_text, dim, hash_fn)
 
     if cache is not None:
         qvec = cache.get_or_fetch(("qembed", query_text, dim, hash_fn), fetch)

@@ -72,11 +72,6 @@ VERSIONED_TRANSCRIPT_SCHEMA = T.StructType(
 FEED_ONLY_COLS = [LSN_COL, OP_COL]
 
 
-def value_columns(schema: T.StructType) -> list[str]:
-    """Non-key, non-feed columns of a change batch = the payload columns."""
-    return [f.name for f in schema.fields if f.name not in KEY_COLS + FEED_ONLY_COLS]
-
-
 # Safe type-widening promotions (Iceberg's evolution rules): the wide type
 # represents every value the narrow type can hold, so old files stay
 # readable under the widened table schema (Spark's parquet reader and the

@@ -128,8 +128,9 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # SPARK_GRAFT_EXTRA_CONF: ';'-separated k=v pairs applied LAST — lets
-    # pinned-subprocess bench legs A/B spark confs (e.g. the shuffle codec)
-    # without a code fork. ';' because conf values may contain commas.
+    # a pinned bench.py subprocess take extra Spark confs without a code
+    # fork (bench/scaling.py turns the event log on this way; a codec is
+    # one pair away). ';' because conf values may contain commas.
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in env_conf.split(";"):
         if pair.strip():

@@ -199,17 +199,3 @@ class ChangeFeed:
         except Exception:
             row = self.read().agg(F.max("lsn").alias("m")).collect()[0]
             return -1 if row["m"] is None else int(row["m"])
-
-    def read_stream(self, schema) -> DataFrame:
-        """Structured Streaming variant: file-source tail of the WAL dir.
-
-        Offsets (which files have been consumed) live in the streaming
-        checkpointLocation — the built-in analogue of the reference's
-        metadata.json cursor. Used by streaming/stream_ingest.py with
-        foreachBatch.
-        """
-        return (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "8")
-            .parquet(self.path)
-        )
