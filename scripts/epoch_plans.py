@@ -2,20 +2,22 @@
 
 Replays one small generated feed through every COW regime pair — survivor
 anti-join (broadcast | hash | smj) x control pass (groupby-collect |
-observe-count | observe-collect) — and through the default MOR epoch, then
-prints one JSON object per regime: the epoch's executed plan (captured at
-commit time; expression and plan ids and the work dir stripped), the manifest
-regime labels, and a digest of the committed data files: per file its
-byte size and decoded rows, sorted, names ignored (attempt dirs and part
-files carry random ids, and parquet-mr lists a column's encodings in hash
-order, so raw file bytes differ between identical runs).
+observe-count | observe-collect) — through the default MOR epoch and through
+two streaming micro-batches (``StreamingIngest.apply_batch``, the versioned
+merge), then prints one JSON object per regime: the epoch's executed plan
+(captured at commit time; expression and plan ids and the work dir
+stripped), the manifest regime labels, and a digest of the committed data
+files: per file its byte size and decoded rows, sorted, names ignored
+(attempt dirs and part files carry random ids, and parquet-mr lists a
+column's encodings in hash order, so raw file bytes differ between
+identical runs).
 
 Refactors of the epoch loop that must not change any plan are checked by
 running this on both checkouts and diffing the output:
 
     python3 scripts/epoch_plans.py --work /tmp/epoch_plans > after.jsonl
 
-Runs at local[2] in about 75 seconds.
+Runs at local[2] in about a minute on a 4-vCPU host.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ from transcript_cdc.datagen import StreamSpec, write_change_feed  # noqa: E402
 from transcript_cdc.plans.ingest import CdcIngestJob, IngestConfig  # noqa: E402
 from transcript_cdc.session import get_spark  # noqa: E402
 from transcript_cdc.sources import lake  # noqa: E402
+from transcript_cdc.sources.changes import ChangeFeed  # noqa: E402
+from transcript_cdc.streaming import StreamConfig, StreamingIngest  # noqa: E402
 
 # (survivor regime, config) — each rung forced by its key-count caps.
 ANTI = {
@@ -82,16 +86,8 @@ def main() -> None:
 
     lake.ParquetSnapshotTable.commit_epoch = commit
 
-    def replay(name: str, cfg: IngestConfig, cap: int | None = None) -> None:
-        root = f"{work}/{name}"
-        job = CdcIngestJob(spark, f"{work}/feed", root, cfg)
-        job.cfg.epoch_events = 1200
-        job.run(max_epochs=1)
-        job.cfg.epoch_events = 300
-        if cap is not None:
-            job.cfg.file_prune_max_keys = cap
-        job.run(max_epochs=1)
-        m = job.table.last_committed()
+    def emit(name: str, root: str, table) -> None:
+        m = table.last_committed()
         digests = sorted(
             hashlib.sha256(
                 f"{os.path.getsize(f)} {pq.read_table(f).to_pydict()}".encode()
@@ -106,11 +102,34 @@ def main() -> None:
             "plan": captured[m["epoch"]],
         }), flush=True)
 
+    def replay(name: str, cfg: IngestConfig, cap: int | None = None) -> None:
+        root = f"{work}/{name}"
+        job = CdcIngestJob(spark, f"{work}/feed", root, cfg)
+        job.cfg.epoch_events = 1200
+        job.run(max_epochs=1)
+        job.cfg.epoch_events = 300
+        if cap is not None:
+            job.cfg.file_prune_max_keys = cap
+        job.run(max_epochs=1)
+        emit(name, root, job.table)
+
+    def replay_stream(name: str) -> None:
+        """The same two LSN windows as the batch replays, applied as
+        micro-batches 0 and 1; the second is a steady-state micro-batch."""
+        root = f"{work}/{name}"
+        si = StreamingIngest(spark, f"{work}/feed", root, f"{work}/{name}-ckpt",
+                             StreamConfig(n_buckets=4))
+        feed = ChangeFeed(spark, f"{work}/feed")
+        si.apply_batch(feed.read_range(-1, 1199), 0)
+        si.apply_batch(feed.read_range(1199, 1499), 1)
+        emit(name, root, si.table)
+
     for anti, anti_kw in ANTI.items():
         for control, cap in CONTROL.items():
             replay(f"cow-{anti}-{control}",
                    IngestConfig(n_buckets=4, **anti_kw), cap)
     replay("mor", IngestConfig(n_buckets=4, storage="mor"))
+    replay_stream("stream")
     spark.stop()
 
 

@@ -22,7 +22,7 @@ import os
 import pandas as pd
 import pytest
 
-from transcript_cdc.plans.ingest import CdcIngestJob, IngestConfig
+from transcript_cdc.plans.ingest import CdcIngestJob, IngestConfig, pick_dedup_strategy
 
 N_CONVS = 200
 TURNS = 4
@@ -200,21 +200,21 @@ def test_auto_dedup_strategy_gates_on_churn(spark, feed, tmp_path):
     # lag gate arithmetic (no Spark work): both bounds must hold
     job.cfg.epoch_events = 10_000_000
     job.table.last_committed = lambda: {"metrics": {"keys": 500_000}}
-    assert job._pick_dedup_strategy() == "broadcast"  # churn 20x, keys < cap
+    assert pick_dedup_strategy(job.cfg, job.table) == "broadcast"  # churn 20x, keys < cap
     job.table.last_committed = lambda: {"metrics": {"keys": 3_000_000}}
-    assert job._pick_dedup_strategy() == "window"  # winner set over cap
+    assert pick_dedup_strategy(job.cfg, job.table) == "window"  # winner set over cap
     job.cfg.epoch_events = 1_000_000
     job.table.last_committed = lambda: {"metrics": {"keys": 800_000}}
-    assert job._pick_dedup_strategy() == "window"  # churn ~1.25: no collapse
+    assert pick_dedup_strategy(job.cfg, job.table) == "window"  # churn ~1.25: no collapse
     job.table.last_committed = lambda: {"metrics": {"keys": 250_000}}
-    assert job._pick_dedup_strategy() == "broadcast"  # churn 4x, keys < cap
+    assert pick_dedup_strategy(job.cfg, job.table) == "broadcast"  # churn 4x, keys < cap
     job.table.last_committed = lambda: None  # fresh table: no lag signal
-    assert job._pick_dedup_strategy() == "window"
+    assert pick_dedup_strategy(job.cfg, job.table) == "window"
     job.cfg.dedup_strategy = "broadcast"  # explicit override wins
-    assert job._pick_dedup_strategy() == "broadcast"
+    assert pick_dedup_strategy(job.cfg, job.table) == "broadcast"
     job.cfg.dedup_strategy = "window"
     job.cfg.epoch_events = 100
-    assert job._pick_dedup_strategy() == "window"
+    assert pick_dedup_strategy(job.cfg, job.table) == "window"
 
 
 def test_forced_broadcast_dedup_ingest_matches_window(spark, feed, tmp_path):

@@ -323,3 +323,67 @@ def test_cow_epoch_plan_default_shape(spark, cow_job):
     # where a batch recomputed per branch would show two attribute sets
     dedup = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+", plan)
     assert len(set(dedup)) == 1, plan
+
+
+@pytest.fixture(scope="module")
+def stream_job(spark, tmp_path_factory):
+    """A streaming ingest driven through apply_batch: micro-batch 0 loads
+    1200 events, micro-batch 1 (300 events) is a steady-state batch
+    against written files. Micro-batch 1's write (commit_epoch) runs
+    under its own job group; its plan is kept as planned at commit time."""
+    from transcript_cdc.streaming import StreamConfig, StreamingIngest
+
+    base = tmp_path_factory.mktemp("plans_stream")
+    spec = StreamSpec(n_conversations=300, avg_turns=4, update_ratio=0.4,
+                      delete_ratio=0.1, seed=5, events_per_file=300)
+    feed = str(base / "feed")
+    write_change_feed(spec, feed)
+    si = StreamingIngest(spark, feed, str(base / "stream"), str(base / "ckpt"),
+                         StreamConfig(n_buckets=4))
+    changes = ChangeFeed(spark, feed)
+    si.apply_batch(changes.read_range(-1, 1199), 0)
+
+    sc = spark.sparkContext
+    group = f"plans-stream-write-{id(si)}"
+    commit = si.table.commit_epoch
+
+    def commit_in_group(epoch, new_state, *args, **kwargs):
+        si.live_plan = plan_of(new_state)
+        sc.setJobGroup(group, "stream write job-count probe")
+        try:
+            return commit(epoch, new_state, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    si.table.commit_epoch = commit_in_group
+    si.apply_batch(changes.read_range(1199, 1499), 1)
+    si.write_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return si
+
+
+def test_stream_micro_batch_plan_shape(stream_job):
+    """A steady-state streaming micro-batch writes through the shared COW
+    core: control pass with key lists, window dedup, and the stats-routed
+    range write — ONE exchange on __range_tok, never the sampled
+    RangePartitioner (whose sampling pass would evaluate the versioned
+    merge a second time)."""
+    import re
+
+    plan = stream_job.live_plan
+    m = stream_job.table.last_committed()["metrics"]
+    assert (m["mode"], m["control"], m["dedup"]) == (
+        "streaming", "groupby-collect", "window"), m
+    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", plan)) == 1, plan
+    assert "rangepartitioning" not in plan, plan
+
+
+def test_stream_micro_batch_launches_no_sampling_job(stream_job):
+    """Job-group probe over the steady-state micro-batch's write: AQE runs
+    each exchange of the write plan as one job and the write itself as one
+    more, so any job beyond that is a range partitioner's sampling job."""
+    import re
+
+    exchanges = re.findall(r"Exchange \w+partitioning",
+                           _outside_cache(stream_job.live_plan))
+    sampling_jobs = stream_job.write_jobs - (len(exchanges) + 1)
+    assert sampling_jobs == 0, (stream_job.write_jobs, exchanges)

@@ -183,3 +183,61 @@ def test_cow_placement_is_deterministic(cow_roots):
             for p, st in s.items()
         )
         assert norm(sa) == norm(sb)
+
+
+def test_stream_placement_is_deterministic(spark, tmp_path):
+    """The streaming twin of test_cow_placement_is_deterministic: one feed
+    drained twice, micro-batch by micro-batch, with unrelated Spark jobs
+    run before one of the drains. Steady-state micro-batches route their
+    write by the files' and the batch's key stats, so the layout is a
+    function of the input alone; a sampled range write would draw its
+    split points from a sample seeded by the RDD id, which counts every
+    RDD the application built before it. Micro-batch 0 writes into an
+    empty table, with no stats, and takes the sampled fallback; it holds
+    fewer rows than the sample, so its sample is the whole batch."""
+    import os
+
+    import pandas as pd
+
+    from transcript_cdc.streaming import StreamConfig, StreamingIngest
+
+    feed = str(tmp_path / "feed")
+    os.makedirs(feed)
+    ts = pd.Timestamp("2024-01-01")
+    cols = ["lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    lsn = 0
+
+    def write(name, keys, op):
+        nonlocal lsn
+        rows = []
+        for c, t in keys:
+            rows.append((lsn, op, f"conv-{c:04d}", t, "user", f"{op} {c} {t} {lsn}", None, ts))
+            lsn += 1
+        pd.DataFrame(rows, columns=cols).astype(
+            {"turn_idx": "int32", "tool": "string"}
+        ).to_parquet(os.path.join(feed, name), index=False, coerce_timestamps="us")
+
+    write("part-0.parquet", [(c, t) for c in range(0, 1000, 10) for t in range(3)], "I")
+    write("part-1.parquet", [(c, t) for c in range(1000) if c % 10 for t in range(3)], "I")
+    write("part-2.parquet", [(c, t) for c in range(0, 1000, 3) for t in range(3)], "U")
+
+    layouts = []
+    for name in ("a", "b"):
+        if name == "b":
+            for n in range(1, 40):
+                spark.range(n * 10).repartition(n % 7 + 1).count()
+        si = StreamingIngest(
+            spark, feed, str(tmp_path / f"t_{name}"), str(tmp_path / f"ck_{name}"),
+            StreamConfig(n_buckets=4, max_files_per_trigger=1),
+        )
+        assert si.run_available()
+        epochs = si.table.committed_epochs()
+        assert len(epochs) == 3
+        layouts.append({
+            e: sorted(
+                (p.split("/")[-1].split("-")[1], st["min_key"], st["max_key"], st["rows"])
+                for p, st in si.table._fold_stats(e).items()
+            )
+            for e in epochs
+        })
+    assert layouts[0] == layouts[1]

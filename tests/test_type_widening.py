@@ -187,3 +187,62 @@ def test_narrower_batch_after_widening_upcasts(spark, widen_feed, tmp_path):
     final = job.final_state().filter("turn_idx = 0 and conv_id < 'conv-005'")
     got = {r["conv_id"]: int(r["tokens"]) for r in final.collect()}
     assert got == {f"conv-{i:03d}": 7 + i for i in range(5)}
+
+
+def test_stream_widening_int_long_int(spark, tmp_path):
+    """The same int → long → int sequence through StreamingIngest.apply_batch:
+    the streaming micro-batch runs the shared COW core, which casts both
+    merge sides to the evolved schema, so the table widens at the long
+    batch, stays long after the narrower one, and every value (beyond
+    int32 included) round-trips."""
+    from transcript_cdc.datagen import replay_oracle
+    from transcript_cdc.streaming import StreamConfig, StreamingIngest
+
+    def frame(rows, tokens_type):
+        schema = T.StructType(
+            list(schemas.CHANGE_SCHEMA.fields)
+            + [T.StructField("tokens", tokens_type, True)]
+        )
+        return pd.DataFrame(rows, columns=COLS), schema
+
+    narrow = [
+        (i, "I", f"conv-{i % 20:03d}", i // 20, "user", f"t {i}", None, TS, i + 1)
+        for i in range(100)
+    ]
+    wide = [
+        (100 + i, "U", f"conv-{i % 20:03d}", i // 20, "user", f"w {i}", None, TS, BIG + i)
+        for i in range(100)
+    ] + [(200, "D", "conv-000", 0, None, None, None, TS, None)]
+    narrow_again = [
+        (300 + i, "U", f"conv-{i:03d}", 1, "user", f"n {i}", None, TS, 7 + i)
+        for i in range(5)
+    ]
+    ingest = StreamingIngest(
+        spark, str(tmp_path / "feed"), str(tmp_path / "table"),
+        str(tmp_path / "ckpt"), StreamConfig(n_buckets=4),
+    )
+    events = []
+    for epoch, (rows, ty) in enumerate(
+        [(narrow, T.IntegerType()), (wide, T.LongType()), (narrow_again, T.IntegerType())]
+    ):
+        pdf, schema = frame(rows, ty)
+        events.append(pdf)
+        ingest.apply_batch(spark.createDataFrame(pdf, schema=schema), epoch)
+        tok = next(
+            f.dataType
+            for f in ingest.table.current_schema().fields
+            if f.name == "tokens"
+        )
+        assert tok == (T.IntegerType() if epoch == 0 else T.LongType()), epoch
+
+    cols = ["conv_id", "turn_idx", "text", "tokens"]
+    got = sorted(
+        (r["conv_id"], r["turn_idx"], r["text"], int(r["tokens"]))
+        for r in ingest.final_state().select(*cols).collect()
+    )
+    oracle = replay_oracle(pd.concat(events, ignore_index=True))
+    want = sorted(
+        (r.conv_id, int(r.turn_idx), r.text, int(r.tokens))
+        for r in oracle[cols].itertuples(index=False)
+    )
+    assert got == want and len(got) == 99

@@ -9,28 +9,29 @@ against the touched snapshot buckets → atomically commit data + manifest.
 Per-epoch dataflow (shuffles annotated). MOR epochs run ONE full-payload
 shuffle: the default ``clustered`` LWW strategy windows over the write
 clustering (bucket[, salt]) so the dedup and the sink repartition are the
-same exchange (operators/dedup.lww_dedup_clustered). COW epochs:
+same exchange (operators/dedup.lww_dedup_clustered). COW epochs run the
+copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
 
-  changes(lsn∈(lo,hi])              parquet scan, lsn range pushed down
-    → lww_dedup                     SHUFFLE 1: hash(conv_id,turn_idx) window
-    → normalize_text (Arrow)        narrow, winners only
-    → __bucket = pmod(xxhash64(conv_id), N)    narrow
-    ⨝ snapshot(HOT FILES of touched buckets)   survivor anti join, three
-                                    rungs by the epoch's key count:
-                                    keys ≤ broadcast_max_rows → broadcast
-                                    anti join (snapshot side not shuffled);
-                                    keys ≤ merge_hash_prefilter_max_keys →
-                                    broadcast distinct key-HASH longs, only
-                                    hash-hit rows pay the exact SMJ;
-                                    beyond → full SMJ. Hot files = the
-                                    manifest's per-file key-range stats ∩
-                                    this batch's key set (plan_cow_merge);
-                                    provably-untouched files carry forward
-                                    unread and unrewritten.
-    → range-cluster on (bucket, conv_id)       SHUFFLE 2 (cow: keeps every
-                                    output file on a tight key interval so
-                                    the NEXT epoch's pruning stays selective;
-                                    mor: salted repartition by bucket)
+  changes(lsn∈(lo,hi])     parquet scan, lsn range pushed down (streaming:
+                           one foreachBatch micro-batch)
+    → lww_dedup            SHUFFLE 1: hash(conv_id,turn_idx) window
+    → normalize_text       Arrow, narrow, winners only
+    → __bucket = pmod(xxhash64(conv_id), N), persisted; control pass
+    ⨝ snapshot(HOT FILES of touched buckets), both sides cast to the evolved
+                           schema. Hot files = the manifest's per-file
+                           key-range stats ∩ this batch's key set
+                           (plan_cow_merge); untouched files carry forward
+                           unread. Batch: survivor anti join, by key count
+                           ≤ broadcast_max_rows → broadcast; ≤
+                           merge_hash_prefilter_max_keys → broadcast key
+                           hashes, only hash hits pay the exact SMJ; beyond
+                           → SMJ. Streaming: the versioned merge, one
+                           max-lsn window over snapshot ∪ batch.
+    → range-cluster on (bucket, conv_id)   SHUFFLE 2, split points from the
+                           hot files' footer stats + the batch key lists, so
+                           each file covers a tight key interval and the
+                           NEXT epoch's pruning stays selective (mor:
+                           salted repartition by bucket)
     → write data/epoch=K/ + manifest commit (+ footer key stats)
 
 At 10^10 events the loop is bounded per-epoch: cost scales with
@@ -47,6 +48,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Sequence
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -57,6 +59,7 @@ from transcript_cdc.functions.normalize import normalize_text, normalize_text_sq
 from transcript_cdc.operators.dedup import lww_dedup, lww_dedup_clustered
 from transcript_cdc.operators.merge import (
     merge_apply,
+    merge_apply_versioned,
     release_prefilter_broadcasts,
     # Unused here; the benchmark tracer (perfbench/spans.py) patches this
     # module binding by name, so it stays until the tracer drops it.
@@ -162,6 +165,299 @@ class IngestConfig:
     extra: dict = field(default_factory=dict)
 
 
+def pick_dedup_strategy(cfg: IngestConfig, table: ParquetSnapshotTable) -> str:
+    """Pick the LWW dedup plan for this epoch (cfg.dedup_strategy).
+
+    "auto" chooses "broadcast" — the full-payload batch is never
+    shuffled; only |distinct keys| narrow rows move — when the lagged
+    key count (previous epoch's post-dedup key count, same
+    lagged-predictor shape as the salt and the control-path gate; CDC
+    epoch key counts are stable under a fixed LSN window) predicts
+    both bounds of the win condition:
+
+    - broadcastable: keys*2 ≤ broadcast_max_rows (the winner set is
+      collected to the driver and rebroadcast — that round trip must
+      stay small in absolute terms);
+    - high churn: keys*4 ≤ epoch_events. The broadcast plan's payoff
+      is the payload shuffle it avoids; at churn ~1 (mostly-insert
+      feeds) the winner set ≈ the batch, so the build pass + driver
+      round trip is pure overhead (A/B-measured 2x slower), while at
+      churn ≥~4 the avoided exchange dominates (measured 2.4x faster
+      on a high-churn 16M-event feed).
+
+    No lag signal (first epoch) → "window", the safe default. A
+    mispredict costs one suboptimal epoch, never a wrong result — lsn
+    uniqueness makes all strategies value-identical."""
+    if cfg.dedup_strategy != "auto":
+        return cfg.dedup_strategy
+    last_keys = _lagged_keys(table)
+    if 0 < last_keys * 2 <= cfg.broadcast_max_rows and last_keys * 4 <= cfg.epoch_events:
+        return "broadcast"
+    # MOR's default: the single-exchange clustered window (the dedup
+    # rides the write-clustering shuffle — measured 1.3-1.4x faster per
+    # epoch on the cross-JVM topology and value-identical). COW keeps the
+    # key window: its merge survivors would have to ride a deferred
+    # window too (the fused COW epoch, A/B-rejected at 0.85-0.91x,
+    # CHANGES_r4.md #19).
+    return "clustered" if cfg.storage == "mor" else "window"
+
+
+def _lagged_keys(table: ParquetSnapshotTable) -> int:
+    """The last committed epoch's post-dedup key count (0 before any)."""
+    metrics = (table.last_committed() or {}).get("metrics") or {}
+    return int(metrics.get("keys") or 0)
+
+
+class CowEpoch:
+    """The copy-on-write epoch core, shared by CdcIngestJob and
+    StreamingIngest.apply_batch. ``versioned`` picks the merge:
+    merge_apply with its survivor ladder (batch: every event of the epoch
+    is newer than the table) or merge_apply_versioned (streaming: lsn/op
+    live in the table and the max lsn wins per key)."""
+
+    def __init__(self, spark: SparkSession, table: ParquetSnapshotTable,
+                 cfg: IngestConfig, versioned: bool = False):
+        self.spark, self.table, self.cfg = spark, table, cfg
+        self.versioned = versioned
+
+    @contextmanager
+    def plan(self, raw: DataFrame, epoch: int):
+        """LWW dedup → normalize → bucket, persisted; then the bounded
+        control pass (_control), the merge against only the hot files of
+        the touched buckets (_merge) and the stats-routed range write
+        (_write). Yields the planned epoch: ``ctl`` (keys, deletes,
+        touched buckets; lsn_lo/lsn_hi when versioned) and, unless the
+        batch is empty (``new_state`` None), ``new_state``, ``schema``,
+        ``kept`` and the manifest ``metrics``. The caller commits inside
+        the block, while the batch is still persisted. Two Spark jobs: the
+        control pass + the merge write."""
+        cfg, table = self.cfg, self.table
+        strategy = pick_dedup_strategy(cfg, table)
+        # Dedup runs FIRST: the winner is chosen by lsn, never by text, so
+        # normalizing only the surviving rows is equivalent and sends
+        # fewer rows through the Arrow python workers.
+        batch = lww_dedup(raw, schemas.KEY_COLS, schemas.LSN_COL, strategy)
+        if cfg.normalize and "text" in batch.columns:
+            norm = normalize_text("text") if cfg.arrow_normalizer else normalize_text_sql("text")
+            batch = batch.withColumn("text", norm)
+        batch = batch.withColumn(
+            BUCKET_COL, bucket_expr(table.n_buckets, table.meta["bucket_by"])
+        )
+        # Lagged size gate (as for the salt): when the previous epoch's key
+        # count says the key lists would be discarded, the control metrics
+        # ride the cache materialization as an Observation instead.
+        # Under-predict pays one epoch of capped transfer; _control
+        # recovers an over-predict.
+        obs = None
+        if not (
+            cfg.file_granular_cow
+            and _lagged_keys(table) <= cfg.file_prune_max_keys
+            and table.has_live_files()
+        ):
+            obs = Observation(f"epoch-{epoch}-control")
+            batch = batch.observe(
+                obs, *self._counts(), F.collect_set(F.col(BUCKET_COL)).alias("buckets")
+            )
+        batch = batch.persist()
+        try:
+            ctl = self._control(batch, obs)
+            if ctl["keys"] == 0:
+                yield {"ctl": ctl, "new_state": None}
+                return
+            hot, kept = table.plan_cow_merge(
+                ctl["touched"], ctl["keys_by_bucket"], cfg.max_files_per_bucket
+            )
+            merged, new_schema, merge_anti = self._merge(batch, hot, ctl["keys"])
+            yield {
+                "ctl": ctl,
+                "new_state": self._write(merged, hot, ctl["keys_by_bucket"]),
+                "schema": new_schema,
+                "kept": kept,
+                "metrics": {
+                    "storage": "cow",
+                    "keys": ctl["keys"],
+                    "deletes_in_batch": ctl["deletes"],
+                    "files_rewritten": len(hot),
+                    "files_kept": sum(len(v) for v in kept.values()),
+                    "control": ctl["control"],
+                    "merge_anti": merge_anti,
+                    "dedup": strategy,
+                },
+            }
+        finally:
+            batch.unpersist()
+            # Drop the hash prefilter's executor copies now, not at GC time
+            # (up to ~128 MB/epoch would linger nondeterministically).
+            release_prefilter_broadcasts()
+
+    def _counts(self) -> list:
+        """The control pass's batch counts. A versioned (streaming)
+        micro-batch is not an LSN window, so its lsn range is counted too."""
+        aggs = [
+            F.count(F.lit(1)).alias("keys"),
+            F.sum((F.col(schemas.OP_COL) == "D").cast("long")).alias("deletes"),
+        ]
+        if self.versioned:
+            aggs += [
+                F.min(schemas.LSN_COL).alias("lsn_lo"),
+                F.max(schemas.LSN_COL).alias("lsn_hi"),
+            ]
+        return aggs
+
+    def _control(self, batch: DataFrame, obs: Observation | None) -> dict:
+        """The epoch's one bounded control pass over the persisted batch:
+        key/delete counts, touched buckets and — while collectable — the
+        per-bucket sorted key lists that drive file pruning.
+
+        - ``groupby-collect`` (``obs`` is None): a groupBy(bucket) collect
+          of ≤ n_buckets rows, each key list capped at
+          ``file_prune_max_keys``+1 elements so an oversized bucket
+          degrades to whole-bucket rewrite instead of unbounded driver
+          transfer.
+        - ``observe-count``: the counts ride the cache materialization as
+          the Observation ``obs`` — one count() scalar round trip, no
+          per-bucket aggregate (profiled: the groupBy+collect leg cost
+          ~14s per 8M-event epoch at 4 executors).
+        - ``observe-collect``: the observation proved the key set
+          collectable although the lagged count said otherwise (the first
+          incremental epoch after a large backfill). Without the key lists
+          plan_cow_merge would rewrite every touched bucket in full, so
+          one aggregate over the cached batch buys the pruning back."""
+        lim = self.cfg.file_prune_max_keys
+        key_list = F.slice(
+            F.sort_array(F.collect_set(F.col(self.table.meta["bucket_by"]))),
+            1,
+            lim + 1,
+        ).alias("key_list")
+        if obs is None:
+            rows = batch.groupBy(BUCKET_COL).agg(*self._counts(), key_list).collect()
+            ctl = {
+                "keys": sum(int(r["keys"]) for r in rows),
+                "deletes": sum(int(r["deletes"] or 0) for r in rows),
+                "touched": [int(r[BUCKET_COL]) for r in rows],
+                "control": "groupby-collect",
+            }
+            if self.versioned and rows:
+                ctl["lsn_lo"] = min(int(r["lsn_lo"]) for r in rows)
+                ctl["lsn_hi"] = max(int(r["lsn_hi"]) for r in rows)
+        else:
+            batch.count()  # one pass: materialize cache + fire observe
+            om = obs.get
+            ctl = {
+                "keys": int(om.get("keys") or 0),
+                "deletes": int(om.get("deletes") or 0),
+                "touched": sorted(int(b) for b in (om.get("buckets") or [])),
+                "control": "observe-count",
+            }
+            if self.versioned:
+                ctl["lsn_lo"], ctl["lsn_hi"] = om.get("lsn_lo"), om.get("lsn_hi")
+            rows = None
+            if (
+                self.cfg.file_granular_cow
+                and 0 < ctl["keys"] <= lim
+                and self.table.has_live_files()
+            ):
+                rows = batch.groupBy(BUCKET_COL).agg(key_list).collect()
+                ctl["control"] = "observe-collect"
+        # A missing bucket entry means "unknown" → plan_cow_merge rewrites
+        # that whole bucket; buckets whose key set overflowed the slice cap
+        # are simply left out.
+        ctl["keys_by_bucket"] = (
+            {
+                str(int(r[BUCKET_COL])): list(r["key_list"])
+                for r in rows
+                if r["key_list"] is not None and len(r["key_list"]) <= lim
+            }
+            if rows is not None and ctl["keys"] <= lim
+            else None
+        )
+        return ctl
+
+    def _merge(self, batch: DataFrame, hot: list, n_keys: int) -> tuple:
+        """Schema evolution, then the merge of the batch into the hot
+        files. Returns (merged, new_schema, merge_anti): the survivor rung,
+        None for the versioned merge."""
+        # Schema evolution: union-by-name the batch's payload columns
+        # into the table schema (additive only).
+        new_schema = schemas.evolve(
+            self.table.current_schema(),
+            batch.drop(schemas.LSN_COL, schemas.OP_COL, BUCKET_COL).schema,
+        )
+        # Type-widening evolution: both merge sides are cast to the
+        # evolved schema EXPLICITLY (the rewritten files carry the wide
+        # type; untouched narrow files upcast at read under the wide
+        # table schema) — the union must never rely on implicit coercion.
+        snapshot = schemas.align_types(
+            self.table.read_files(self.spark, hot), new_schema
+        )
+        batch_al = schemas.align_types(batch.drop(BUCKET_COL), new_schema)
+        if self.versioned:
+            merged = merge_apply_versioned(snapshot, batch_al, key_cols=schemas.KEY_COLS)
+            return merged, new_schema, None
+        # The survivor ladder (operators/merge.survivors_anti_join), by the
+        # epoch's exact key count: broadcast → hash prefilter → SMJ.
+        if n_keys <= self.cfg.broadcast_max_rows:
+            merge_anti = "broadcast"
+        elif n_keys <= self.cfg.merge_hash_prefilter_max_keys:
+            merge_anti = "hash"
+        else:
+            merge_anti = "smj"
+        merged = merge_apply(
+            snapshot,
+            batch_al,
+            key_cols=schemas.KEY_COLS,
+            broadcast_batch=merge_anti == "broadcast",
+            hash_prefilter=merge_anti == "hash",
+        )
+        return merged, new_schema, merge_anti
+
+    def _write(
+        self, merged: DataFrame, hot: list, keys_by_bucket: dict | None
+    ) -> DataFrame:
+        """The range-clustered write plan. The bucket is re-derived from
+        conv_id (deterministic), then the write is RANGE-clustered on
+        (bucket, key): each output file covers a tight key interval, which
+        is exactly what makes the next epoch's file pruning selective.
+
+        Range clustering WITHOUT repartitionByRange: its RangePartitioner
+        samples the child plan, which here is the merge itself — the hot
+        set would be scanned and merged TWICE per epoch (measured: the
+        sampling job costs about as much as the exchange map stage), plus
+        one extra driver-serial job, and the sample is seeded by the RDD
+        id, so the layout would depend on how many RDDs the application
+        built before. The epoch already knows the key distribution — hot
+        files' footer stats + the control pass's batch key lists — so
+        split points are computed driver-side and each row is routed to
+        its range's exact reducer (operators/rangewrite.py). Deterministic
+        output placement, merge evaluated exactly once."""
+        key_col = self.table.meta["bucket_by"]
+        new_state = merged.withColumn(
+            BUCKET_COL, bucket_expr(self.table.n_buckets, key_col)
+        )
+        n_parts = self.cfg.write_partitions or int(
+            self.spark.conf.get("spark.sql.shuffle.partitions")
+        )
+        atoms = self.table.write_atoms(hot)
+        if keys_by_bucket is not None:
+            atoms += [
+                (int(b), k, 1.0) for b, ks in keys_by_bucket.items() for k in ks
+            ]
+        if atoms:
+            bounds = plan_range_bounds(atoms, n_parts)
+            new_state = assign_range_partition(
+                new_state, bounds, n_parts, BUCKET_COL, key_col
+            )
+        else:
+            # No stats at all (the table's first epoch: no files, and the
+            # control pass collected no key lists): fall back to sampled
+            # range partitioning — correctness identical, just pays the
+            # sampling pass this once.
+            new_state = new_state.repartitionByRange(
+                n_parts, F.col(BUCKET_COL), F.col(key_col)
+            )
+        return new_state.sortWithinPartitions(BUCKET_COL, key_col)
+
+
 class CdcIngestJob:
     """Replay a change feed into a ParquetSnapshotTable, epoch by epoch."""
 
@@ -217,64 +513,6 @@ class CdcIngestJob:
 
     # ---------- the epoch ----------
 
-    def prepare_batch(self, batch: DataFrame, strategy: str) -> DataFrame:
-        """LWW dedup → normalize → bucket column.
-
-        Dedup runs FIRST: the winner is chosen by lsn, never by text, so
-        normalizing only the surviving rows is equivalent and sends ~30%
-        fewer rows through the Arrow python workers (update/delete losers
-        never cross the JVM↔Arrow boundary)."""
-        batch = lww_dedup(batch, schemas.KEY_COLS, schemas.LSN_COL, strategy)
-        if self.cfg.normalize and "text" in batch.columns:
-            norm = (
-                normalize_text("text")
-                if self.cfg.arrow_normalizer
-                else normalize_text_sql("text")
-            )
-            batch = batch.withColumn("text", norm)
-        return batch.withColumn(
-            BUCKET_COL, bucket_expr(self.table.n_buckets, self.table.meta["bucket_by"])
-        )
-
-    def _pick_dedup_strategy(self) -> str:
-        """Pick the LWW dedup plan for this epoch (cfg.dedup_strategy).
-
-        "auto" chooses "broadcast" — the full-payload batch is never
-        shuffled; only |distinct keys| narrow rows move — when the lagged
-        key count (previous epoch's post-dedup key count, same
-        lagged-predictor shape as the salt and the control-path gate; CDC
-        epoch key counts are stable under a fixed LSN window) predicts
-        both bounds of the win condition:
-
-        - broadcastable: keys*2 ≤ broadcast_max_rows (the winner set is
-          collected to the driver and rebroadcast — that round trip must
-          stay small in absolute terms);
-        - high churn: keys*4 ≤ epoch_events. The broadcast plan's payoff
-          is the payload shuffle it avoids; at churn ~1 (mostly-insert
-          feeds) the winner set ≈ the batch, so the build pass + driver
-          round trip is pure overhead (A/B-measured 2x slower), while at
-          churn ≥~4 the avoided exchange dominates (measured 2.4x faster
-          on a high-churn 16M-event feed).
-
-        No lag signal (first epoch) → "window", the safe default. A
-        mispredict costs one suboptimal epoch, never a wrong result — lsn
-        uniqueness makes all strategies value-identical."""
-        if self.cfg.dedup_strategy != "auto":
-            return self.cfg.dedup_strategy
-        last_keys = self._lagged_keys()
-        if (
-            0 < last_keys * 2 <= self.cfg.broadcast_max_rows
-            and last_keys * 4 <= self.cfg.epoch_events
-        ):
-            return "broadcast"
-        # MOR's default: the single-exchange clustered window (the dedup
-        # rides the write-clustering shuffle — measured 1.3-1.4x faster
-        # per epoch on the cross-JVM topology and value-identical). COW
-        # keeps the key window: its merge survivors would have to ride a
-        # deferred window too (the fused COW epoch, A/B-rejected at
-        # 0.85-0.91x, CHANGES_r4.md #19).
-        return "clustered" if self.cfg.storage == "mor" else "window"
-
     def run_epoch(self, epoch: int, lsn_lo_excl: int, lsn_hi_incl: int) -> dict:
         """Process one LSN window; returns the commit metrics dict.
 
@@ -326,7 +564,7 @@ class CdcIngestJob:
         tests/test_plans.py). ``window``/``broadcast`` keep the classic
         dedup-then-repartition shape.
         """
-        strategy = self._pick_dedup_strategy()
+        strategy = pick_dedup_strategy(self.cfg, self.table)
         new_schema = schemas.evolve(self.table.current_schema(), raw.schema)
         # Type-widening evolution (int→long, float→double): delta files are
         # written at the table's (possibly widened) types so a chain never
@@ -489,44 +727,14 @@ class CdcIngestJob:
             "seconds": round(time.time() - planned["t0"], 3),
         }
 
-    def _lagged_keys(self) -> int:
-        """The last committed epoch's post-dedup key count (0 before any)."""
-        metrics = (self.table.last_committed() or {}).get("metrics") or {}
-        return int(metrics.get("keys") or 0)
-
     def _run_epoch_cow(
         self, epoch: int, lsn_lo: int, lsn_hi: int, raw: DataFrame, t0: float
     ) -> dict:
-        """Copy-on-write epoch: LWW dedup (prepare_batch), then the bounded
-        control pass (_cow_control), the merge against only the hot files
-        of the touched buckets (_cow_merge) and the range-clustered write
-        (_cow_write). Two Spark jobs: the control pass + the merge write."""
-        strategy = self._pick_dedup_strategy()
-        batch = self.prepare_batch(raw, strategy)
-        # Lagged size gate (as for the salt): when the previous epoch's key
-        # count says the key lists would be discarded, the control metrics
-        # ride the cache materialization as an Observation instead.
-        # Under-predict pays one epoch of capped transfer; _cow_control
-        # recovers an over-predict.
-        obs = None
-        if not (
-            self.cfg.file_granular_cow
-            and self._lagged_keys() <= self.cfg.file_prune_max_keys
-            and self.table.has_live_files()
-        ):
-            obs = Observation(f"epoch-{epoch}-control")
-            batch = batch.observe(
-                obs,
-                F.count(F.lit(1)).alias("keys"),
-                F.sum((F.col(schemas.OP_COL) == "D").cast("long")).alias(
-                    "deletes"
-                ),
-                F.collect_set(F.col(BUCKET_COL)).alias("buckets"),
-            )
-        batch = batch.persist()
-        try:
-            ctl = self._cow_control(batch, obs)
-            if ctl["keys"] == 0:
+        """Copy-on-write epoch: the shared core (CowEpoch) plans it; an
+        empty batch still commits, so the ledger advances past its LSNs."""
+        with CowEpoch(self.spark, self.table, self.cfg).plan(raw, epoch) as ep:
+            ctl = ep["ctl"]
+            if ep["new_state"] is None:
                 self.table.commit_epoch(
                     epoch,
                     empty_df(self.spark, self._state_schema()),
@@ -537,29 +745,16 @@ class CdcIngestJob:
                     {"events_in": 0, "keys": 0},
                 )
                 return {"epoch": epoch, "keys": 0}
-            merged, hot, kept, new_schema, merge_anti = self._cow_merge(batch, ctl)
-            new_state = self._cow_write(merged, hot, ctl["keys_by_bucket"])
-            self._last_epoch_plan = new_state  # plan-shape introspection
-            metrics = {
-                "storage": "cow",
-                "keys": ctl["keys"],
-                "deletes_in_batch": ctl["deletes"],
-                "files_rewritten": len(hot),
-                "files_kept": sum(len(v) for v in kept.values()),
-                "control": ctl["control"],
-                "merge_anti": merge_anti,
-                "dedup": strategy,
-                "duration_prepare_s": round(time.time() - t0, 3),
-            }
+            self._last_epoch_plan = ep["new_state"]  # plan-shape introspection
             committed = self.table.commit_epoch(
                 epoch,
-                new_state,
+                ep["new_state"],
                 ctl["touched"],
                 lsn_lo,
                 lsn_hi,
-                new_schema,
-                metrics,
-                kept_files=kept,
+                ep["schema"],
+                {**ep["metrics"], "duration_prepare_s": round(time.time() - t0, 3)},
+                kept_files=ep["kept"],
             )
             return {
                 "epoch": epoch,
@@ -568,166 +763,6 @@ class CdcIngestJob:
                 "committed": committed,
                 "seconds": round(time.time() - t0, 3),
             }
-        finally:
-            batch.unpersist()
-            # Drop the hash prefilter's executor copies now, not at GC time
-            # (up to ~128 MB/epoch would linger nondeterministically).
-            release_prefilter_broadcasts()
-
-    def _cow_control(self, batch: DataFrame, obs: Observation | None) -> dict:
-        """The epoch's one bounded control pass over the persisted batch:
-        key/delete counts, touched buckets and — while collectable — the
-        per-bucket sorted key lists that drive file pruning.
-
-        - ``groupby-collect`` (``obs`` is None): a groupBy(bucket) collect
-          of ≤ n_buckets rows, each key list capped at
-          ``file_prune_max_keys``+1 elements so an oversized bucket
-          degrades to whole-bucket rewrite instead of unbounded driver
-          transfer.
-        - ``observe-count``: the counts ride the cache materialization as
-          the Observation ``obs`` — one count() scalar round trip, no
-          per-bucket aggregate (profiled: the groupBy+collect leg cost
-          ~14s per 8M-event epoch at 4 executors).
-        - ``observe-collect``: the observation proved the key set
-          collectable although the lagged count said otherwise (the first
-          incremental epoch after a large backfill). Without the key lists
-          plan_cow_merge would rewrite every touched bucket in full, so
-          one aggregate over the cached batch buys the pruning back."""
-        lim = self.cfg.file_prune_max_keys
-        key_list = F.slice(
-            F.sort_array(F.collect_set(F.col(self.table.meta["bucket_by"]))),
-            1,
-            lim + 1,
-        ).alias("key_list")
-        if obs is None:
-            rows = (
-                batch.groupBy(BUCKET_COL)
-                .agg(
-                    F.count(F.lit(1)).alias("keys"),
-                    F.sum((F.col(schemas.OP_COL) == "D").cast("long")).alias(
-                        "deletes"
-                    ),
-                    key_list,
-                )
-                .collect()
-            )
-            ctl = {
-                "keys": sum(int(r["keys"]) for r in rows),
-                "deletes": sum(int(r["deletes"] or 0) for r in rows),
-                "touched": [int(r[BUCKET_COL]) for r in rows],
-                "control": "groupby-collect",
-            }
-        else:
-            batch.count()  # one pass: materialize cache + fire observe
-            om = obs.get
-            ctl = {
-                "keys": int(om.get("keys") or 0),
-                "deletes": int(om.get("deletes") or 0),
-                "touched": sorted(int(b) for b in (om.get("buckets") or [])),
-                "control": "observe-count",
-            }
-            rows = None
-            if (
-                self.cfg.file_granular_cow
-                and 0 < ctl["keys"] <= lim
-                and self.table.has_live_files()
-            ):
-                rows = batch.groupBy(BUCKET_COL).agg(key_list).collect()
-                ctl["control"] = "observe-collect"
-        # A missing bucket entry means "unknown" → plan_cow_merge rewrites
-        # that whole bucket; buckets whose key set overflowed the slice cap
-        # are simply left out.
-        ctl["keys_by_bucket"] = (
-            {
-                str(int(r[BUCKET_COL])): list(r["key_list"])
-                for r in rows
-                if r["key_list"] is not None and len(r["key_list"]) <= lim
-            }
-            if rows is not None and ctl["keys"] <= lim
-            else None
-        )
-        return ctl
-
-    def _cow_merge(self, batch: DataFrame, ctl: dict) -> tuple:
-        """The merge plan: hot files, schema evolution and the survivor
-        rung, then merge_apply. Returns (merged, hot, kept, new_schema,
-        merge_anti)."""
-        hot, kept = self.table.plan_cow_merge(
-            ctl["touched"], ctl["keys_by_bucket"], self.cfg.max_files_per_bucket
-        )
-        # Schema evolution: union-by-name the batch's payload columns
-        # into the table schema (additive only).
-        new_schema = schemas.evolve(
-            self.table.current_schema(),
-            batch.drop(schemas.LSN_COL, schemas.OP_COL, BUCKET_COL).schema,
-        )
-        # Type-widening evolution: both merge sides are cast to the
-        # evolved schema EXPLICITLY (the rewritten files carry the wide
-        # type; untouched narrow files upcast at read under the wide
-        # table schema) — the union must never rely on implicit coercion.
-        snapshot = schemas.align_types(
-            self.table.read_files(self.spark, hot), new_schema
-        )
-        batch_al = schemas.align_types(batch.drop(BUCKET_COL), new_schema)
-        # The survivor ladder (operators/merge.survivors_anti_join), by the
-        # epoch's exact key count: broadcast → hash prefilter → SMJ.
-        if ctl["keys"] <= self.cfg.broadcast_max_rows:
-            merge_anti = "broadcast"
-        elif ctl["keys"] <= self.cfg.merge_hash_prefilter_max_keys:
-            merge_anti = "hash"
-        else:
-            merge_anti = "smj"
-        merged = merge_apply(
-            snapshot,
-            batch_al,
-            key_cols=schemas.KEY_COLS,
-            broadcast_batch=merge_anti == "broadcast",
-            hash_prefilter=merge_anti == "hash",
-        )
-        return merged, hot, kept, new_schema, merge_anti
-
-    def _cow_write(
-        self, merged: DataFrame, hot: list, keys_by_bucket: dict | None
-    ) -> DataFrame:
-        """The range-clustered write plan. The bucket is re-derived from
-        conv_id (deterministic), then the write is RANGE-clustered on
-        (bucket, key): each output file covers a tight key interval, which
-        is exactly what makes the next epoch's file pruning selective.
-
-        Range clustering WITHOUT repartitionByRange: its RangePartitioner
-        samples the child plan, which here is the merge itself — the hot
-        set would be scanned and merged TWICE per epoch (measured: the
-        sampling job costs about as much as the exchange map stage), plus
-        one extra driver-serial job. The epoch already knows the key
-        distribution — hot files' footer stats + the control pass's batch
-        key lists — so split points are computed driver-side and each row
-        is routed to its range's exact reducer (operators/rangewrite.py).
-        Deterministic output placement, merge evaluated exactly once."""
-        key_col = self.table.meta["bucket_by"]
-        new_state = merged.withColumn(
-            BUCKET_COL, bucket_expr(self.table.n_buckets, key_col)
-        )
-        n_parts = self.cfg.write_partitions or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        atoms = self.table.write_atoms(hot)
-        if keys_by_bucket is not None:
-            atoms += [
-                (int(b), k, 1.0) for b, ks in keys_by_bucket.items() for k in ks
-            ]
-        if atoms:
-            bounds = plan_range_bounds(atoms, n_parts)
-            new_state = assign_range_partition(
-                new_state, bounds, n_parts, BUCKET_COL, key_col
-            )
-        else:
-            # No stats at all (first epoch with an over-cap key set): fall
-            # back to sampled range partitioning — correctness identical,
-            # just pays the sampling pass this once.
-            new_state = new_state.repartitionByRange(
-                n_parts, F.col(BUCKET_COL), F.col(key_col)
-            )
-        return new_state.sortWithinPartitions(BUCKET_COL, key_col)
 
     def _state_schema(self):
         from pyspark.sql import types as T

@@ -6,19 +6,26 @@ ETL/lambda/trigger_03_batch_job.py:10-54): here the file-arrival trigger is the
 Structured Streaming file source discovering new WAL segments, and the
 per-arrival unit of work is ``foreachBatch(batch_df, epoch_id)``.
 
+Each micro-batch runs the same copy-on-write epoch core as the batch job
+(plans/ingest.CowEpoch): LWW dedup → normalize → bucket, the bounded control
+pass, the merge against only the hot files of the touched buckets with both
+sides aligned to the evolved schema, and the stats-routed range write. What
+differs is the merge flavour: micro-batches are file-granular and NOT
+guaranteed lsn-contiguous, so the table stores ``lsn`` + ``op`` per row and
+the merge is the LSN-versioned LWW (operators/merge.merge_apply_versioned): a
+re-delivered or out-of-order event can never regress a newer row, and deletes
+persist as tombstones that straggler events older than the delete still lose
+to. The commit's lsn range is the micro-batch's own, taken from the control
+pass.
+
 Exactly-once composition (SURVEY.md §2.5 T2/T4/T6):
 - the streaming **checkpointLocation** offset log tracks which WAL files each
   epoch consumed (the built-in upgrade of the reference's metadata.json
   cursor, ETL/glue/arxiv_feed.py:31-34);
 - on restart, Spark re-delivers the last uncommitted epoch with the SAME
   epoch_id → ``ParquetSnapshotTable.is_committed(epoch)`` makes the re-apply
-  a no-op (idempotent sink);
-- unlike the sequential batch epoch loop (plans/ingest.py), micro-batches are
-  file-granular and NOT guaranteed lsn-contiguous, so the table stores
-  ``lsn`` + ``op`` per row and the merge is the LSN-versioned LWW
-  (operators/merge.merge_apply_versioned): a re-delivered or out-of-order
-  event can never regress a newer row, and deletes persist as tombstones
-  that straggler events older than the delete still lose to.
+  a no-op (idempotent sink), provided the committed manifest carries this
+  query's checkpoint id.
 
 At scale this is the deployment mode for a live binlog: the batch job
 (CdcIngestJob) is the backfill/replay tool over the same table format.
@@ -36,11 +43,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from transcript_cdc import schemas
-from transcript_cdc.functions.normalize import normalize_text, normalize_text_sql
-from transcript_cdc.operators.dedup import lww_dedup
-from transcript_cdc.operators.merge import merge_apply_versioned
 from transcript_cdc.plans.control import JobControl
-from transcript_cdc.sources.lake import BUCKET_COL, ParquetSnapshotTable, bucket_expr
+from transcript_cdc.plans.ingest import CowEpoch, IngestConfig
+from transcript_cdc.sources.lake import ParquetSnapshotTable
 
 
 class DrainRequested(RuntimeError):
@@ -57,17 +62,12 @@ VERSIONED_TRANSCRIPT_SCHEMA = schemas.VERSIONED_TRANSCRIPT_SCHEMA
 
 @dataclass
 class StreamConfig:
+    """The streaming query's settings. The COW epoch core it shares with
+    the batch job runs with IngestConfig's defaults for everything else."""
+
     n_buckets: int = 16
     max_files_per_trigger: int = 8
     normalize: bool = True
-    arrow_normalizer: bool = True
-    write_partitions: int | None = None
-    # File-granular COW (same machinery as the batch path,
-    # plans/ingest.py): merge only the files whose key range intersects
-    # the micro-batch; carry provably-untouched files forward unread.
-    file_granular: bool = True
-    file_prune_max_keys: int = 200_000
-    max_files_per_bucket: int = 64
 
 
 class StreamingIngest:
@@ -171,117 +171,36 @@ class StreamingIngest:
                 )
             return {"epoch": int(epoch_id), "skipped": "already-committed"}
         t0 = time.time()
-
-        batch = batch_df
-        if self.cfg.normalize and "text" in batch.columns:
-            norm = (
-                normalize_text("text")
-                if self.cfg.arrow_normalizer
-                else normalize_text_sql("text")
-            )
-            batch = batch.withColumn("text", norm)
-        batch = lww_dedup(batch, schemas.KEY_COLS, schemas.LSN_COL)
-        batch = batch.withColumn(
-            BUCKET_COL, bucket_expr(self.table.n_buckets, self.table.meta["bucket_by"])
-        ).persist()
-        try:
-            # ONE bounded control collect (≤ n_buckets rows) yields the key
-            # count, the batch's lsn range, the touched-bucket list AND —
-            # when the table has live files to prune against — each
-            # bucket's sorted distinct key set for file-granular COW.
-            # (Round 1 ran a global agg and a distinct-bucket scan as two
-            # separate driver jobs per micro-batch and rewrote every
-            # touched bucket in full.) Gates mirror plans/ingest.py: the
-            # previous commit's key count predicts collectability (lagged),
-            # and the slice caps worst-case driver transfer.
-            key_col = self.table.meta["bucket_by"]
-            lim = self.cfg.file_prune_max_keys
-            last_keys = int(
-                ((self.table.last_committed() or {}).get("metrics") or {}).get(
-                    "keys"
-                )
-                or 0
-            )
-            collect_keys = (
-                self.cfg.file_granular
-                and last_keys <= lim
-                and self.table.has_live_files()
-            )
-            aggs = [
-                F.count(F.lit(1)).alias("keys"),
-                F.min("lsn").alias("lsn_lo"),
-                F.max("lsn").alias("lsn_hi"),
-            ]
-            if collect_keys:
-                aggs.append(
-                    F.slice(
-                        F.sort_array(F.collect_set(F.col(key_col))), 1, lim + 1
-                    ).alias("key_list")
-                )
-            brows = batch.groupBy(BUCKET_COL).agg(*aggs).collect()
-            n_keys = sum(int(r["keys"]) for r in brows)
-            if n_keys == 0:
+        # The window dedup is pinned: "auto" keys its gate on the batch
+        # job's LSN window size, which a file-sized micro-batch lacks.
+        cfg = IngestConfig(normalize=self.cfg.normalize, dedup_strategy="window")
+        core = CowEpoch(self.spark, self.table, cfg, versioned=True)
+        with core.plan(batch_df, epoch_id) as ep:
+            ctl = ep["ctl"]
+            if ep["new_state"] is None:
                 return {"epoch": int(epoch_id), "keys": 0, "skipped": "empty"}
-            touched = [int(r[BUCKET_COL]) for r in brows]
-            lsn_lo = min(int(r["lsn_lo"]) for r in brows)
-            lsn_hi = max(int(r["lsn_hi"]) for r in brows)
-            keys_by_bucket = None
-            if collect_keys and n_keys <= lim:
-                keys_by_bucket = {
-                    str(int(r[BUCKET_COL])): list(r["key_list"])
-                    for r in brows
-                    if r["key_list"] is not None and len(r["key_list"]) <= lim
-                }
-            hot, kept = self.table.plan_cow_merge(
-                touched, keys_by_bucket, self.cfg.max_files_per_bucket
-            )
-
-            table_schema = self.table.current_schema()
-            new_schema = schemas.evolve(
-                table_schema, batch.drop(BUCKET_COL).schema
-            )
-            snapshot = self.table.read_files(self.spark, hot)
-            merged = merge_apply_versioned(
-                snapshot, batch.drop(BUCKET_COL), key_cols=schemas.KEY_COLS
-            )
-            # Range-cluster the write on (bucket, key) so every output file
-            # covers a tight key interval — what keeps the NEXT
-            # micro-batch's file pruning selective (same as the batch path).
-            new_state = merged.withColumn(
-                BUCKET_COL,
-                bucket_expr(self.table.n_buckets, self.table.meta["bucket_by"]),
-            )
-            n_parts = self.cfg.write_partitions or int(
-                self.spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            new_state = new_state.repartitionByRange(
-                n_parts, F.col(BUCKET_COL), F.col(key_col)
-            ).sortWithinPartitions(BUCKET_COL, key_col)
+            metrics = {
+                **ep["metrics"],
+                "mode": "streaming",
+                "checkpoint_id": ckpt_id,
+                "duration_prepare_s": round(time.time() - t0, 3),
+            }
             self.table.commit_epoch(
                 epoch_id,
-                new_state,
-                touched,
-                lsn_lo,
-                lsn_hi,
-                new_schema,
-                {
-                    "mode": "streaming",
-                    "checkpoint_id": ckpt_id,
-                    "keys": n_keys,
-                    "files_rewritten": len(hot),
-                    "files_kept": sum(len(v) for v in kept.values()),
-                    "duration_s": round(time.time() - t0, 3),
-                },
-                kept_files=kept,
+                ep["new_state"],
+                ctl["touched"],
+                int(ctl["lsn_lo"]),
+                int(ctl["lsn_hi"]),
+                ep["schema"],
+                metrics,
+                kept_files=ep["kept"],
             )
             return {
                 "epoch": int(epoch_id),
-                "keys": n_keys,
-                "touched_buckets": len(touched),
-                "files_rewritten": len(hot),
+                "keys": ctl["keys"],
+                "touched_buckets": len(ctl["touched"]),
+                "files_rewritten": metrics["files_rewritten"],
             }
-        finally:
-            batch.unpersist()
 
     # ---------- the query ----------
 
