@@ -3,17 +3,20 @@ checked INDEPENDENTLY with DuckDB over manifest-listed files (never
 job.final_state() checking itself).
 
 Covers: batch COW replay, blind re-run no-op, streaming availableNow drain,
-merge-on-read with auto-compaction, and the driver-contract entry().
+merge-on-read with auto-compaction, driver-local point reads
+(read_conversation) on all three tables, and the driver-contract entry().
 Run from anywhere: python scripts/verify_e2e.py  (~2 min, local[8])
 """
 
 import glob
 import json
 import os
+import random
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")  # sandbox: disk is ~8 MB/s
 
@@ -123,10 +126,48 @@ for col in ["conv_id", "turn_idx", "role", "text", "tool", "model"]:
     assert e == o, f"mor mismatch col {col}"
 print(f"MOR OK: {len(meng)} rows match oracle via independent DuckDB LWW fold (auto-compaction on)")
 
+# ---- point reads: read_conversation vs DuckDB over the same manifests ----
+POINT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "model", "tokens"]
+point_keys = random.Random(spec.seed).sample(sorted(orc["conv_id"].unique()), 20)
+sc = spark.sparkContext
+
+
+def check_point_reads(name, table, files, sql, cols=POINT_COLS):
+    """read_conversation rows of each seeded key == DuckDB's rows for it;
+    also counts the Spark jobs the reads launched (driver reads: 0)."""
+    sc.setJobGroup(f"verify-point-{name}", "point-read job count")
+    n_rows = 0
+    try:
+        for c in point_keys:
+            got = [tuple(r) for r in table.read_conversation(spark, c).select(*cols).collect()]
+            want = con.execute(sql.format(cols=", ".join(cols)), [files, c]).fetchall()
+            assert sorted(got, key=repr) == sorted(want, key=repr), f"{name} point read {c}"
+            n_rows += len(got)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(f"verify-point-{name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    print(f"POINT {name} OK: {len(point_keys)} keys, {n_rows} rows match DuckDB, {n_jobs} Spark jobs")
+
+
+by_key = "SELECT {cols} FROM read_parquet(?, union_by_name=true) WHERE conv_id = ?"
+check_point_reads("batch", job.table, files, by_key)
+# the streaming table keeps tombstones; its point read returns them too
+check_point_reads("stream", ing.table, sfiles, by_key, cols=["op", *POINT_COLS])
+check_point_reads(
+    "mor", mor_job.table, mfiles,
+    """
+    SELECT {cols} FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY conv_id, turn_idx ORDER BY lsn DESC) AS rn
+        FROM read_parquet(?, union_by_name=true))
+    WHERE rn = 1 AND op <> 'D' AND conv_id = ?
+    """,
+)
+
 # driver contract spot-check
 import importlib.util
 
-spec_mod = importlib.util.spec_from_file_location("entrymod", "/root/repo/__spark_entry__.py")
+spec_mod = importlib.util.spec_from_file_location("entrymod", os.path.join(REPO, "__spark_entry__.py"))
 em = importlib.util.module_from_spec(spec_mod)
 spec_mod.loader.exec_module(em)
 df = em.entry(spark)

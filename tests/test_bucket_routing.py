@@ -8,8 +8,8 @@ tests pin:
 - ``py_xxhash64`` equals ``F.xxhash64`` and ``bucket_of`` equals
   ``bucket_expr`` on every key of a set that covers each XXH64 code path
   (empty, 1-3 bytes, 4-7, 8-31, 32+, non-ASCII, emoji) for several N;
-- ``bucket_of`` launches no Spark job, and a COW point read launches one
-  (the collect);
+- ``bucket_of`` launches no Spark job, and neither does collecting a COW
+  point read (the driver reads the pruned files into a LocalRelation);
 - after ``rebucket(new_n)`` every key routes to the bucket that holds its
   rows, and point reads return the oracle's rows.
 """
@@ -121,7 +121,7 @@ def test_point_read_job_count_and_rebucket_routing(spark, feed, tmp_path):
     with _job_group(sc, "routing-point-read") as jobs:
         got = t.read_conversation(spark, conv).select("conv_id", "turn_idx", "text")
         assert _conv_rows(got) == _oracle_rows(oracle, conv)
-        assert jobs() == 1
+        assert jobs() == 0
 
     res = t.rebucket(spark, 7)
     assert res["committed"] and t.n_buckets == 7

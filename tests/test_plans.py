@@ -4,7 +4,8 @@ The §4 pushdown/plan story must be enforceable, not hand-captured prose:
 - top-k plans as TakeOrderedAndProject (distributed heap, never full sort);
 - the WAL range scan pushes lsn bounds into the parquet scan;
 - dimension joins broadcast the small side (no shuffle of the fact side);
-- the bucket-pruned COW point read has NO exchange at all;
+- the bucket-pruned COW point read is a driver-built LocalTableScan (no
+  scan, no exchange) over exactly the manifest-pruned files;
 - the MOR resolved read (bucket-local fold) has NO parquet FileScan and
   NO data exchange — its only exchange moves the ≤n_buckets file-list rows;
 - the declarative window fold and the bucket-local fold agree row-for-row.
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 
 from transcript_cdc.datagen import StreamSpec, write_change_feed
 from transcript_cdc.plans.ingest import CdcIngestJob, IngestConfig
+from transcript_cdc.sources import lake
 from transcript_cdc.sources.changes import ChangeFeed
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
@@ -105,25 +107,31 @@ def test_dim_join_broadcasts_small_side(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_bucket_pruned_point_read_has_no_exchange(spark, cow_job):
+def test_bucket_pruned_point_read_has_no_exchange(spark, cow_job, monkeypatch):
+    t = cow_job.table
     conv = cow_job.final_state().select("conv_id").first()["conv_id"]
-    df = cow_job.table.read_conversation(spark, conv)
+    opened = []
+    read = lake._read_conformed
+
+    def spy(path, target, predicate=None):
+        opened.append(path)
+        return read(path, target, predicate)
+
+    monkeypatch.setattr(lake, "_read_conformed", spy)
+    df = t.read_conversation(spark, conv)
     p = plan_of(df)
-    assert "Exchange" not in p  # pure scan+filter of one bucket's files
-    assert "PushedFilters" in p and "EqualTo(conv_id," in p
-    # layered pruning: the scan reads exactly the manifest-pruned file set
-    # (files_for_key: bucket routing + per-file min/max key stats), which
-    # is contained in the target bucket's manifested files
-    state, _ = cow_job.table._current_state()
-    b = cow_job.table.bucket_of(conv)
-    n_inputs = {p.replace("file://", "").replace("file:", "") for p in df.inputFiles()}
-    assert n_inputs == {
-        os.path.join(cow_job.table.root, f)
-        for f in cow_job.table.files_for_key(conv, b)
+    # the driver read the rows: a local relation, no scan and no exchange
+    assert "LocalTableScan" in p
+    assert "Exchange" not in p and "FileScan" not in p
+    # layered pruning: the driver opened exactly the manifest-pruned file
+    # set (files_for_key: bucket routing + per-file min/max key stats),
+    # which is contained in the target bucket's manifested files
+    state, _ = t._current_state()
+    b = t.bucket_of(conv)
+    assert set(opened) == {
+        os.path.join(t.root, f) for f in t.files_for_key(conv, b)
     }
-    assert n_inputs <= {
-        os.path.join(cow_job.table.root, f) for f in state[str(b)]
-    }
+    assert set(opened) <= {os.path.join(t.root, f) for f in state[str(b)]}
 
 
 def test_mor_resolved_read_has_no_data_exchange(spark, mor_job):

@@ -106,8 +106,8 @@ def test_delta_files_are_key_sorted(mor_job):
 
 
 def test_point_read_unaffected_by_budget(spark, mor_job):
-    """The point-read path (files_override/key_values) skips range
-    planning; a conversation read returns identical rows regardless."""
+    """A point read (the driver fold, or its files_override/key_values
+    Spark fallback) skips range planning; it returns rows regardless."""
     t = mor_job.table
     conv = t.read_resolved(spark, max_fold_bytes=None).select("conv_id").first()[0]
     got = _rows(t.read_conversation(spark, conv))

@@ -152,23 +152,56 @@ def _plan_key_ranges(files, key_col, max_bytes):
     return ranges
 
 
+def _read_conformed(path, target, predicate=None):
+    """Read one parquet file as a pyarrow.Table with the ``target`` schema.
+
+    The footer is opened once: the dataset fragment keeps the metadata it
+    read for the file's schema and scans with it, pruning row groups whose
+    footer stats cannot match ``predicate`` (a pyarrow.dataset expression)
+    before any data I/O, then filtering rows exactly. Only ``target``'s
+    columns are read (intersected with the file's own — older files may
+    lack evolved columns); missing columns are null-padded (additive schema
+    evolution) and every column is cast to its target type (type widening,
+    INT96 nanoseconds to microseconds).
+    """
+    import pyarrow as _pa
+    import pyarrow.dataset as _ds
+    import pyarrow.fs as _fs
+
+    frag = _ds.ParquetFileFormat().make_fragment(
+        path, filesystem=_fs.LocalFileSystem()
+    )
+    have = set(frag.physical_schema.names)
+    t = frag.to_table(
+        columns=[f.name for f in target if f.name in have], filter=predicate
+    )
+    return _pa.table(
+        [
+            t[f.name].cast(f.type) if f.name in have
+            else _pa.nulls(t.num_rows, f.type)
+            for f in target
+        ],
+        schema=target,
+    )
+
+
 def _arrow_lww_fold(files, target, key_cols, lsn_col, key_filter=None,
                     key_range=None):
-    """Pure-Arrow last-writer-wins fold of a delta-file chain (worker-side).
+    """Pure-Arrow last-writer-wins fold of a delta-file chain (run in fold
+    tasks, and in the driver for a point read).
 
-    Reads each file, null-pads columns the older files lack (additive
-    schema evolution), concatenates, sorts by (key..., lsn) ascending (lsn
-    is globally unique → total order) and keeps each key group's LAST row
-    via an adjacent-inequality boundary mask. Tombstones are KEPT — the
-    caller decides (resolved read drops them; the changelog classifies
-    them). Returns a pyarrow.Table with the ``target`` schema.
+    Reads each file conformed to ``target`` (_read_conformed), concatenates,
+    sorts by (key..., lsn) ascending (lsn is globally unique → total order)
+    and keeps each key group's LAST row via an adjacent-inequality boundary
+    mask. Tombstones are KEPT — the caller decides (resolved read drops
+    them; the changelog classifies them). Returns a pyarrow.Table with the
+    ``target`` schema.
 
-    Projection pushdown: only ``target``'s columns are read from parquet
-    (intersected with each file's own schema — older files may lack
-    evolved columns, which null-pad as before). Callers prune ``target``
-    to key/version/projected columns (read_resolved(columns=...)), so a
-    narrow read of a wide table skips the untouched columns' IO entirely —
-    the custom-operator analogue of Catalyst's ReadSchema pruning.
+    Projection pushdown: only ``target``'s columns are read from parquet.
+    Callers prune ``target`` to key/version/projected columns
+    (read_resolved(columns=...)), so a narrow read of a wide table skips the
+    untouched columns' IO entirely — the custom-operator analogue of
+    Catalyst's ReadSchema pruning.
 
     ``key_filter``: optional {key_col: pyarrow array of wanted values} —
     restricts the fold to those keys (sound for LWW: a key's winner
@@ -176,75 +209,42 @@ def _arrow_lww_fold(files, target, key_cols, lsn_col, key_filter=None,
     into the parquet read as a row-group predicate, so key-sorted files
     (compacted bases are written key-sorted by this very fold) skip
     untouched row groups' IO entirely — the changelog's base-side gate.
+    Further columns' sets are applied in memory at the target types.
 
     ``key_range``: optional (lo_exclusive, hi_inclusive) on the FIRST key
     column (None = unbounded) — the ranged-fold slice (_plan_key_ranges).
     Sound for LWW for the same reason as key_filter; pushed down as a
-    row-group predicate and re-applied as an in-memory mask.
+    row-group and row predicate.
     """
     import pyarrow as _pa
     import pyarrow.compute as _pc
-    import pyarrow.parquet as _pq
+    import pyarrow.dataset as _ds
 
-    if key_range is not None and key_range == (None, None):
-        key_range = None
-    read_kw = {}
     expr = None
-    try:
-        import pyarrow.dataset as _ds
+    if key_filter:
+        first = next(iter(key_filter))
+        expr = _ds.field(first).isin(key_filter[first])
+    if key_range is not None:
+        lo, hi = key_range
+        if lo is not None:
+            e = _ds.field(key_cols[0]) > lo
+            expr = e if expr is None else expr & e
+        if hi is not None:
+            e = _ds.field(key_cols[0]) <= hi
+            expr = e if expr is None else expr & e
 
-        if key_filter:
-            first = next(iter(key_filter))
-            expr = _ds.field(first).isin(key_filter[first])
-        if key_range is not None:
-            lo, hi = key_range
-            if lo is not None:
-                e = _ds.field(key_cols[0]) > lo
-                expr = e if expr is None else expr & e
-            if hi is not None:
-                e = _ds.field(key_cols[0]) <= hi
-                expr = e if expr is None else expr & e
-    except Exception:  # pragma: no cover — older pyarrow: in-memory only
-        expr = None
-    if expr is not None:
-        read_kw["filters"] = expr
-
-    want = [f.name for f in target]
-    tabs = []
-    for f in files:
-        have = set(_pq.read_schema(f).names)
-        t = _pq.read_table(f, columns=[c for c in want if c in have], **read_kw)
-        if key_filter:
-            mask = None
-            for c, vals in key_filter.items():
-                m = _pc.is_in(t[c], value_set=vals)
-                mask = m if mask is None else _pc.and_(mask, m)
-            t = t.filter(mask)
-        if key_range is not None:
-            lo, hi = key_range
-            col = t[key_cols[0]]
-            mask = None
-            if lo is not None:
-                mask = _pc.greater(col, lo)
-            if hi is not None:
-                m = _pc.less_equal(col, hi)
-                mask = m if mask is None else _pc.and_(mask, m)
-            if mask is not None:
-                t = t.filter(mask)
-        arrays = []
-        for fld in target:
-            if t.schema.get_field_index(fld.name) >= 0:
-                arrays.append(t[fld.name].cast(fld.type))
-            else:
-                arrays.append(_pa.nulls(len(t), fld.type))
-        tabs.append(_pa.table(arrays, schema=target))
+    tabs = [_read_conformed(f, target, expr) for f in files]
     full = (
         _pa.concat_tables(tabs).combine_chunks()
         if tabs
-        else _pa.table(
-            {f.name: _pa.nulls(0, f.type) for f in target}, schema=target
-        )
+        else target.empty_table()
     )
+    if key_filter and len(key_filter) > 1:
+        mask = None
+        for c, vals in list(key_filter.items())[1:]:
+            m = _pc.is_in(full[c], value_set=vals)
+            mask = m if mask is None else _pc.and_(mask, m)
+        full = full.filter(mask)
     n = full.num_rows
     if n == 0:
         return full
@@ -494,21 +494,62 @@ class ParquetSnapshotTable:
                 out.append(f)
         return out
 
-    def read_conversation(
-        self, spark: SparkSession, conv_id: str, with_bucket_col: bool = False
-    ) -> DataFrame:
+    def read_conversation(self, spark: SparkSession, conv_id: str) -> DataFrame:
         """Point-read one conversation touching ONLY the manifest-pruned
         subset of its bucket's files — the 100TB lookup path. Pruning is
         layered: bucket routing (no I/O outside one bucket), then per-file
         min/max key stats (files_for_key — no I/O outside overlapping
-        files), then the conv_id filter prunes row groups within them."""
+        files), then the conv_id predicate prunes row groups within them.
+
+        The read runs in the driver: pyarrow reads the pruned files
+        conformed to the current schema (null-padded added columns, widened
+        types) and the result is handed to Spark as an Arrow table, so the
+        DataFrame plans a LocalRelation and collecting it launches no Spark
+        job. Rows are the same as ``read_snapshot`` filtered to the key
+        (tombstone rows of a streaming table included). When the pruned
+        files hold more than DEFAULT_MAX_FOLD_BYTES (uncompressed) the read
+        falls back to a Spark scan of them, so a driver read stays bounded."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         b = self.bucket_of(conv_id)
-        df = self.read_files(spark, self.files_for_key(conv_id, b))
-        if with_bucket_col:
-            df = df.withColumn(
-                BUCKET_COL, bucket_expr(self.n_buckets, self.meta["bucket_by"])
+        files = self.files_for_key(conv_id, b)
+        key_col = self.meta["bucket_by"]
+        if self._files_bytes(files, self._fold_stats()) > DEFAULT_MAX_FOLD_BYTES:
+            return self.read_files(spark, files).filter(
+                F.col(key_col) == F.lit(conv_id)
             )
-        return df.filter(F.col(self.meta["bucket_by"]) == F.lit(conv_id))
+        schema = self.current_schema()
+        target = to_arrow_schema(schema)
+        tabs = [
+            _read_conformed(
+                os.path.join(self.root, f), target, ds.field(key_col) == conv_id
+            )
+            for f in files
+        ]
+        tab = pa.concat_tables(tabs) if tabs else target.empty_table()
+        # nullable throughout, as Spark's parquet scan reports the columns
+        return spark.createDataFrame(
+            tab, schema=T.StructType([T.StructField(f.name, f.dataType) for f in schema])
+        )
+
+    def _files_bytes(self, rel_files: Sequence[str], stats: dict) -> int:
+        """Uncompressed bytes of manifested files, from the manifests'
+        footer stats (``stats`` = _fold_stats). Pre-"bytes" manifests fall
+        back to the file size (compressed) — a conservative under-estimate;
+        the worker-side ranged fold still bounds memory via its own footer
+        reads."""
+        tot = 0
+        for r in rel_files:
+            b = (stats.get(r) or {}).get("bytes")
+            if b is None:
+                try:
+                    b = os.path.getsize(os.path.join(self.root, r))
+                except OSError:
+                    b = 0
+            tot += int(b)
+        return tot
 
     def read_files(
         self, spark: SparkSession, rel_paths: Sequence[str]
@@ -1076,8 +1117,8 @@ class MergeOnReadTable(ParquetSnapshotTable):
         the fold to an explicit manifest-pruned file list; ``key_values``
         restricts it to rows whose bucket_by column is in the set (sound
         for LWW — a key's winner depends only on that key's own rows) and
-        is pushed into the parquet read as a row-group predicate. Both are
-        the point-read path (read_conversation). ``columns`` projects the
+        is pushed into the parquet read as a row-group predicate. Both serve
+        read_conversation when its pruned chain is over the driver budget. ``columns`` projects the
         output AND prunes the fold's parquet reads to key + version +
         projected columns (sound: the LWW winner is decided by key+lsn
         alone, never by a dropped payload column)."""
@@ -1089,31 +1130,17 @@ class MergeOnReadTable(ParquetSnapshotTable):
             )
         state, schema = self._current_state(as_of_epoch)
         wanted = None if buckets is None else {str(int(b)) for b in buckets}
-        # Point reads (files_override/key_values) are tiny by construction:
-        # skip range planning entirely.
+        # A point read (files_override/key_values) folds one key's rows,
+        # however large its files: skip range planning entirely.
         ranged = max_fold_bytes is not None and files_override is None
         stats = self._fold_stats(as_of_epoch) if ranged else {}
-
-        def _chain_bytes(rel_files: list[str]) -> int:
-            tot = 0
-            for r in rel_files:
-                b = (stats.get(r) or {}).get("bytes")
-                if b is None:
-                    # pre-"bytes" manifests: file size (compressed) is a
-                    # conservative under-estimate; the worker-side ranged
-                    # fold still bounds memory via its own footer reads
-                    try:
-                        b = os.path.getsize(os.path.join(self.root, r))
-                    except OSError:
-                        b = 0
-                tot += int(b)
-            return tot
 
         def _n_shards(rel_files: list[str]) -> int:
             if not ranged:
                 return 1
             return max(
-                1, min(64, -(-_chain_bytes(rel_files) // int(max_fold_bytes)))
+                1,
+                min(64, -(-self._files_bytes(rel_files, stats) // int(max_fold_bytes))),
             )
 
         if files_override is not None:
@@ -1212,27 +1239,42 @@ class MergeOnReadTable(ParquetSnapshotTable):
         ).repartition(max(len(items), 1), F.col("bucket"), F.col("shard"))
         return files_df.mapInArrow(fold, schema=out_schema)
 
-    def read_conversation(
-        self, spark: SparkSession, conv_id: str, with_bucket_col: bool = False
-    ) -> DataFrame:
+    def read_conversation(self, spark: SparkSession, conv_id: str) -> DataFrame:
         """Point read with the LWW fold applied (live rows), pruned at
         every layer: bucket routing → per-file min/max key stats
         (files_for_key skips delta files whose range can't contain the
         conversation) → a key row-group predicate inside the fold's
         parquet reads. Sound under LWW: a key's winner depends only on
-        its own rows, and every file that can contain the key is kept."""
+        its own rows, and every file that can contain the key is kept.
+
+        The fold runs in the driver (_arrow_lww_fold over the pruned chain,
+        tombstones and ``lsn``/``op`` dropped as in read_resolved) and the
+        result is handed to Spark as an Arrow table, so the DataFrame plans
+        a LocalRelation and collecting it launches no Spark job. When the
+        pruned chain holds more than DEFAULT_MAX_FOLD_BYTES (uncompressed)
+        the fold runs as a Spark task instead (_read_resolved_local), so a
+        driver read stays bounded."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         b = self.bucket_of(conv_id)
-        df = self._read_resolved_local(
-            spark,
-            buckets=[b],
-            files_override=self.files_for_key(conv_id, b),
-            key_values=[conv_id],
-        )
-        if with_bucket_col:
-            df = df.withColumn(
-                BUCKET_COL, bucket_expr(self.n_buckets, self.meta["bucket_by"])
+        files = self.files_for_key(conv_id, b)
+        if self._files_bytes(files, self._fold_stats()) > DEFAULT_MAX_FOLD_BYTES:
+            return self._read_resolved_local(
+                spark, buckets=[b], files_override=files, key_values=[conv_id]
             )
-        return df.filter(F.col(self.meta["bucket_by"]) == F.lit(conv_id))
+        schema = self.current_schema()
+        tab = _arrow_lww_fold(
+            [os.path.join(self.root, f) for f in files],
+            to_arrow_schema(schema),
+            self.key_cols,
+            "lsn",
+            key_filter={self.meta["bucket_by"]: pa.array([conv_id])},
+        )
+        out = T.StructType([f for f in schema.fields if f.name not in ("lsn", "op")])
+        tab = tab.filter(pc.not_equal(tab["op"], pa.scalar("D")))
+        return spark.createDataFrame(tab.select(out.fieldNames()), schema=out)
 
     # ---------- incremental changelog (CDC tap) ----------
 
