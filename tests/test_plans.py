@@ -93,6 +93,35 @@ def test_wal_range_scan_pushes_lsn_filter(spark, mor_job):
     assert "GreaterThan(lsn,100)" in p and "LessThanOrEqual(lsn,500)" in p
 
 
+def test_wal_range_scan_opens_only_overlapping_segments(spark, tmp_path):
+    """An epoch slice scans only the segments whose lsn range overlaps it
+    (per-file footer min/max), under the whole feed's merged schema, and
+    returns exactly the whole-feed filter's rows — on a feed whose rows
+    are shuffled inside each file and whose later files add columns."""
+    import pyarrow.parquet as pq
+
+    spec = StreamSpec(
+        n_conversations=60, seed=13, events_per_file=150,
+        out_of_order_fraction=0.5, evolution_at=0.5,
+    )
+    info = write_change_feed(spec, str(tmp_path / "feed"))
+    assert len(info["files"]) >= 4
+    evo = info["evolution_lsn"]
+    lsns = {f: pq.read_table(f, columns=["lsn"])["lsn"].to_pylist() for f in info["files"]}
+    feed = ChangeFeed(spark, str(tmp_path / "feed"))
+    whole = feed.read()
+    for lo, hi in [(-1, 99), (evo - 80, evo + 80), (evo, info["n_events"] - 1), (149, 150)]:
+        df = feed.read_range(lo, hi)
+        want = {f for f, ls in lsns.items() if any(lo < v <= hi for v in ls)}
+        assert {os.path.basename(p) for p in df.inputFiles()} == {
+            os.path.basename(f) for f in want
+        }, (lo, hi)
+        assert df.schema == whole.schema
+        expect = whole.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+        assert sorted(df.collect()) == sorted(expect.collect()), (lo, hi)
+    assert feed.max_lsn() == info["n_events"] - 1
+
+
 def test_dim_join_broadcasts_small_side(spark):
     orders = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
     nation = spark.read.parquet(os.path.join(SF_DIR, "nation.parquet"))

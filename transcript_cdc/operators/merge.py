@@ -17,10 +17,10 @@ LEFT ANTI supports a broadcast build of the (small, post-dedup) batch side —
 so the big snapshot side is scanned once with ZERO shuffle.
 
 When the batch is too large to broadcast, a MIDDLE regime broadcasts the
-batch's distinct xxhash64(key) longs and routes provably-untouched snapshot
-rows around the join entirely (survivors_anti_join below); only past that
-does the plan fall back to a sort-merge anti join on the composite key,
-which AQE skew-splits if needed.
+batch's xxhash64(key) longs grouped into top-bit hash buckets and routes
+provably-untouched snapshot rows around the join entirely
+(survivors_anti_join below); only past that does the plan fall back to a
+sort-merge anti join on the composite key, which AQE skew-splits if needed.
 The anti-join shape is kept deliberately for this regime too: its join
 RIGHT side is the batch's KEY COLUMNS ONLY, so the merge sorts a narrow
 relation plus the snapshot — an interleaved same-host A/B against the
@@ -41,38 +41,23 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# Internal columns of the hash-prefilter probe; a snapshot carrying any of
+# them is rejected (see survivors_anti_join).
 HASH_COL = "__kh"
-
-# Hash-prefilter broadcasts created by survivors_anti_join, strongest-ref
-# tracked so the epoch loop can release executor copies deterministically
-# once the epoch's write is committed (ADVICE r4: relying on GC-driven
-# ContextCleaner leaves up to ~128 MB/epoch resident for a nondeterministic
-# time over a long replay). Broadcast.unpersist() only drops EXECUTOR
-# copies — the driver value survives, so a still-lazy plan that probes the
-# filter later simply re-fetches; releasing early is always safe.
-_LIVE_PREFILTER_BROADCASTS: list = []
+HASH_BUCKET_COL = "__kh_bucket"
+HASH_SET_COL = "__kh_set"
+PREFILTER_COLS = (HASH_COL, HASH_BUCKET_COL, HASH_SET_COL)
 
 
-def release_prefilter_broadcasts() -> None:
-    """Unpersist every prefilter broadcast created since the last call.
-
-    The epoch loop (plans/ingest.py) calls this after the epoch's write is
-    committed — the plan is fully materialized by then, so the executor
-    copies are dead weight. Direct callers of survivors_anti_join get the
-    same cleanup lazily: the next build drains earlier entries (their plans
-    re-fetch from the driver if re-executed)."""
-    while _LIVE_PREFILTER_BROADCASTS:
-        bc = _LIVE_PREFILTER_BROADCASTS.pop()
-        try:
-            bc.unpersist()
-        except Exception:
-            pass  # SparkContext already stopped — nothing to release
+def hash_bucket_bits(n_keys: int) -> int:
+    """Top-bit count ``b`` of the prefilter's hash buckets: 2^b buckets of
+    16-32 key hashes each for an ``n_keys`` batch (at least 1 bit — a
+    long shift by 64 is a shift by 0 in the JVM)."""
+    return max(1, (max(n_keys, 1) // 32).bit_length())
 
 
 def survivors_anti_join(
@@ -82,6 +67,7 @@ def survivors_anti_join(
     *,
     broadcast_keys: bool = False,
     hash_prefilter: bool = False,
+    n_keys: int | None = None,
     prefilter_hash=None,
 ) -> DataFrame:
     """Snapshot rows whose key is NOT in the batch's key set (the merge's
@@ -97,27 +83,22 @@ def survivors_anti_join(
       cap at ~5.5M keys OOM-looped 6 GiB executors, CHANGES_r4.md #20).
     - ``hash_prefilter``: the middle regime (too many keys to broadcast
       as strings, far too few to justify shuffling the whole snapshot
-      payload through a sort-merge join). The batch's DISTINCT
-      ``xxhash64(key)`` longs are collected Arrow-side and shipped as a
-      SORTED numpy int64 array over ``sc.broadcast`` — exactly 8
-      bytes/key on each executor. (The obvious JVM alternative, a
-      broadcast hash JOIN on the hash column, was built first and
-      OOM-killed 6 GiB executors at 5.5M keys: LongHashedRelation's
-      sparse map + torrent blocks cost ~100+ bytes/key on top of the
-      merge's own buffers — `LongToUnsafeRowMap.readLongArray` heap
-      OOM, executor relaunch loop.) Each snapshot row probes the array
-      with a vectorized ``np.searchsorted`` in an Arrow-batched pandas
-      UDF — the one place Python touches the hot path, one int64 column
-      per row, O(log n) per probe. Rows whose key-hash misses the set
-      are PROVABLY not in the batch and are kept with ZERO shuffle;
-      only the hash hits (true hot keys + rare 64-bit collisions) pay
-      the exact sort-merge anti-join, so the SMJ exchanges a candidate
-      sliver instead of the full snapshot. Exact for ANY hash function:
-      a collision only enlarges the candidate set, never the survivor
-      result — ``prefilter_hash`` exists so tests can force heavy
-      collisions and prove it. NOTE: building the set runs one eager
-      (narrow, longs-only) Spark job at plan-construction time; the
-      epoch loop calls this on its already-persisted batch.
+      payload through a sort-merge join). The batch's ``xxhash64(key)``
+      longs, grouped by their top ``b`` bits into ``collect_set`` arrays
+      (one row per bucket, ~16-32 hashes each, ``b`` from the exact key
+      count ``n_keys``; None sizes for 2^19 keys), are broadcast — ~8
+      bytes/key plus a small per-bucket row, where a broadcast relation
+      with one row PER KEY OOM-killed 6 GiB executors at 5.5M keys
+      (~100+ bytes/key, CHANGES_r4.md #20). Each snapshot row joins its
+      bucket and tests ``array_contains``: a Catalyst expression run by
+      codegen, no Python worker. Hash misses are PROVABLY not in the
+      batch and are kept with ZERO shuffle; only the hits (true hot keys
+      + rare 64-bit collisions) pay the exact sort-merge anti-join. Exact
+      for ANY hash: a collision only enlarges the candidate set, never
+      the survivor result — ``prefilter_hash`` lets tests force heavy
+      collisions to prove it. The build is part of the returned plan, so
+      constructing it runs no Spark job, and Spark's broadcast lifecycle
+      releases it, as for the broadcast rung's relation.
     - neither: plain anti-join — Catalyst picks SMJ, exchanging +
       sorting the full snapshot payload. The fallback once even 8
       bytes/key would not fit driver/executor memory.
@@ -134,42 +115,41 @@ def survivors_anti_join(
         if prefilter_hash is not None
         else F.xxhash64(*[F.col(c) for c in key_cols])
     )
-    if HASH_COL in snapshot.columns:
-        # withColumn would silently overwrite the caller's column and
-        # corrupt the survivor split (and asserts vanish under python -O).
+    clash = [c for c in PREFILTER_COLS if c in snapshot.columns]
+    if clash:
+        # withColumn/join would silently overwrite or duplicate the
+        # caller's column and corrupt the survivor split (and asserts
+        # vanish under python -O).
         raise ValueError(
-            f"snapshot already has a {HASH_COL!r} column — rename it "
-            "before the hash-prefilter merge"
+            f"snapshot already has {clash!r} — rename before the "
+            "hash-prefilter merge"
         )
-    release_prefilter_broadcasts()  # drain any prior epoch's filter
-    hashes = (
-        batch.select(h.alias(HASH_COL)).distinct().toArrow()[HASH_COL]
-    ).to_numpy(zero_copy_only=False)
-    sorted_hashes = np.sort(hashes.astype(np.int64, copy=False))
-    bc = snapshot.sparkSession.sparkContext.broadcast(sorted_hashes)
-
-    @F.pandas_udf("boolean")
-    def _in_key_set(kh: pd.Series) -> pd.Series:
-        a = bc.value
-        v = kh.to_numpy()
-        if len(a) == 0:
-            return pd.Series(np.zeros(len(v), dtype=bool))
-        idx = np.minimum(np.searchsorted(a, v), len(a) - 1)
-        return pd.Series(a[idx] == v)
-
-    _LIVE_PREFILTER_BROADCASTS.append(bc)
-    # The split below consumes snap_h TWICE (kept_direct + candidates), so
-    # the snapshot scan and the one-int64-column probe UDF each run twice
-    # in the physical plan (two ArrowEvalPython nodes — pinned in
-    # tests/test_merge.py). Deliberate: persisting the full snapshot
-    # payload to dedupe the branches costs more memory than the second
-    # column-pruned scan + probe costs time (the probe is ~0.6 µs/row),
-    # and the A/B receipts for this regime (1.57-1.59x at 8M-event epochs,
-    # bench/ab_result_hash_prefilter.json) were measured WITH the double
-    # scan. Correctness is unaffected — both probes are deterministic.
-    snap_h = snapshot.withColumn(HASH_COL, _in_key_set(h))
-    kept_direct = snap_h.filter(~F.col(HASH_COL)).drop(HASH_COL)
-    candidates = snap_h.filter(F.col(HASH_COL)).drop(HASH_COL)
+    # Arithmetic shift: bucket ids are the signed top b bits, in
+    # [-2^(b-1), 2^(b-1)) — a dense range for the broadcast relation.
+    shift = 64 - hash_bucket_bits(1 << 19 if n_keys is None else n_keys)
+    hash_sets = (
+        batch.select(h.alias(HASH_COL))
+        .groupBy(F.shiftright(HASH_COL, shift).alias(HASH_BUCKET_COL))
+        .agg(F.collect_set(HASH_COL).alias(HASH_SET_COL))
+    )
+    # The split consumes the probed snapshot TWICE (kept_direct +
+    # candidates): two column-pruned scans. Deliberate: persisting the full
+    # snapshot payload costs more memory than the second scan costs time,
+    # and the regime's A/B receipts (1.57-1.59x at 8M-event epochs,
+    # bench/ab_result_hash_prefilter.json) were measured WITH it. Both
+    # branches reuse one bucket broadcast when ``batch`` is uncached
+    # (pinned in tests/test_merge.py); over a cached batch AQE does not
+    # reuse it (the second branch's InMemoryRelation gets new attribute
+    # ids), so each branch builds its own small copy. A miss has no bucket
+    # row (null set) or no equal hash in it.
+    probed = (
+        snapshot.withColumn(HASH_COL, h)
+        .withColumn(HASH_BUCKET_COL, F.shiftright(HASH_COL, shift))
+        .join(F.broadcast(hash_sets), on=HASH_BUCKET_COL, how="left")
+    )
+    hit = F.coalesce(F.array_contains(HASH_SET_COL, F.col(HASH_COL)), F.lit(False))
+    kept_direct = probed.filter(~hit).drop(*PREFILTER_COLS)
+    candidates = probed.filter(hit).drop(*PREFILTER_COLS)
     survivors_c = candidates.join(batch_keys, on=key_cols, how="left_anti")
     return kept_direct.unionByName(survivors_c)
 
@@ -182,6 +162,7 @@ def merge_apply(
     broadcast_batch: bool | None = None,
     drop_cols: Sequence[str] = ("lsn",),
     hash_prefilter: bool = False,
+    n_keys: int | None = None,
     prefilter_hash=None,
 ) -> DataFrame:
     """Apply a LWW-dedup'd change batch to a snapshot; return the new state.
@@ -191,7 +172,8 @@ def merge_apply(
     Result schema is the union-by-name of both payload schemas; op/lsn and
     any `drop_cols` are dropped. Deterministic: result content depends only
     on the two inputs, never on partitioning. ``hash_prefilter`` selects
-    the middle survivor regime — see :func:`survivors_anti_join`.
+    the middle survivor regime, sized by the batch's key count ``n_keys``
+    — see :func:`survivors_anti_join`.
     """
     key_cols = list(key_cols)
     survivors = survivors_anti_join(
@@ -200,6 +182,7 @@ def merge_apply(
         key_cols,
         broadcast_keys=bool(broadcast_batch),
         hash_prefilter=hash_prefilter,
+        n_keys=n_keys,
         prefilter_hash=prefilter_hash,
     )
     upserts = batch.filter(F.col(op_col) != F.lit("D")).drop(

@@ -23,9 +23,10 @@ copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
                            (plan_cow_merge); untouched files carry forward
                            unread. Batch: survivor anti join, by key count
                            ≤ broadcast_max_rows → broadcast; ≤
-                           merge_hash_prefilter_max_keys → broadcast key
-                           hashes, only hash hits pay the exact SMJ; beyond
-                           → SMJ. Streaming: the versioned merge, one
+                           merge_hash_prefilter_max_keys → broadcast the
+                           bucketed key hashes (built inside the write
+                           query), only hash hits pay the exact SMJ;
+                           beyond → SMJ. Streaming: the versioned merge, one
                            max-lsn window over snapshot ∪ batch.
     → range-cluster on (bucket, conv_id)   SHUFFLE 2, split points from the
                            hot files' footer stats + the batch key lists, so
@@ -60,7 +61,6 @@ from transcript_cdc.operators.dedup import lww_dedup, lww_dedup_clustered
 from transcript_cdc.operators.merge import (
     merge_apply,
     merge_apply_versioned,
-    release_prefilter_broadcasts,
     # Unused here; the benchmark tracer (perfbench/spans.py) patches this
     # module binding by name, so it stays until the tracer drops it.
     survivors_anti_join,  # noqa: F401
@@ -97,15 +97,14 @@ class IngestConfig:
     # survivors_anti_join): when the epoch's key count exceeds
     # broadcast_max_rows (full string keys won't fit executor memory —
     # a raised string cap OOM-looped 6 GiB executors, CHANGES_r4.md #20)
-    # but stays under this bound, ship the DISTINCT xxhash64(key) longs as
-    # a SORTED numpy int64 array over sc.broadcast — exactly 8 bytes/key
-    # on the driver and on each executor (16M keys = 128 MB; the ~100+
-    # bytes/key JVM LongHashedRelation alternative was built and
-    # OOM-rejected, CHANGES_r4.md #20) — and let the searchsorted probe
-    # route provably-untouched snapshot rows around the sort-merge anti
-    # join; only the hash hits pay the exact SMJ. Size against 8 B/key
-    # driver+executor headroom when raising it. Past this bound the
-    # ladder falls to full SMJ.
+    # but stays under this bound, broadcast the xxhash64(key) longs as
+    # top-bit hash buckets (one collect_set row per 16-32 hashes, ~8
+    # bytes/key plus a small per-bucket row, against the ~100+ bytes/key
+    # of the OOM-rejected one-row-per-key relation) and let an
+    # array_contains probe route provably-untouched snapshot rows around
+    # the sort-merge anti join; only the hash hits pay the exact SMJ.
+    # Size against that broadcast's executor and driver headroom when
+    # raising it. Past this bound the ladder falls to full SMJ.
     merge_hash_prefilter_max_keys: int = 16_000_000
     # True → exact in-epoch heavy-hitter probe (one extra Spark job per
     # epoch, per-key counts in the manifest). Default: salt from the
@@ -286,9 +285,6 @@ class CowEpoch:
             }
         finally:
             batch.unpersist()
-            # Drop the hash prefilter's executor copies now, not at GC time
-            # (up to ~128 MB/epoch would linger nondeterministically).
-            release_prefilter_broadcasts()
 
     def _counts(self) -> list:
         """The control pass's batch counts. A versioned (streaming)
@@ -408,6 +404,7 @@ class CowEpoch:
             key_cols=schemas.KEY_COLS,
             broadcast_batch=merge_anti == "broadcast",
             hash_prefilter=merge_anti == "hash",
+            n_keys=n_keys,
         )
         return merged, new_schema, merge_anti
 

@@ -5,12 +5,13 @@ The reference consumes an OAI-PMH feed page-by-page in cursor order
 (ETL/lambda/trigger_01_glue.py:23-34). Here the feed is a parquet directory
 of WAL segments with an explicit lsn column; resume is `lsn > committed hi`.
 
-Scale notes: the lsn range predicate is a plain comparison on a long column
-→ Catalyst pushes it to the parquet scan (row-group min/max skipping), so an
-epoch read touches only the WAL segments overlapping its range even when the
-feed directory holds the full 10^10-event history. mergeSchema=true lets
-segments written before a schema-evolution point (missing columns) coexist
-with newer ones.
+Scale notes: an epoch read scans only the WAL segments whose footer lsn
+min/max overlaps its range (footers cached per file, read once), so it
+opens O(epoch) files even when the feed directory holds the full
+10^10-event history; within those segments the lsn range predicate is
+pushed to the parquet scan (row-group min/max skipping). The footer-merged
+schema lets segments written before a schema-evolution point (missing
+columns) coexist with newer ones.
 """
 
 from __future__ import annotations
@@ -66,12 +67,13 @@ class ChangeFeed:
         # incremental footer-merge cache: (merged arrow schema, seen files)
         self._schema_seen: set[str] = set()
         self._schema_arrow = None
+        # per-file footer lsn (min, max), read once per segment
+        self._lsn_bounds: dict[str, tuple[int, int]] = {}
         # analyzed-DataFrame cache: (frozenset of files, DataFrame). The
-        # epoch loop calls read_range once per epoch; rebuilding the scan
-        # re-lists the directory and re-creates the file index + analyzed
-        # relation every time (driver-serial wall). While the segment set
-        # is unchanged the SAME DataFrame (hence the same InMemoryFileIndex
-        # and analyzed plan subtree) is reused; new WAL files invalidate.
+        # whole-feed read re-lists the directory and re-creates the file
+        # index + analyzed relation every time (driver-serial wall). While
+        # the scanned segment set is unchanged the SAME DataFrame (hence
+        # the same file index and analyzed plan subtree) is reused.
         self._df_cache: tuple[frozenset, DataFrame] | None = None
 
     def _files(self) -> list[str]:
@@ -116,7 +118,12 @@ class ChangeFeed:
     def read(self) -> DataFrame:
         """Whole feed, schema-merged across evolution points (additive-only,
         per the engine's evolution contract — schemas.additive_diff)."""
-        files_key = frozenset(self._files())
+        return self._scan(self._files())
+
+    def _scan(self, files: list[str], whole: bool = True) -> DataFrame:
+        """``files`` read under the whole feed's merged schema — the feed
+        directory itself when ``whole``, else exactly those segments."""
+        files_key = frozenset(files)
         if self._df_cache is not None and self._df_cache[0] == files_key:
             return self._df_cache[1]
         try:
@@ -146,15 +153,48 @@ class ChangeFeed:
                     for f in schema.fields
                 ]
             )
-        df = self.spark.read.schema(schema).parquet(self.path)
+        paths = [self.path] if whole else sorted(files)
+        df = self.spark.read.schema(schema).option("basePath", self.path).parquet(*paths)
         self._df_cache = (files_key, df)
         return df
 
     def read_range(self, lsn_lo_excl: int, lsn_hi_incl: int) -> DataFrame:
-        """One epoch's slice: lsn in (lo, hi]. Pushed to the scan."""
-        return self.read().filter(
+        """One epoch's slice: lsn in (lo, hi]. Scans only the segments
+        whose footer lsn range overlaps it (the whole feed if any footer
+        lacks lsn stats); the range filter is pushed to that scan."""
+        files = self._files()
+        bounds = self._footer_bounds(files) or {}
+        hit = [f for f, (lo, hi) in bounds.items() if lo <= lsn_hi_incl and hi > lsn_lo_excl]
+        df = self._scan(hit, whole=False) if hit else self._scan(files)
+        return df.filter(
             (F.col("lsn") > F.lit(lsn_lo_excl)) & (F.col("lsn") <= F.lit(lsn_hi_incl))
         )
+
+    def _footer_bounds(self, files: list[str]) -> dict[str, tuple[int, int]] | None:
+        """Every segment's exact lsn (min, max) from its parquet footer —
+        metadata only, a thread pool over segments not seen before, no
+        Spark job. None if any footer lacks lsn stats (e.g. a writer that
+        disabled statistics)."""
+        import concurrent.futures
+
+        import pyarrow.parquet as pq
+
+        def footer_bounds(f: str) -> tuple[int, int]:
+            md = pq.read_metadata(f)
+            col = md.schema.names.index("lsn")  # ValueError if absent
+            st = [md.row_group(rg).column(col).statistics for rg in range(md.num_row_groups)]
+            if not st or not all(x is not None and x.has_min_max for x in st):
+                raise ValueError(f"no lsn stats in {f}")
+            return int(min(x.min for x in st)), int(max(x.max for x in st))
+
+        new = [f for f in files if f not in self._lsn_bounds]
+        try:
+            if new:
+                with concurrent.futures.ThreadPoolExecutor(min(16, len(new))) as ex:
+                    self._lsn_bounds.update(zip(new, ex.map(footer_bounds, new)))
+        except (OSError, ValueError):  # pyarrow errors subclass these
+            return None
+        return {f: self._lsn_bounds[f] for f in files}
 
     def max_lsn(self) -> int:
         """Feed high-water mark from parquet footer statistics.
@@ -162,40 +202,13 @@ class ChangeFeed:
         Driver-serial cost matters here: a Spark `agg(max(lsn))` schedules a
         full scan job (seconds of wall per run that no executor parallelism
         can hide). Parquet footers already carry exact int64 min/max for the
-        lsn column, so read ONLY footers — a thread pool over segment files,
-        ~ms each, no Spark job at all. Falls back to the Spark aggregate if
-        any footer lacks lsn stats (e.g. a writer that disabled statistics)."""
-        import concurrent.futures
-        import glob as _glob
-        import os as _os
-
-        files = _glob.glob(_os.path.join(self.path, "*.parquet")) or _glob.glob(
-            _os.path.join(self.path, "**", "*.parquet"), recursive=True
-        )
+        lsn column, so read ONLY footers (cached per segment). Falls back to
+        the Spark aggregate if any footer lacks lsn stats."""
+        files = self._files()
         if not files:
             return -1
-        try:
-            import pyarrow.parquet as pq
-
-            def footer_max(f: str) -> int:
-                md = pq.ParquetFile(f).metadata
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                if "lsn" not in idx:
-                    raise ValueError(f"no lsn column in {f}")
-                m = None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx["lsn"]).statistics
-                    if st is None or not st.has_min_max:
-                        raise ValueError(f"no lsn stats in {f}")
-                    m = st.max if m is None else max(m, st.max)
-                if m is None:
-                    raise ValueError(f"zero row groups in {f}")
-                return int(m)
-
-            with concurrent.futures.ThreadPoolExecutor(
-                min(16, len(files))
-            ) as ex:
-                return max(ex.map(footer_max, files))
-        except Exception:
-            row = self.read().agg(F.max("lsn").alias("m")).collect()[0]
-            return -1 if row["m"] is None else int(row["m"])
+        bounds = self._footer_bounds(files)
+        if bounds is not None:
+            return max(hi for _, hi in bounds.values())
+        row = self.read().agg(F.max("lsn").alias("m")).collect()[0]
+        return -1 if row["m"] is None else int(row["m"])
