@@ -1,7 +1,8 @@
 """Fingerprint the ingest epoch's physical plans and committed bytes.
 
 Replays one small generated feed through every COW regime pair — survivor
-anti-join (broadcast | hash | smj) x control pass (groupby-collect |
+anti-join (broadcast hint | copartitioned, which with size-based broadcast
+off plans a sort-merge join) x control pass (groupby-collect |
 observe-count | observe-collect) — through the default MOR epoch and through
 two streaming micro-batches (``StreamingIngest.apply_batch``, the versioned
 merge), then prints one JSON object per regime: the epoch's executed plan
@@ -42,11 +43,10 @@ from transcript_cdc.sources import lake  # noqa: E402
 from transcript_cdc.sources.changes import ChangeFeed  # noqa: E402
 from transcript_cdc.streaming import StreamConfig, StreamingIngest  # noqa: E402
 
-# (survivor regime, config) — each rung forced by its key-count caps.
+# (survivor regime, config) — the broadcast hint capped out by its key cap.
 ANTI = {
     "broadcast": {},
-    "hash": {"broadcast_max_rows": 1},
-    "smj": {"broadcast_max_rows": 1, "merge_hash_prefilter_max_keys": 1},
+    "copartitioned": {"broadcast_max_rows": 1},
 }
 # (control pass, file_prune_max_keys for the timed epoch). Epoch 0 loads
 # 1200 events; the timed epoch 1 carries 300, so a cap of 250 sits between
@@ -64,7 +64,7 @@ def main() -> None:
                       delete_ratio=0.1, seed=5, events_per_file=300)
     write_change_feed(spec, f"{work}/feed")
     # No size-based broadcast: at this scale Spark would broadcast the
-    # batch keys in every rung, hiding the hash and SMJ plans.
+    # batch keys in every regime, hiding the sort-merge plan.
     spark = get_spark(
         "epoch-plans",
         master="local[2]",

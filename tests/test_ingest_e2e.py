@@ -91,17 +91,17 @@ def test_chunked_epochs_match_oracle(spark, feed, tmp_path):
 def test_cow_overcap_observe_control_matches_oracle(spark, feed, tmp_path):
     """Deployment-shaped COW epochs (key set over the prune-collect cap and
     the broadcast cap) must route the control pass through the
-    observe+count regime — no per-bucket aggregate, SMJ merge — and still
-    replay to exactly the oracle state, resumably."""
+    observe+count regime — no per-bucket aggregate, no broadcast hint on
+    the routed merge — and still replay to exactly the oracle state,
+    resumably."""
     root = str(tmp_path / "table")
     cfg = IngestConfig(
         n_buckets=2,
         epoch_events=400,
-        # zeroed caps force the over-cap regime (and the SMJ merge) from
-        # the first epoch that has any lagged signal
+        # zeroed caps force the over-cap regime (and the unhinted merge)
+        # from the first epoch that has any lagged signal
         file_prune_max_keys=0,
         broadcast_max_rows=0,
-        merge_hash_prefilter_max_keys=0,
     )
     job = CdcIngestJob(spark, feed["dir"], root, cfg)
     results = job.run()
@@ -112,7 +112,7 @@ def test_cow_overcap_observe_control_matches_oracle(spark, feed, tmp_path):
     for r in results:
         m = job.table.read_manifest(r["epoch"])["metrics"]
         assert m["control"] == "observe-count"
-        assert m["merge_anti"] == "smj"
+        assert m["merge_anti"] == "copartitioned"
         assert m["keys"] == r["keys"] > 0
     assert results[1]["touched_buckets"] == 2
     _assert_equal(_engine_state(job), feed["oracle"])
@@ -120,29 +120,6 @@ def test_cow_overcap_observe_control_matches_oracle(spark, feed, tmp_path):
     r = job.run_epoch(results[1]["epoch"], 399, 799)
     assert r.get("skipped") == "already-committed"
     # and a fresh process resumes cleanly past those commits
-    job2 = CdcIngestJob(spark, feed["dir"], root, cfg)
-    assert job2.run() == []
-    _assert_equal(_engine_state(job2), feed["oracle"])
-
-
-def test_cow_hash_prefilter_merge_matches_oracle(spark, feed, tmp_path):
-    """The MIDDLE survivor regime (operators/merge.survivors_anti_join):
-    key count over the string-key broadcast cap but under the hash cap →
-    broadcast the distinct key-hash longs, route provably-untouched
-    snapshot rows around the join, exact sliver anti-join for hash hits.
-    Forced here by zeroing broadcast_max_rows while leaving the hash cap
-    at its default; every epoch must record merge_anti="hash" and the
-    replay must still hit the oracle exactly, resumably."""
-    root = str(tmp_path / "table")
-    cfg = IngestConfig(n_buckets=8, epoch_events=400, broadcast_max_rows=0)
-    job = CdcIngestJob(spark, feed["dir"], root, cfg)
-    results = job.run()
-    assert len(results) > 2
-    for r in results:
-        m = job.table.read_manifest(r["epoch"])["metrics"]
-        assert m["merge_anti"] == "hash"
-    _assert_equal(_engine_state(job), feed["oracle"])
-    # fresh process resumes cleanly past hash-regime commits
     job2 = CdcIngestJob(spark, feed["dir"], root, cfg)
     assert job2.run() == []
     _assert_equal(_engine_state(job2), feed["oracle"])
@@ -312,10 +289,9 @@ def test_hot_key_stream_salted_and_correct(spark, tmp_path):
     write uses salted_repartition (the COW write range-partitions; its
     sampler spreads hot buckets).
 
-    Default config runs ZERO probe jobs: each epoch's salt is derived from
-    the PREVIOUS epoch's manifest bucket_rows (lagged signal, skew.lagged_salt).
-    The opt-in probe still records exact per-key heavy hitters. Either way
-    the final state must equal the oracle (salting never touches LWW)."""
+    It runs ZERO probe jobs: each epoch's salt is derived from the PREVIOUS
+    epoch's manifest bucket_rows (lagged signal, skew.lagged_salt), and the
+    final state must equal the oracle (salting never touches LWW)."""
     from transcript_cdc.operators.skew import choose_salt, lagged_salt
 
     spec = StreamSpec(
@@ -326,7 +302,6 @@ def test_hot_key_stream_salted_and_correct(spark, tmp_path):
     write_change_feed(spec, d)
     oracle = replay_oracle(generate_events(spec), normalize=True)
 
-    # Default: lagged salt, no probe job.
     job = CdcIngestJob(
         spark, d, str(tmp_path / "table"),
         IngestConfig(n_buckets=8, epoch_events=300, storage="mor"),
@@ -345,23 +320,6 @@ def test_hot_key_stream_salted_and_correct(spark, tmp_path):
         job.table.read_manifest(e)["metrics"]["bucket_rows"] for e in epochs
     )
     _assert_equal(_engine_state(job), oracle)
-
-    # Opt-in probe: exact per-key heavy hitters recorded in the manifest.
-    # Probe runs POST-dedup (write-side skew is what salting spreads), so
-    # per-conv counts are bounded by turns-per-conv, not raw update traffic.
-    job2 = CdcIngestJob(
-        spark, d, str(tmp_path / "table2"),
-        IngestConfig(
-            n_buckets=8, epoch_events=10**9, storage="mor",
-            probe_heavy_hitters=True,
-        ),
-    )
-    job2.run()
-    m2 = job2.table.last_committed()
-    hh = m2["metrics"]["heavy_hitters"]
-    assert hh and all(n <= spec.max_turns for _, n in hh)
-    assert m2["metrics"]["salt_source"] == "probe"
-    _assert_equal(_engine_state(job2), oracle)
 
     # The decision logic itself (rows_per_task floor keeps tiny tests at 1,
     # so force both salt choosers directly).

@@ -336,30 +336,102 @@ def _outside_cache(plan: str) -> str:
     return "\n".join(out)
 
 
+def _snapshot_exchanges(outer: str) -> list[str]:
+    """The exchanges above the hot-snapshot scan — the one FileScan
+    outside the persisted batch — walking the tree string's ancestor
+    chain by indentation."""
+    lines = outer.splitlines()
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))
+    scans = [i for i, line in enumerate(lines) if "FileScan" in line]
+    assert len(scans) == 1, plan
+    i = scans[0]
+    d, out = depth(lines[i]), []
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            d = depth(line)
+            if "Exchange" in line:
+                out.append(line.strip(" :+-"))
+    return out
+
+
+def _assert_one_exchange_per_epoch(plan: str) -> None:
+    """The routed-merge invariants: the snapshot payload crosses ONE
+    exchange, the write's range routing; nothing reshuffles on the merge
+    key outside the persisted batch; and the union feeds the write with
+    no exchange above it."""
+    import re
+
+    outer = _outside_cache(plan)
+    ex = _snapshot_exchanges(outer)
+    assert len(ex) == 1 and ex[0].startswith("Exchange hashpartitioning(__range_tok"), ex
+    assert not re.search(r"hashpartitioning\(conv_id#\d+, turn_idx#\d+", outer), plan
+    above_union = outer.split("Union")[0]
+    assert "Union" in outer and "Exchange" not in above_union, plan
+
+
 def test_cow_epoch_plan_default_shape(spark, cow_job):
     """The default COW epoch (window dedup, broadcast survivor anti join,
-    stats-routed range write), as planned for its write while the batch is
-    persisted. The batch's dedup exchange on (conv_id, turn_idx) runs once,
-    inside the cache that both merge branches scan (anti-join keys and
-    upserts); the write plan itself has ONE exchange, the stats-routed
-    hash on __range_tok — never the sampled RangePartitioner — and the
-    snapshot reaches the anti join unshuffled against a broadcast."""
+    routed merge), as planned for its write while the batch is persisted.
+    The batch's dedup exchange on (conv_id, turn_idx) runs once, inside
+    the cache that both merge branches scan (anti-join keys and upserts).
+    Outside it, three exchanges, all the stats-routed hash on
+    __range_tok — never the sampled RangePartitioner: the snapshot (the
+    optimizer pushes the broadcast anti join below it), the batch keys
+    (under the broadcast) and the upserts."""
     import re
 
     plan = cow_job.live_plan
     m = cow_job.table.last_committed()["metrics"]
     assert (m["dedup"], m["merge_anti"]) == ("window", "broadcast"), m
     outer = _outside_cache(plan)
-    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", outer)) == 1, plan
-    assert len(re.findall(r"Exchange hashpartitioning", outer)) == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", outer)) == 3, plan
+    assert len(re.findall(r"Exchange hashpartitioning", outer)) == 3, plan
     assert "Exchange rangepartitioning" not in plan, plan
     assert "BroadcastExchange" in outer and "LeftAnti" in outer, plan
     assert outer.count("InMemoryTableScan") == 2, plan
+    _assert_one_exchange_per_epoch(plan)
     # exactly one dedup exchange: the tree string repeats it (per cache
     # scan, initial and final AQE plan), always with the same attributes,
     # where a batch recomputed per branch would show two attribute sets
     dedup = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+", plan)
     assert len(set(dedup)) == 1, plan
+
+
+def test_cow_epoch_plan_forced_smj_shape(spark, tmp_path):
+    """The same epoch with the broadcast hint capped out (caps 1) and no
+    size-based broadcast: Spark plans a sort-merge anti join, which
+    needs no exchange of its own — both sides arrive hash-partitioned on
+    the range token, a prefix of its (token, key) join keys."""
+    spec = StreamSpec(n_conversations=120, avg_turns=4, update_ratio=0.4,
+                      delete_ratio=0.1, seed=5, events_per_file=300)
+    feed = str(tmp_path / "feed")
+    write_change_feed(spec, feed)
+    job = CdcIngestJob(
+        spark, feed, str(tmp_path / "cow"),
+        IngestConfig(n_buckets=8, epoch_events=400, dedup_strategy="window",
+                     broadcast_max_rows=1),
+    )
+    commit = job.table.commit_epoch
+
+    def commit_and_capture(epoch, new_state, *args, **kwargs):
+        job.live_plan = plan_of(job._last_epoch_plan)
+        return commit(epoch, new_state, *args, **kwargs)
+
+    job.table.commit_epoch = commit_and_capture
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        job.run()
+    finally:
+        spark.conf.set(key, prior)
+    m = job.table.last_committed()["metrics"]
+    assert (m["control"], m["merge_anti"]) == ("groupby-collect", "copartitioned"), m
+    plan = job.live_plan
+    outer = _outside_cache(plan)
+    assert "SortMergeJoin" in outer and "LeftAnti" in outer, plan
+    assert "BroadcastExchange" not in outer, plan
+    _assert_one_exchange_per_epoch(plan)
 
 
 @pytest.fixture(scope="module")
@@ -400,18 +472,21 @@ def stream_job(spark, tmp_path_factory):
 
 def test_stream_micro_batch_plan_shape(stream_job):
     """A steady-state streaming micro-batch writes through the shared COW
-    core: control pass with key lists, window dedup, and the stats-routed
-    range write — ONE exchange on __range_tok, never the sampled
-    RangePartitioner (whose sampling pass would evaluate the versioned
-    merge a second time)."""
+    core: control pass with key lists, window dedup, and the routed
+    versioned merge — the snapshot and the batch each cross ONE exchange
+    on __range_tok, which the max-lsn window over their union reuses;
+    never the sampled RangePartitioner (whose sampling pass would
+    evaluate the versioned merge a second time)."""
     import re
 
     plan = stream_job.live_plan
     m = stream_job.table.last_committed()["metrics"]
     assert (m["mode"], m["control"], m["dedup"]) == (
         "streaming", "groupby-collect", "window"), m
-    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", plan)) == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", plan)) == 2, plan
     assert "rangepartitioning" not in plan, plan
+    assert "Window" in plan and "Union" in plan, plan
+    _assert_one_exchange_per_epoch(plan)
 
 
 def test_stream_micro_batch_launches_no_sampling_job(stream_job):

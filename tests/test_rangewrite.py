@@ -241,3 +241,107 @@ def test_stream_placement_is_deterministic(spark, tmp_path):
             for e in epochs
         })
     assert layouts[0] == layouts[1]
+
+
+@pytest.fixture(scope="module", params=["batch", "stream"])
+def bound_keyed(request, spark, tmp_path_factory):
+    """A two-epoch replay whose second epoch touches every conversation —
+    one turn updated, one deleted (a tombstone in the streaming table),
+    one inserted — so every split point of its routed merge is a key the
+    batch carries. Yields (table, bounds of the second epoch, oracle)."""
+    import os
+
+    import pandas as pd
+
+    from transcript_cdc.plans import ingest
+    from transcript_cdc.plans.ingest import CdcIngestJob, IngestConfig
+    from transcript_cdc.sources.changes import ChangeFeed
+    from transcript_cdc.streaming import StreamConfig, StreamingIngest
+
+    base = tmp_path_factory.mktemp(f"bounds_{request.param}")
+    feed = str(base / "feed")
+    os.makedirs(feed)
+    ts = pd.Timestamp("2024-01-01")
+    cols = ["lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    events = [("I", c, t) for c in range(200) for t in range(3)]
+    n0 = len(events)
+    events += [e for c in range(200) for e in (("U", c, 0), ("D", c, 1), ("I", c, 3))]
+    rows = [
+        (lsn, op, f"conv-{c:04d}", t, "user", None if op == "D" else f"{op} {c} {t}", None, ts)
+        for lsn, (op, c, t) in enumerate(events)
+    ]
+    pdf = pd.DataFrame(rows, columns=cols).astype({"turn_idx": "int32", "tool": "string"})
+    pdf.iloc[:n0].to_parquet(os.path.join(feed, f"part-0-{n0 - 1}.parquet"),
+                             index=False, coerce_timestamps="us")
+    pdf.iloc[n0:].to_parquet(os.path.join(feed, f"part-{n0}-{len(events) - 1}.parquet"),
+                             index=False, coerce_timestamps="us")
+    oracle = {}
+    for op, c, t in events:
+        if op == "D":
+            oracle.pop((f"conv-{c:04d}", t), None)
+        else:
+            oracle[(f"conv-{c:04d}", t)] = f"{op} {c} {t}"
+
+    planned = []
+    real = ingest.plan_range_bounds
+    mp = pytest.MonkeyPatch()
+    mp.setattr(ingest, "plan_range_bounds",
+               lambda atoms, n: planned.append(real(atoms, n)) or planned[-1])
+    try:
+        if request.param == "batch":
+            job = CdcIngestJob(spark, feed, str(base / "t"),
+                               IngestConfig(n_buckets=4, epoch_events=n0,
+                                            write_partitions=8))
+            job.run()
+            table = job.table
+        else:
+            si = StreamingIngest(spark, feed, str(base / "t"), str(base / "ck"),
+                                 StreamConfig(n_buckets=4))
+            changes = ChangeFeed(spark, feed)
+            si.apply_batch(changes.read_range(-1, n0 - 1), 0)
+            si.apply_batch(changes.read_range(n0 - 1, len(events) - 1), 1)
+            table = si.table
+    finally:
+        mp.undo()
+    assert len(planned) == 1  # epoch 0 wrote into an empty table: no stats
+    yield table, planned[0], oracle
+
+
+def test_merge_exact_with_keys_on_split_bounds(spark, bound_keyed):
+    """Every split point is a conversation the batch updates, deletes and
+    inserts into, so both merge sides route rows ON the bounds; the
+    token is the same function of the key on both, and the result equals
+    the dict-replay oracle with no key stored twice (tombstones
+    included)."""
+    from pyspark.sql import functions as F
+
+    table, bounds, oracle = bound_keyed
+    assert len(bounds) >= 3
+    stored = table.read_snapshot(spark)
+    assert stored.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
+    if "op" in stored.columns:
+        assert stored.filter(F.col("op") == "D").count() == 200  # tombstones
+        stored = stored.filter(F.col("op") != "D")
+    got = {(r.conv_id, r.turn_idx): r.text for r in stored.collect()}
+    assert got == oracle
+
+
+def test_routed_merge_files_stay_inside_one_range(spark, bound_keyed):
+    """The merge's exchange is the write's: each file the routed epoch
+    wrote spans a [min_key, max_key] inside ONE range of its split
+    points, and a range's survivors and upserts share one file."""
+    table, bounds, _ = bound_keyed
+    last = table.committed_epochs()[-1]
+    stats = table._fold_stats(last)
+    written = [p for p in stats if f"epoch={last:010d}-" in p]
+    assert written
+    cells = []
+    for p in written:
+        b = int(p.split("__bucket=")[1].split("/")[0])
+        lo, hi = (b, stats[p]["min_key"]), (b, stats[p]["max_key"])
+        rng = bisect.bisect_right(bounds, lo)
+        assert rng == bisect.bisect_right(bounds, hi), (p, lo, hi, bounds)
+        cells.append((b, rng))
+    # one file per (bucket, range): a union that concatenated its inputs
+    # instead of zipping their partitions would write two
+    assert len(cells) == len(set(cells)), sorted(cells)

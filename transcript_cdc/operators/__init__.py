@@ -10,7 +10,6 @@ from transcript_cdc.operators.merge import merge_apply, merge_apply_versioned
 from transcript_cdc.operators.sessionize import session_summary, sessionize
 from transcript_cdc.operators.skew import (
     choose_salt,
-    heavy_hitter_probe,
     lagged_salt,
     salted_repartition,
 )
@@ -28,7 +27,6 @@ __all__ = [
     "sessionize",
     "session_summary",
     "choose_salt",
-    "heavy_hitter_probe",
     "lagged_salt",
     "salted_repartition",
 ]

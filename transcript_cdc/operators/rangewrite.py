@@ -50,6 +50,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+RANGE_TOK = "__range_tok"
+
 
 def murmur3_int32(x: int, seed: int = 42) -> int:
     """Spark-compatible Murmur3 x86_32 of a single int (HashPartitioning's
@@ -126,6 +128,7 @@ def assign_range_partition(
     n_parts: int,
     bucket_col: str,
     key_col: str,
+    keep_token: bool = False,
 ) -> DataFrame:
     """Shuffle ``df`` so reducer i holds exactly value-range i.
 
@@ -133,20 +136,22 @@ def assign_range_partition(
     plain codegen expressions (no HOF, no UDF). The hash input is
     token[range_id] (see module docstring) so partition id == range id.
     NULL keys (none post-dedup, keys are non-null by contract) compare
-    false everywhere and land in range 0.
+    false everywhere and land in range 0. With no bounds the token is the
+    bucket itself (a plain bucket hash). ``keep_token`` keeps the
+    ``RANGE_TOK`` column, so operators keyed on (token, key...) above the
+    exchange — the COW merge's anti join, the streaming max-lsn window —
+    reuse its partitioning instead of shuffling again.
     """
     n_ranges = len(bounds) + 1
     if n_ranges < 2:
-        return df.repartition(max(1, n_parts), F.col(bucket_col))
-    row = F.struct(F.col(bucket_col), F.col(key_col))
-    rng = None
-    for b, k in bounds:
-        c = (F.struct(F.lit(b), F.lit(k)) <= row).cast("int")
-        rng = c if rng is None else rng + c
-    tokens = partition_tokens(n_ranges)
-    tok = F.element_at(F.array(*[F.lit(t) for t in tokens]), rng + 1)
-    return (
-        df.withColumn("__range_tok", tok)
-        .repartition(n_ranges, F.col("__range_tok"))
-        .drop("__range_tok")
-    )
+        tok, n = F.col(bucket_col), max(1, n_parts)
+    else:
+        row = F.struct(F.col(bucket_col), F.col(key_col))
+        rng = None
+        for b, k in bounds:
+            c = (F.struct(F.lit(b), F.lit(k)) <= row).cast("int")
+            rng = c if rng is None else rng + c
+        tokens = partition_tokens(n_ranges)
+        tok, n = F.element_at(F.array(*[F.lit(t) for t in tokens]), rng + 1), n_ranges
+    out = df.withColumn(RANGE_TOK, tok).repartition(n, F.col(RANGE_TOK))
+    return out if keep_token else out.drop(RANGE_TOK)

@@ -20,25 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def heavy_hitter_probe(
-    df: DataFrame, key_col: str = "conv_id", top_n: int = 20
-) -> list[tuple[str, int]]:
-    """Cheap per-epoch heavy-hitter count: top-N keys by row count.
-
-    One map-side-combined groupBy over the (small) epoch batch; results are
-    recorded in the commit manifest so lineage shows which epochs were
-    skewed and what salt factor was chosen.
-    """
-    rows = (
-        df.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc())
-        .limit(top_n)
-        .collect()
-    )
-    return [(r[key_col], r["n"]) for r in rows]
-
-
 def choose_salt(heavy_hitters: list[tuple[str, int]], rows_per_task: int = 500_000) -> int:
     """Salt factor so the hottest key spreads to ~rows_per_task per task."""
     if not heavy_hitters:

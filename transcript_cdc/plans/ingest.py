@@ -17,21 +17,22 @@ copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
     → lww_dedup            SHUFFLE 1: hash(conv_id,turn_idx) window
     → normalize_text       Arrow, narrow, winners only
     → __bucket = pmod(xxhash64(conv_id), N), persisted; control pass
-    ⨝ snapshot(HOT FILES of touched buckets), both sides cast to the evolved
-                           schema. Hot files = the manifest's per-file
-                           key-range stats ∩ this batch's key set
-                           (plan_cow_merge); untouched files carry forward
-                           unread. Batch: survivor anti join, by key count
-                           ≤ broadcast_max_rows → broadcast; ≤
-                           merge_hash_prefilter_max_keys → broadcast the
-                           bucketed key hashes (built inside the write
-                           query), only hash hits pay the exact SMJ;
-                           beyond → SMJ. Streaming: the versioned merge, one
-                           max-lsn window over snapshot ∪ batch.
-    → range-cluster on (bucket, conv_id)   SHUFFLE 2, split points from the
-                           hot files' footer stats + the batch key lists, so
-                           each file covers a tight key interval and the
-                           NEXT epoch's pruning stays selective (mor:
+    → route by __range_tok SHUFFLE 2, split points from the hot files'
+                           footer stats + the batch key lists, computed
+                           BEFORE the merge: the snapshot (HOT FILES of
+                           touched buckets — the manifest's per-file
+                           key-range stats ∩ this batch's key set,
+                           plan_cow_merge; untouched files carry forward
+                           unread) and the batch, both cast to the evolved
+                           schema, each cross this one exchange
+    ⨝ merge on (__range_tok, key), co-partitioned — no exchange of its own.
+                           Batch: survivor anti join (broadcast hint while
+                           the key count ≤ broadcast_max_rows, else Spark's
+                           pick of BHJ/SMJ) ∪ upserts. Streaming: the
+                           versioned merge, one max-lsn window over
+                           snapshot ∪ batch.
+    → sort within ranges   each file covers a tight key interval, which
+                           keeps the NEXT epoch's pruning selective (mor:
                            salted repartition by bucket)
     → write data/epoch=K/ + manifest commit (+ footer key stats)
 
@@ -59,23 +60,17 @@ from transcript_cdc import schemas
 from transcript_cdc.functions.normalize import normalize_text, normalize_text_sql
 from transcript_cdc.operators.dedup import lww_dedup, lww_dedup_clustered
 from transcript_cdc.operators.merge import (
-    merge_apply,
+    apply_upserts,
     merge_apply_versioned,
-    # Unused here; the benchmark tracer (perfbench/spans.py) patches this
-    # module binding by name, so it stays until the tracer drops it.
-    survivors_anti_join,  # noqa: F401
+    survivors_anti_join,
 )
 from transcript_cdc.plans.control import JobControl, job_group
 from transcript_cdc.operators.rangewrite import (
+    RANGE_TOK,
     assign_range_partition,
     plan_range_bounds,
 )
-from transcript_cdc.operators.skew import (
-    choose_salt,
-    heavy_hitter_probe,
-    lagged_salt,
-    salted_repartition,
-)
+from transcript_cdc.operators.skew import lagged_salt, salted_repartition
 from transcript_cdc.sources.changes import ChangeFeed
 from transcript_cdc.sources.lake import (
     BUCKET_COL,
@@ -93,23 +88,6 @@ class IngestConfig:
     normalize: bool = True
     arrow_normalizer: bool = True  # False → pure-SQL normalizer (no NFC)
     broadcast_max_rows: int = 2_000_000
-    # Middle survivor regime for the COW merge (operators/merge.py
-    # survivors_anti_join): when the epoch's key count exceeds
-    # broadcast_max_rows (full string keys won't fit executor memory —
-    # a raised string cap OOM-looped 6 GiB executors, CHANGES_r4.md #20)
-    # but stays under this bound, broadcast the xxhash64(key) longs as
-    # top-bit hash buckets (one collect_set row per 16-32 hashes, ~8
-    # bytes/key plus a small per-bucket row, against the ~100+ bytes/key
-    # of the OOM-rejected one-row-per-key relation) and let an
-    # array_contains probe route provably-untouched snapshot rows around
-    # the sort-merge anti join; only the hash hits pay the exact SMJ.
-    # Size against that broadcast's executor and driver headroom when
-    # raising it. Past this bound the ladder falls to full SMJ.
-    merge_hash_prefilter_max_keys: int = 16_000_000
-    # True → exact in-epoch heavy-hitter probe (one extra Spark job per
-    # epoch, per-key counts in the manifest). Default: salt from the
-    # previous manifest's bucket_rows (lagged_salt) — zero extra jobs.
-    probe_heavy_hitters: bool = False
     write_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     # "cow": per-epoch MERGE + touched-bucket rewrite (read-optimized).
     # "mor": per-epoch delta append + LWW fold at read (write-optimized —
@@ -209,10 +187,10 @@ def _lagged_keys(table: ParquetSnapshotTable) -> int:
 
 class CowEpoch:
     """The copy-on-write epoch core, shared by CdcIngestJob and
-    StreamingIngest.apply_batch. ``versioned`` picks the merge:
-    merge_apply with its survivor ladder (batch: every event of the epoch
-    is newer than the table) or merge_apply_versioned (streaming: lsn/op
-    live in the table and the max lsn wins per key)."""
+    StreamingIngest.apply_batch. ``versioned`` picks the merge: the
+    survivor anti join ∪ upserts (batch: every event of the epoch is newer
+    than the table) or merge_apply_versioned (streaming: lsn/op live in the
+    table and the max lsn wins per key)."""
 
     def __init__(self, spark: SparkSession, table: ParquetSnapshotTable,
                  cfg: IngestConfig, versioned: bool = False):
@@ -222,10 +200,11 @@ class CowEpoch:
     @contextmanager
     def plan(self, raw: DataFrame, epoch: int):
         """LWW dedup → normalize → bucket, persisted; then the bounded
-        control pass (_control), the merge against only the hot files of
-        the touched buckets (_merge) and the stats-routed range write
-        (_write). Yields the planned epoch: ``ctl`` (keys, deletes,
-        touched buckets; lsn_lo/lsn_hi when versioned) and, unless the
+        control pass (_control), the write's range split (_router), the
+        merge against only the hot files of the touched buckets, routed by
+        that split (_merge), and the range write (_write). Yields the
+        planned epoch: ``ctl`` (keys, deletes, touched buckets;
+        lsn_lo/lsn_hi when versioned) and, unless the
         batch is empty (``new_state`` None), ``new_state``, ``schema``,
         ``kept`` and the manifest ``metrics``. The caller commits inside
         the block, while the batch is still persisted. Two Spark jobs: the
@@ -266,10 +245,13 @@ class CowEpoch:
             hot, kept = table.plan_cow_merge(
                 ctl["touched"], ctl["keys_by_bucket"], cfg.max_files_per_bucket
             )
-            merged, new_schema, merge_anti = self._merge(batch, hot, ctl["keys"])
+            route = self._router(hot, ctl["keys_by_bucket"])
+            merged, new_schema, merge_anti = self._merge(
+                batch, hot, ctl["keys"], route
+            )
             yield {
                 "ctl": ctl,
-                "new_state": self._write(merged, hot, ctl["keys_by_bucket"]),
+                "new_state": self._write(merged, route is not None),
                 "schema": new_schema,
                 "kept": kept,
                 "metrics": {
@@ -369,10 +351,58 @@ class CowEpoch:
         )
         return ctl
 
-    def _merge(self, batch: DataFrame, hot: list, n_keys: int) -> tuple:
+    def _n_parts(self) -> int:
+        return self.cfg.write_partitions or int(
+            self.spark.conf.get("spark.sql.shuffle.partitions")
+        )
+
+    def _router(self, hot: list, keys_by_bucket: dict | None):
+        """The write's range split, planned BEFORE the merge so that one
+        exchange serves the merge and the write. Returns ``route(df)``,
+        which shuffles ``df`` to its (bucket, key) range's reducer and keeps
+        the ``RANGE_TOK`` column, or None when the epoch has no stats.
+
+        Range clustering WITHOUT repartitionByRange: its RangePartitioner
+        samples the child plan, which would be the merge itself — the hot
+        set would be scanned and merged TWICE per epoch (measured: the
+        sampling job costs about as much as the exchange map stage), plus
+        one extra driver-serial job, and the sample is seeded by the RDD
+        id, so the layout would depend on how many RDDs the application
+        built before. The epoch already knows the key distribution — hot
+        files' footer stats + the control pass's batch key lists — so
+        split points are computed driver-side and each row is routed to
+        its range's exact reducer (operators/rangewrite.py). The token is a
+        function of the key, so merging on (token, key) is merging on the
+        key, and with ``spark.sql.requireAllClusterKeysForCoPartition``
+        off (session.py) the join or window inherits the routing exchange.
+        """
+        key_col = self.table.meta["bucket_by"]
+        n_parts = self._n_parts()
+        atoms = self.table.write_atoms(hot)
+        if keys_by_bucket is not None:
+            atoms += [
+                (int(b), k, 1.0) for b, ks in keys_by_bucket.items() for k in ks
+            ]
+        if not atoms:
+            return None
+        bounds = plan_range_bounds(atoms, n_parts)
+        bucket = bucket_expr(self.table.n_buckets, key_col)
+
+        def route(df: DataFrame) -> DataFrame:
+            return assign_range_partition(
+                df.withColumn(BUCKET_COL, bucket), bounds, n_parts,
+                BUCKET_COL, key_col, keep_token=True,
+            ).drop(BUCKET_COL)
+
+        return route
+
+    def _merge(self, batch: DataFrame, hot: list, n_keys: int, route) -> tuple:
         """Schema evolution, then the merge of the batch into the hot
-        files. Returns (merged, new_schema, merge_anti): the survivor rung,
-        None for the versioned merge."""
+        files, both sides routed by ``route`` when there is one. Returns
+        (merged, new_schema, merge_anti): ``broadcast`` when the survivor
+        anti join carries the broadcast hint, ``copartitioned`` when Spark
+        picks the join (BHJ or SMJ) itself, None for the versioned
+        merge."""
         # Schema evolution: union-by-name the batch's payload columns
         # into the table schema (additive only).
         new_schema = schemas.evolve(
@@ -387,72 +417,44 @@ class CowEpoch:
             self.table.read_files(self.spark, hot), new_schema
         )
         batch_al = schemas.align_types(batch.drop(BUCKET_COL), new_schema)
+        key_cols = list(schemas.KEY_COLS)
+        if route is not None:
+            snapshot, batch_al = route(snapshot), route(batch_al)
+            key_cols = [RANGE_TOK, *key_cols]
         if self.versioned:
-            merged = merge_apply_versioned(snapshot, batch_al, key_cols=schemas.KEY_COLS)
+            merged = merge_apply_versioned(snapshot, batch_al, key_cols=key_cols)
             return merged, new_schema, None
-        # The survivor ladder (operators/merge.survivors_anti_join), by the
-        # epoch's exact key count: broadcast → hash prefilter → SMJ.
-        if n_keys <= self.cfg.broadcast_max_rows:
-            merge_anti = "broadcast"
-        elif n_keys <= self.cfg.merge_hash_prefilter_max_keys:
-            merge_anti = "hash"
-        else:
-            merge_anti = "smj"
-        merged = merge_apply(
-            snapshot,
-            batch_al,
-            key_cols=schemas.KEY_COLS,
-            broadcast_batch=merge_anti == "broadcast",
-            hash_prefilter=merge_anti == "hash",
-            n_keys=n_keys,
+        merge_anti = (
+            "broadcast" if n_keys <= self.cfg.broadcast_max_rows else "copartitioned"
         )
-        return merged, new_schema, merge_anti
+        survivors = survivors_anti_join(
+            snapshot, batch_al, key_cols, broadcast_keys=merge_anti == "broadcast"
+        )
+        return apply_upserts(survivors, batch_al), new_schema, merge_anti
 
-    def _write(
-        self, merged: DataFrame, hot: list, keys_by_bucket: dict | None
-    ) -> DataFrame:
+    def _write(self, merged: DataFrame, routed: bool) -> DataFrame:
         """The range-clustered write plan. The bucket is re-derived from
-        conv_id (deterministic), then the write is RANGE-clustered on
-        (bucket, key): each output file covers a tight key interval, which
-        is exactly what makes the next epoch's file pruning selective.
-
-        Range clustering WITHOUT repartitionByRange: its RangePartitioner
-        samples the child plan, which here is the merge itself — the hot
-        set would be scanned and merged TWICE per epoch (measured: the
-        sampling job costs about as much as the exchange map stage), plus
-        one extra driver-serial job, and the sample is seeded by the RDD
-        id, so the layout would depend on how many RDDs the application
-        built before. The epoch already knows the key distribution — hot
-        files' footer stats + the control pass's batch key lists — so
-        split points are computed driver-side and each row is routed to
-        its range's exact reducer (operators/rangewrite.py). Deterministic
-        output placement, merge evaluated exactly once."""
+        conv_id (deterministic); a routed merge is already clustered by
+        range, so the write adds no exchange. An epoch with no stats at
+        all (the table's first: no files, and the control pass collected
+        no key lists) falls back to sampled range partitioning —
+        correctness identical, it just pays the sampling pass this once."""
         key_col = self.table.meta["bucket_by"]
         new_state = merged.withColumn(
             BUCKET_COL, bucket_expr(self.table.n_buckets, key_col)
         )
-        n_parts = self.cfg.write_partitions or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions")
+        if not routed:
+            return new_state.repartitionByRange(
+                self._n_parts(), F.col(BUCKET_COL), F.col(key_col)
+            ).sortWithinPartitions(BUCKET_COL, key_col)
+        # The token (a function of bucket and key, so a no-op sort key)
+        # stays in the sort and is dropped only above it: pruned any lower,
+        # it would leave the union's inputs, the union would lose their
+        # common partitioning and concatenate them — a range's survivors
+        # and upserts would land in two overlapping files.
+        return new_state.sortWithinPartitions(BUCKET_COL, key_col, RANGE_TOK).drop(
+            RANGE_TOK
         )
-        atoms = self.table.write_atoms(hot)
-        if keys_by_bucket is not None:
-            atoms += [
-                (int(b), k, 1.0) for b, ks in keys_by_bucket.items() for k in ks
-            ]
-        if atoms:
-            bounds = plan_range_bounds(atoms, n_parts)
-            new_state = assign_range_partition(
-                new_state, bounds, n_parts, BUCKET_COL, key_col
-            )
-        else:
-            # No stats at all (the table's first epoch: no files, and the
-            # control pass collected no key lists): fall back to sampled
-            # range partitioning — correctness identical, just pays the
-            # sampling pass this once.
-            new_state = new_state.repartitionByRange(
-                n_parts, F.col(BUCKET_COL), F.col(key_col)
-            )
-        return new_state.sortWithinPartitions(BUCKET_COL, key_col)
 
 
 class CdcIngestJob:
@@ -570,21 +572,7 @@ class CdcIngestJob:
         bucketed = aligned.withColumn(
             BUCKET_COL, bucket_expr(self.table.n_buckets, self.table.meta["bucket_by"])
         )
-        if self.cfg.probe_heavy_hitters:
-            # Legacy opt-in: an exact in-epoch probe (one extra job) whose
-            # per-key counts land in the manifest for skew diagnostics.
-            # Probes POST-dedup rows (write-side skew is what the salt
-            # spreads), over its own window-dedup view — the probe is its
-            # own Spark job either way, and the write plan below stays
-            # strategy-chosen.
-            hh = heavy_hitter_probe(
-                lww_dedup(bucketed, schemas.KEY_COLS, schemas.LSN_COL),
-                "conv_id",
-            )
-            salt, salt_source = choose_salt(hh), "probe"
-        else:
-            hh = []
-            salt, salt_source = lagged_salt(self.table.last_committed()), "lagged"
+        salt = lagged_salt(self.table.last_committed())
         norm = None
         if self.cfg.normalize and "text" in raw.columns:
             norm = (
@@ -658,9 +646,8 @@ class CdcIngestJob:
         self._last_epoch_plan = new_state  # plan-shape introspection (tests)
         metrics = {
             "storage": "mor",
-            "heavy_hitters": hh[:5],
             "salt": salt,
-            "salt_source": salt_source,
+            "salt_source": "lagged",
             "dedup": strategy,
             "duration_prepare_s": round(time.time() - t0, 3),
         }

@@ -83,6 +83,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # The COW merge routes both sides by the write's range token and
+        # joins (or windows) on (token, key): let a hash partitioning on a
+        # prefix of the join keys count as co-partitioned, so the join
+        # reuses the write's exchange instead of shuffling the snapshot
+        # payload a second time on the full key (plans/ingest.CowEpoch).
+        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # All Python-side transforms are Arrow-vectorized pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

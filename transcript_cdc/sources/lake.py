@@ -864,28 +864,11 @@ class ParquetSnapshotTable:
             return {"removed_files": 0, "kept_epochs": []}
         keep_from = epochs[-1] if keep_from_epoch is None else int(keep_from_epoch)
         kept = [e for e in epochs if e >= keep_from] or [epochs[-1]]
-        referenced: set[str] = set()
-        for e in kept:
-            state, _ = self._current_state(as_of_epoch=e)
-            for files in state.values():
-                referenced.update(files)
-
         meta = dict(self.meta)
         meta["expired_before"] = keep_from
         _atomic_write_json(os.path.join(self.commits_dir, "table.json"), meta)
         self._meta = meta
-
-        removed = 0
-        for dirpath, _dirnames, filenames in os.walk(self.data_dir, topdown=False):
-            for fn in filenames:
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, self.root)
-                if fn.endswith(".parquet") and rel not in referenced:
-                    os.unlink(full)
-                    removed += 1
-            if dirpath != self.data_dir and not os.listdir(dirpath):
-                os.rmdir(dirpath)
-        return {"removed_files": removed, "kept_epochs": kept}
+        return {"removed_files": self._gc_unreferenced(kept), "kept_epochs": kept}
 
     def rollback(self, to_epoch: int) -> dict:
         """Point-in-time recovery (Iceberg ``rollback_to_snapshot``):
@@ -915,13 +898,22 @@ class ParquetSnapshotTable:
         dropped = sorted((e for e in epochs if e > to_epoch), reverse=True)
         for e in dropped:
             os.unlink(self._manifest_path(e))
+        removed = self._gc_unreferenced(
+            [e for e in epochs if horizon <= e <= to_epoch]
+        )
+        return {"epochs_dropped": dropped[::-1], "removed_files": removed}
 
+    def _gc_unreferenced(self, live_epochs: Sequence[int]) -> int:
+        """Unlink every data file that no snapshot in ``live_epochs``
+        references, then prune the emptied directories; returns the count
+        unlinked. Callers publish their intent first (expire's marker,
+        rollback's manifest drops), so a crash mid-GC leaves only files
+        that no readable snapshot needs."""
         referenced: set[str] = set()
-        for e in epochs:
-            if horizon <= e <= to_epoch:
-                state, _ = self._current_state(as_of_epoch=e)
-                for files in state.values():
-                    referenced.update(files)
+        for e in live_epochs:
+            state, _ = self._current_state(as_of_epoch=e)
+            for files in state.values():
+                referenced.update(files)
         removed = 0
         for dirpath, _dirnames, filenames in os.walk(self.data_dir, topdown=False):
             for fn in filenames:
@@ -932,7 +924,7 @@ class ParquetSnapshotTable:
                     removed += 1
             if dirpath != self.data_dir and not os.listdir(dirpath):
                 os.rmdir(dirpath)
-        return {"epochs_dropped": dropped[::-1], "removed_files": removed}
+        return removed
 
     def rebucket(
         self,
