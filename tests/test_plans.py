@@ -343,7 +343,7 @@ def _snapshot_exchanges(outer: str) -> list[str]:
     lines = outer.splitlines()
     depth = lambda line: len(line) - len(line.lstrip(" :+-"))
     scans = [i for i, line in enumerate(lines) if "FileScan" in line]
-    assert len(scans) == 1, plan
+    assert len(scans) == 1, outer
     i = scans[0]
     d, out = depth(lines[i]), []
     for line in reversed(lines[:i]):
@@ -374,18 +374,20 @@ def test_cow_epoch_plan_default_shape(spark, cow_job):
     routed merge), as planned for its write while the batch is persisted.
     The batch's dedup exchange on (conv_id, turn_idx) runs once, inside
     the cache that both merge branches scan (anti-join keys and upserts).
-    Outside it, three exchanges, all the stats-routed hash on
-    __range_tok — never the sampled RangePartitioner: the snapshot (the
-    optimizer pushes the broadcast anti join below it), the batch keys
-    (under the broadcast) and the upserts."""
+    Outside it, two exchanges, both the stats-routed hash on __range_tok
+    — never the sampled RangePartitioner: the snapshot (the optimizer
+    pushes the broadcast anti join below it) and the upserts. The batch
+    keys are broadcast straight from the cache: a broadcast join keeps
+    the streamed snapshot's partitioning, so routing them would only add
+    an exchange."""
     import re
 
     plan = cow_job.live_plan
     m = cow_job.table.last_committed()["metrics"]
     assert (m["dedup"], m["merge_anti"]) == ("window", "broadcast"), m
     outer = _outside_cache(plan)
-    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", outer)) == 3, plan
-    assert len(re.findall(r"Exchange hashpartitioning", outer)) == 3, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", outer)) == 2, plan
+    assert len(re.findall(r"Exchange hashpartitioning", outer)) == 2, plan
     assert "Exchange rangepartitioning" not in plan, plan
     assert "BroadcastExchange" in outer and "LeftAnti" in outer, plan
     assert outer.count("InMemoryTableScan") == 2, plan

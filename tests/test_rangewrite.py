@@ -86,7 +86,7 @@ def test_partition_id_equals_range_id(spark):
     atoms = [(b, k, 1.0) for b, k in data]
     bounds = plan_range_bounds(atoms, 8)
     out = assign_range_partition(sdf, bounds, 8, "bucket", "key")
-    assert "__range_tok" not in out.columns
+    assert out.columns == ["bucket", "key", "__range_tok"]
     rows = out.withColumn("pid", F.spark_partition_id()).collect()
     assert len(rows) == len(data)
     for r in rows:

@@ -16,15 +16,19 @@ better physically: Spark cannot broadcast either side of a full-outer join
 LEFT ANTI supports a broadcast build of the (small, post-dedup) batch side.
 
 The COW epoch (plans/ingest.CowEpoch) calls these operators on inputs that
-are already routed to the write's key ranges: both sides carry the range
-token ``__range_tok`` (operators/rangewrite.py) and join on (token, key).
-The token is a function of the key, so the result is unchanged, while the
-join inherits the write's exchange — the snapshot payload crosses ONE
-shuffle per epoch, whichever join Spark plans:
+are already routed to the write's key ranges: the snapshot and the upserts
+carry the range token ``__range_tok`` (operators/rangewrite.py). Without
+the broadcast hint the batch keys are routed too and the join runs on
+(token, key); the token is a function of the key, so the result is
+unchanged, while the join inherits the write's exchange. With the hint the
+keys are broadcast unrouted and the join runs on the key (a broadcast join
+keeps the snapshot's partitioning). Either way the snapshot payload crosses
+ONE shuffle per epoch:
 
   snapshot(hot files) → SHUFFLE on __range_tok ─┐
-  batch keys          → SHUFFLE on __range_tok ─┴ anti join (BHJ or SMJ,
-  batch upserts       → SHUFFLE on __range_tok ──── ∪        co-partitioned)
+  batch keys          → broadcast, or SHUFFLE  ─┴ anti join (BHJ, or SMJ
+                        on __range_tok                    co-partitioned)
+  batch upserts       → SHUFFLE on __range_tok ──── ∪
                                                     → sort within, write
 
 The anti-join shape is kept deliberately for the SMJ too: its join RIGHT

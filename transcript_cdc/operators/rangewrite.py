@@ -128,7 +128,6 @@ def assign_range_partition(
     n_parts: int,
     bucket_col: str,
     key_col: str,
-    keep_token: bool = False,
 ) -> DataFrame:
     """Shuffle ``df`` so reducer i holds exactly value-range i.
 
@@ -137,10 +136,11 @@ def assign_range_partition(
     token[range_id] (see module docstring) so partition id == range id.
     NULL keys (none post-dedup, keys are non-null by contract) compare
     false everywhere and land in range 0. With no bounds the token is the
-    bucket itself (a plain bucket hash). ``keep_token`` keeps the
+    bucket itself (a plain bucket hash). The output keeps the
     ``RANGE_TOK`` column, so operators keyed on (token, key...) above the
     exchange — the COW merge's anti join, the streaming max-lsn window —
-    reuse its partitioning instead of shuffling again.
+    reuse its partitioning instead of shuffling again; a caller that has
+    no such operator drops it.
     """
     n_ranges = len(bounds) + 1
     if n_ranges < 2:
@@ -153,5 +153,4 @@ def assign_range_partition(
             rng = c if rng is None else rng + c
         tokens = partition_tokens(n_ranges)
         tok, n = F.element_at(F.array(*[F.lit(t) for t in tokens]), rng + 1), n_ranges
-    out = df.withColumn(RANGE_TOK, tok).repartition(n, F.col(RANGE_TOK))
-    return out if keep_token else out.drop(RANGE_TOK)
+    return df.withColumn(RANGE_TOK, tok).repartition(n, F.col(RANGE_TOK))

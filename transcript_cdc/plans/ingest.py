@@ -27,8 +27,9 @@ copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
                            schema, each cross this one exchange
     ⨝ merge on (__range_tok, key), co-partitioned — no exchange of its own.
                            Batch: survivor anti join (broadcast hint while
-                           the key count ≤ broadcast_max_rows, else Spark's
-                           pick of BHJ/SMJ) ∪ upserts. Streaming: the
+                           the key count ≤ broadcast_max_rows: the keys are
+                           broadcast unrouted and the join is on the key;
+                           else Spark's pick of BHJ/SMJ) ∪ upserts. Streaming: the
                            versioned merge, one max-lsn window over
                            snapshot ∪ batch.
     → sort within ranges   each file covers a tight key interval, which
@@ -391,7 +392,7 @@ class CowEpoch:
         def route(df: DataFrame) -> DataFrame:
             return assign_range_partition(
                 df.withColumn(BUCKET_COL, bucket), bounds, n_parts,
-                BUCKET_COL, key_col, keep_token=True,
+                BUCKET_COL, key_col,
             ).drop(BUCKET_COL)
 
         return route
@@ -418,19 +419,28 @@ class CowEpoch:
         )
         batch_al = schemas.align_types(batch.drop(BUCKET_COL), new_schema)
         key_cols = list(schemas.KEY_COLS)
-        if route is not None:
-            snapshot, batch_al = route(snapshot), route(batch_al)
-            key_cols = [RANGE_TOK, *key_cols]
         if self.versioned:
+            if route is not None:
+                snapshot, batch_al = route(snapshot), route(batch_al)
+                key_cols = [RANGE_TOK, *key_cols]
             merged = merge_apply_versioned(snapshot, batch_al, key_cols=key_cols)
             return merged, new_schema, None
         merge_anti = (
             "broadcast" if n_keys <= self.cfg.broadcast_max_rows else "copartitioned"
         )
+        # A broadcast anti join keeps the streamed snapshot's partitioning
+        # whatever the build side's, so its keys stay unrouted (routing
+        # them would add an exchange that only feeds the broadcast); the
+        # co-partitioned join takes them routed and joins on the token too.
+        keys = upserts = batch_al
+        if route is not None:
+            snapshot, upserts = route(snapshot), route(batch_al)
+            if merge_anti == "copartitioned":
+                keys, key_cols = upserts, [RANGE_TOK, *key_cols]
         survivors = survivors_anti_join(
-            snapshot, batch_al, key_cols, broadcast_keys=merge_anti == "broadcast"
+            snapshot, keys, key_cols, broadcast_keys=merge_anti == "broadcast"
         )
-        return apply_upserts(survivors, batch_al), new_schema, merge_anti
+        return apply_upserts(survivors, upserts), new_schema, merge_anti
 
     def _write(self, merged: DataFrame, routed: bool) -> DataFrame:
         """The range-clustered write plan. The bucket is re-derived from
