@@ -27,11 +27,11 @@ copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
                            schema, each cross this one exchange
     ⨝ merge on (__range_tok, key), co-partitioned — no exchange of its own.
                            Batch: survivor anti join (broadcast hint while
-                           the key count ≤ broadcast_max_rows: the keys are
-                           broadcast unrouted and the join is on the key;
-                           else Spark's pick of BHJ/SMJ) ∪ upserts. Streaming: the
-                           versioned merge, one max-lsn window over
-                           snapshot ∪ batch.
+                           the key count ≤ broadcast_max_rows: the keys
+                           are broadcast unrouted and the join is on the
+                           key; else Spark's pick of BHJ/SMJ) ∪ upserts.
+                           Streaming: the versioned merge, one max-lsn
+                           window over snapshot ∪ batch.
     → sort within ranges   each file covers a tight key interval, which
                            keeps the NEXT epoch's pruning selective (mor:
                            salted repartition by bucket)
@@ -399,7 +399,8 @@ class CowEpoch:
 
     def _merge(self, batch: DataFrame, hot: list, n_keys: int, route) -> tuple:
         """Schema evolution, then the merge of the batch into the hot
-        files, both sides routed by ``route`` when there is one. Returns
+        files, both sides routed by ``route`` when there is one (bar
+        the broadcast-hinted survivor keys). Returns
         (merged, new_schema, merge_anti): ``broadcast`` when the survivor
         anti join carries the broadcast hint, ``copartitioned`` when Spark
         picks the join (BHJ or SMJ) itself, None for the versioned
