@@ -1,7 +1,9 @@
-"""Unit tests for the function library: Arrow normalizer vs Python oracle,
+"""Unit tests for the function library: JVM normalizer vs Python oracle,
 text ops, vectors, near-dup dedup, multimodal plumbing."""
 
 from __future__ import annotations
+
+import unicodedata
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -34,14 +36,53 @@ MESSY = [
 ]
 
 
-def test_arrow_normalizer_matches_python_oracle(spark):
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(MESSY)], "id int, text string")
-    got = {
-        r.id: r.norm
-        for r in df.select("id", normalize_text("text").alias("norm")).collect()
-    }
-    want = {i: normalize_text_py(s) for i, s in enumerate(MESSY)}
-    assert got == want
+def _normalizer_cases() -> list[str | None]:
+    """Every code point assigned in Unicode 14 alone; every combining mark
+    after a base and before U+0301; runs of all 29 whitespace code points
+    (str.isspace) at the start, middle and end; ZWSP next to whitespace and
+    marks; jamo sequences; the empty string and null."""
+    assigned = [
+        chr(cp) for cp in range(0x110000)
+        if not 0xD800 <= cp <= 0xDFFF and unicodedata.category(chr(cp)) != "Cn"
+    ]
+    marks = [ch for ch in assigned if unicodedata.category(ch).startswith("M")]
+    ws = [ch for ch in map(chr, range(0x110000)) if ch.isspace()]
+    assert len(ws) == 29
+    run = "".join(ws)
+    jamo_l = [chr(c) for c in range(0x1100, 0x1113)]
+    jamo_v = [chr(c) for c in range(0x1161, 0x1176)]
+    jamo_t = [chr(c) for c in range(0x11A8, 0x11C3)]
+    return (
+        assigned
+        + [b + m for b in ("a", "e", "\u3131") for m in marks]
+        + [m + "\u0301" for m in marks]
+        + ["a" + m + "\u0301" for m in marks]
+        + [run, run + "a" + run + "b" + run, run[::-1] + "x y" + run]
+        + [f"{w}a{w}{w}b{w}" for w in ws]
+        + ["\u200b", " \u200b ", "\u200b\u00a0x", "a\u200b b", "x \u200b\u3000",
+           "e\u200b\u0301", "e\u0301\u200b", "\u200b\u0301", "a\u0301\u200b\u0327"]
+        + [l + v for l in jamo_l for v in jamo_v]
+        + [l + v + t for l in jamo_l[:4] for v in jamo_v for t in jamo_t]
+        + ["\uac00" + t for t in jamo_t] + ["\u1100\u1100\u1161\u11a8\u11a8"]
+        + MESSY + ["", None]
+    )
+
+
+def test_normalizer_matches_python_oracle(spark):
+    cases = _normalizer_cases()
+    pdf = pd.DataFrame({
+        "id": range(len(cases)),
+        "text": cases,
+        "want": [normalize_text_py(s) for s in cases],
+    })
+    df = spark.createDataFrame(pdf, "id long, text string, want string")
+    bad = (
+        df.select("id", "text", "want", normalize_text("text").alias("got"))
+        .filter(~F.col("got").eqNullSafe(F.col("want")))
+        .limit(20)
+        .collect()
+    )
+    assert bad == []
 
 
 def test_normalizer_null_passthrough(spark):

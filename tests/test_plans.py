@@ -321,6 +321,7 @@ def test_mor_epoch_plan_single_full_payload_exchange(spark, mor_job):
     )
     assert len(re.findall(r"Exchange", plan)) == 1, plan
     assert "lead(" in plan and "row_number" not in plan, plan
+    assert "EvalPython" not in plan, plan  # the normalizer runs in the JVM
 
 
 def _outside_cache(plan: str) -> str:
@@ -391,6 +392,7 @@ def test_cow_epoch_plan_default_shape(spark, cow_job):
     assert "Exchange rangepartitioning" not in plan, plan
     assert "BroadcastExchange" in outer and "LeftAnti" in outer, plan
     assert outer.count("InMemoryTableScan") == 2, plan
+    assert "EvalPython" not in plan, plan  # the normalizer runs in the JVM
     _assert_one_exchange_per_epoch(plan)
     # exactly one dedup exchange: the tree string repeats it (per cache
     # scan, initial and final AQE plan), always with the same attributes,
@@ -488,6 +490,7 @@ def test_stream_micro_batch_plan_shape(stream_job):
     assert len(re.findall(r"Exchange hashpartitioning\(__range_tok", plan)) == 2, plan
     assert "rangepartitioning" not in plan, plan
     assert "Window" in plan and "Union" in plan, plan
+    assert "EvalPython" not in plan, plan  # the normalizer runs in the JVM
     _assert_one_exchange_per_epoch(plan)
 
 

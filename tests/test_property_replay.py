@@ -4,7 +4,8 @@ For arbitrary small I/U/D event sequences — including pathological shapes a
 seeded generator rarely hits (delete-before-insert, same-key op runs,
 re-insert after delete at every position) — the engine's final state must
 equal the single-threaded dict oracle, in both storage modes and regardless
-of epoch chunking.
+of epoch chunking. The text needs the exact normalizer (NFC, ZWSP,
+Unicode whitespace), so LWW and normalization are checked together.
 """
 
 from __future__ import annotations
@@ -29,6 +30,16 @@ EVENTS = st.lists(
 )
 
 
+# Text the normalizer changes: NFD é (NFC composes it), ZWSP, NBSP and
+# U+3000 runs, leading/trailing whitespace; plus one ASCII-only shape.
+_TEXTS = [
+    "text {k} rev{i}",
+    "  e\u0301tude\u200b {k}\u00a0\u00a0rev{i}\t",
+    "\u3000\u3000cafe\u0301 {k}\u200b\u200brev{i}\u2029",
+    "\u00a0{k}\u3000\u00a0 rev{i} \u200b",
+]
+
+
 def _feed_df(seq: list[tuple[int, int]]) -> pd.DataFrame:
     ops = np.array(["I", "U", "D"])
     n = len(seq)
@@ -41,7 +52,9 @@ def _feed_df(seq: list[tuple[int, int]]) -> pd.DataFrame:
             "conv_id": np.array([f"conv-{k % 3}" for k in keys]),
             "turn_idx": (keys // 3).astype(np.int32),
             "role": np.where(op == "D", None, "user"),
-            "text": np.where(op == "D", None, [f"text {k} rev{i}" for i, k in enumerate(keys)]),
+            "text": np.where(op == "D", None, [
+                _TEXTS[i % len(_TEXTS)].format(k=k, i=i) for i, k in enumerate(keys)
+            ]),
             # mixed None/str so parquet type inference sees a string column
             "tool": np.where((keys % 2 == 0) & (op != "D"), "search", None),
             "ts": pd.to_datetime(
@@ -87,7 +100,6 @@ def test_any_sequence_matches_oracle(spark, tmp_path_factory, seq, storage, epoc
         str(d / "table"),
         IngestConfig(
             n_buckets=4, epoch_events=epoch_events, storage=storage,
-            arrow_normalizer=False,  # SQL normalizer: keeps examples fast
         ),
     )
     job.run()

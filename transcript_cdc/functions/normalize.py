@@ -1,66 +1,56 @@
-"""Arrow-vectorized text normalization (SURVEY.md §2.2 P4).
+"""Text normalization in the JVM (SURVEY.md §2.2 P4).
 
 Mirrors the reference's DocumentCleaner stage
 (ETL/batch_ecs/source/pipeline.py:43) — strip extra whitespace / empty
-lines — which runs row-at-a-time Python inside Haystack. Here it is a
-scalar pandas_udf: Arrow batches in, vectorized pandas string ops, Arrow
-batches out. Per BASELINE.json input_hint: no per-row Python.
+lines — which runs row-at-a-time Python inside Haystack. Here it is one
+Column expression of Spark built-ins plus ICU4J's NFC (the
+``icu4j`` jar ships in pyspark's ``jars/``): no Python worker, no
+Arrow boundary. Per BASELINE.json input_hint: no per-row Python.
 
-Semantics (kept identical to datagen.normalize_text_py, the test oracle):
+Semantics (identical to datagen.normalize_text_py, the test oracle):
   1. Unicode NFC normalization
   2. zero-width-space removal
   3. collapse all whitespace runs (incl. NBSP, tabs, CRLF) to single spaces
   4. strip leading/trailing whitespace
+
+Known gap: CPython's ``unicodedata`` (3.11: Unicode 14.0) is the spec,
+and ICU 77 implements Unicode 16. Every code point assigned in Unicode
+14 is pinned equal by tests/test_functions.py; text using code points
+assigned after 14.0 may compose differently from the oracle.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-
-def _normalize_series(s: pd.Series) -> pd.Series:
-    # One fused pass per string instead of four chained pandas .str ops
-    # (each of which is itself an elementwise pass that allocates a full
-    # intermediate column): ASCII strings skip NFC/ZWSP entirely (both are
-    # identity there), and collapse+strip is `" ".join(t.split())` — the
-    # exact expression the replay oracle (datagen.normalize_text_py) uses.
-    # Measured 4.4x faster on 200k mixed-text rows; the Spark-level
-    # contract is unchanged (Arrow batch in → Arrow batch out, no per-row
-    # UDF dispatch).
-    import unicodedata
-
-    arr = s.to_numpy(dtype=object, copy=False)
-    out = np.empty(len(arr), dtype=object)
-    for i, t in enumerate(arr):
-        if not isinstance(t, str):
-            out[i] = None
-            continue
-        if not t.isascii():
-            t = unicodedata.normalize("NFC", t).replace("​", "")
-        out[i] = " ".join(t.split())
-    return pd.Series(out, index=s.index)
-
-
-# DataType object (not DDL string) so the UDF can be built without an
-# active SparkSession at import time.
-_normalize_udf = pandas_udf(_normalize_series, T.StringType())
+# The 29 code points Python's str.isspace() accepts (str.split()'s
+# separators), as a Java regex class.
+_PY_WHITESPACE = (
+    r"[\t\n\x0B\f\r\x1C-\x1F \x{85}\x{A0}\x{1680}\x{2000}-\x{200A}"
+    r"\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]+"
+)
 
 
 def normalize_text(col: Column | str) -> Column:
-    """Arrow-vectorized normalizer (the engine's ingest path uses this)."""
-    return _normalize_udf(F.col(col) if isinstance(col, str) else col)
+    """The exact normalizer (the engine's ingest path uses this). Null and
+    ASCII values skip NFC and ZWSP removal (both are the identity on
+    ASCII; ``reflect`` throws on null). ``reflect`` is nondeterministic
+    to Catalyst, so the expression may not sit inside an aggregate."""
+    c = F.col(col) if isinstance(col, str) else col
+    nfc = F.reflect(
+        F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), c, F.lit(False)
+    )
+    composed = F.when(
+        c.isNull() | (F.length(c) == F.octet_length(c)), c
+    ).otherwise(F.regexp_replace(nfc, r"\u200B", ""))
+    return F.trim(F.regexp_replace(composed, _PY_WHITESPACE, " "))
 
 
 def normalize_text_sql(col: Column | str) -> Column:
-    """Pure-SQL (JVM codegen) subset of the normalizer: whitespace collapse +
-    trim, no NFC. Used where an exact DuckDB oracle twin is needed
-    (__spark_entry__ parity queries) and in hot paths whose input is known
-    ASCII — stays inside WholeStageCodegen, zero Python.
+    """Pure-SQL subset of the normalizer: whitespace collapse + trim, no
+    NFC, no ZWSP removal. Its exact DuckDB twin backs the __spark_entry__
+    parity queries.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(c, r"\s+", " "))

@@ -3,8 +3,9 @@
 One spark-submit job replaces the reference's EventBridge→Lambda→Glue→S3→
 Lambda→Batch→OpenSearch chain (ETL/etl/etl_stack.py, trigger lambdas,
 batch_ecs containers): read committed-offset ledger → scan the WAL slice →
-Arrow-normalize text → within-batch LWW dedup → bucket + salt → MERGE
-against the touched snapshot buckets → atomically commit data + manifest.
+within-batch LWW dedup → normalize the winners' text (JVM) → bucket + salt
+→ MERGE against the touched snapshot buckets → atomically commit data +
+manifest.
 
 Per-epoch dataflow (shuffles annotated). MOR epochs run ONE full-payload
 shuffle: the default ``clustered`` LWW strategy windows over the write
@@ -15,7 +16,7 @@ copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
   changes(lsn∈(lo,hi])     parquet scan, lsn range pushed down (streaming:
                            one foreachBatch micro-batch)
     → lww_dedup            SHUFFLE 1: hash(conv_id,turn_idx) window
-    → normalize_text       Arrow, narrow, winners only
+    → normalize_text       JVM expression (ICU NFC), narrow, winners only
     → __bucket = pmod(xxhash64(conv_id), N), persisted; control pass
     → route by __range_tok SHUFFLE 2, split points from the hot files'
                            footer stats + the batch key lists, computed
@@ -52,13 +53,13 @@ from __future__ import annotations
 import time
 from collections.abc import Sequence
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from transcript_cdc import schemas
-from transcript_cdc.functions.normalize import normalize_text, normalize_text_sql
+from transcript_cdc.functions.normalize import normalize_text
 from transcript_cdc.operators.dedup import lww_dedup, lww_dedup_clustered
 from transcript_cdc.operators.merge import (
     apply_upserts,
@@ -87,7 +88,6 @@ class IngestConfig:
     n_buckets: int = 16
     epoch_events: int = 1_000_000  # LSN window per epoch (micro-batch size)
     normalize: bool = True
-    arrow_normalizer: bool = True  # False → pure-SQL normalizer (no NFC)
     broadcast_max_rows: int = 2_000_000
     write_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     # "cow": per-epoch MERGE + touched-bucket rewrite (read-optimized).
@@ -140,7 +140,6 @@ class IngestConfig:
     # epochs to "window". "window"/"broadcast" force one strategy for
     # either storage; "clustered" is MOR-only.
     dedup_strategy: str = "auto"
-    extra: dict = field(default_factory=dict)
 
 
 def pick_dedup_strategy(cfg: IngestConfig, table: ParquetSnapshotTable) -> str:
@@ -213,12 +212,12 @@ class CowEpoch:
         cfg, table = self.cfg, self.table
         strategy = pick_dedup_strategy(cfg, table)
         # Dedup runs FIRST: the winner is chosen by lsn, never by text, so
-        # normalizing only the surviving rows is equivalent and sends
-        # fewer rows through the Arrow python workers.
+        # normalizing only the surviving rows is equivalent and normalizes
+        # fewer rows. The normalizer is nondeterministic to Catalyst
+        # (reflect), so it stays below the persist, out of any aggregate.
         batch = lww_dedup(raw, schemas.KEY_COLS, schemas.LSN_COL, strategy)
         if cfg.normalize and "text" in batch.columns:
-            norm = normalize_text("text") if cfg.arrow_normalizer else normalize_text_sql("text")
-            batch = batch.withColumn("text", norm)
+            batch = batch.withColumn("text", normalize_text("text"))
         batch = batch.withColumn(
             BUCKET_COL, bucket_expr(table.n_buckets, table.meta["bucket_by"])
         )
@@ -586,11 +585,7 @@ class CdcIngestJob:
         salt = lagged_salt(self.table.last_committed())
         norm = None
         if self.cfg.normalize and "text" in raw.columns:
-            norm = (
-                normalize_text("text")
-                if self.cfg.arrow_normalizer
-                else normalize_text_sql("text")
-            )
+            norm = normalize_text("text")
         if strategy == "clustered":
             # Single-exchange epoch: repartition on the write clustering,
             # then the window piggybacks on that exchange (its required
@@ -647,10 +642,9 @@ class CdcIngestJob:
         # of rescanning the chain, and files_for_key point-read stats stay
         # tight. Leading BUCKET_COL keeps the dynamic-partition writer's
         # required ordering satisfied (no second sort in the plan). In the
-        # clustered path rows already stream in this order; the explicit
-        # sort re-sorts sorted runs (the Arrow normalizer hides plan-visible
-        # ordering, so the writer would otherwise add its own bucket-only,
-        # stability-unspecified sort).
+        # unsalted clustered path the window's sort already is this order
+        # and Catalyst drops this one; elsewhere it is the sort that fixes
+        # the file layout.
         new_state = observed.sortWithinPartitions(
             BUCKET_COL, *self.table.key_cols, schemas.LSN_COL
         )

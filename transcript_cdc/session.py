@@ -89,7 +89,8 @@ def get_spark(
         # reuses the write's exchange instead of shuffling the snapshot
         # payload a second time on the full key (plans/ingest.CowEpoch).
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        # All Python-side transforms are Arrow-vectorized pandas UDFs.
+        # Python-side transforms of the function library (mapInPandas,
+        # pandas UDFs) cross as Arrow batches; the ingest path has none.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
