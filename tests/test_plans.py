@@ -326,9 +326,11 @@ def test_mor_epoch_plan_single_full_payload_exchange(spark, mor_job):
 
 def _outside_cache(plan: str) -> str:
     """``plan`` minus every InMemoryRelation subtree (the persisted batch's
-    own plan, which the tree string repeats under each scan of the cache)."""
+    own plan, which the tree string repeats under each scan of the cache).
+    Split on "\n" only: literals in the plan (the normalizer's U+0085) are
+    line breaks to ``str.splitlines``."""
     out, cut = [], None
-    for line in plan.splitlines():
+    for line in plan.split("\n"):
         depth = len(line) - len(line.lstrip(" :+-"))
         if cut is not None and depth > cut:
             continue
@@ -341,7 +343,7 @@ def _snapshot_exchanges(outer: str) -> list[str]:
     """The exchanges above the hot-snapshot scan — the one FileScan
     outside the persisted batch — walking the tree string's ancestor
     chain by indentation."""
-    lines = outer.splitlines()
+    lines = outer.split("\n")
     depth = lambda line: len(line) - len(line.lstrip(" :+-"))
     scans = [i for i, line in enumerate(lines) if "FileScan" in line]
     assert len(scans) == 1, outer

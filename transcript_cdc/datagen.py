@@ -231,8 +231,9 @@ def write_change_feed(spec: StreamSpec, out_dir: str) -> dict:
 
 
 def normalize_text_py(s: str | None) -> str | None:
-    """Pure-Python oracle for the Arrow normalizer: NFC, collapse whitespace,
-    strip. Must stay semantically identical to functions/normalize.py."""
+    """Pure-Python oracle for the ingest normalizer: NFC, ZWSP removal,
+    collapse whitespace, strip. functions/normalize.py must stay
+    semantically identical (tests/test_functions.py pins it)."""
     if s is None:
         return None
     s = unicodedata.normalize("NFC", s)

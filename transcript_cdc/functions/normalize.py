@@ -3,9 +3,10 @@
 Mirrors the reference's DocumentCleaner stage
 (ETL/batch_ecs/source/pipeline.py:43) — strip extra whitespace / empty
 lines — which runs row-at-a-time Python inside Haystack. Here it is one
-Column expression of Spark built-ins plus ICU4J's NFC (the
-``icu4j`` jar ships in pyspark's ``jars/``): no Python worker, no
-Arrow boundary. Per BASELINE.json input_hint: no per-row Python.
+Column expression: Spark built-ins plus two static JVM methods called
+with ``reflect``, ICU4J's NFC and commons-lang3's whitespace collapse
+(both jars ship in pyspark's ``jars/``). No Python worker, no Arrow
+boundary. Per BASELINE.json input_hint: no per-row Python.
 
 Semantics (identical to datagen.normalize_text_py, the test oracle):
   1. Unicode NFC normalization
@@ -24,27 +25,42 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# The 29 code points Python's str.isspace() accepts (str.split()'s
-# separators), as a Java regex class.
-_PY_WHITESPACE = (
-    r"[\t\n\x0B\f\r\x1C-\x1F \x{85}\x{A0}\x{1680}\x{2000}-\x{200A}"
-    r"\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]+"
-)
+# Python's str.isspace() accepts 29 code points; Java's
+# Character.isWhitespace (StringUtils.normalizeSpace) accepts the same
+# set minus these four, so they are mapped to a space first.
+_PY_ONLY_WHITESPACE = ("\x85", "\xa0", "\u2007", "\u202f")
 
 
 def normalize_text(col: Column | str) -> Column:
-    """The exact normalizer (the engine's ingest path uses this). Null and
-    ASCII values skip NFC and ZWSP removal (both are the identity on
-    ASCII; ``reflect`` throws on null). ``reflect`` is nondeterministic
-    to Catalyst, so the expression may not sit inside an aggregate."""
+    """The exact normalizer (the engine's ingest path uses this), as one
+    JVM expression:
+
+    - NFC by ICU4J's ``Normalizer.compose`` and ZWSP removal run on
+      non-ASCII values only (both are the identity on ASCII);
+    - commons-lang3's ``StringUtils.normalizeSpace`` collapses whitespace
+      runs to one space. Its final ``String.trim`` would also strip
+      control characters below U+0020 that Python keeps, so the text is
+      wrapped in ZWSP sentinels (no ZWSP is left in it at that point) and
+      only the sentinels and spaces are trimmed after the call.
+
+    ``reflect`` throws on null, so nulls short-circuit. It is
+    nondeterministic to Catalyst, so no subexpression is shared: each
+    reflected call appears once. For the same reason the expression may
+    not sit inside an aggregate."""
     c = F.col(col) if isinstance(col, str) else col
+    zwsp = F.lit("\u200b")
     nfc = F.reflect(
         F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), c, F.lit(False)
     )
-    composed = F.when(
-        c.isNull() | (F.length(c) == F.octet_length(c)), c
-    ).otherwise(F.regexp_replace(nfc, r"\u200B", ""))
-    return F.trim(F.regexp_replace(composed, _PY_WHITESPACE, " "))
+    text = F.replace(nfc, zwsp, F.lit(""))
+    for ch in _PY_ONLY_WHITESPACE:
+        text = F.replace(text, F.lit(ch), F.lit(" "))
+    text = F.when(F.length(c) == F.octet_length(c), c).otherwise(text)
+    spaced = F.reflect(
+        F.lit("org.apache.commons.lang3.StringUtils"), F.lit("normalizeSpace"),
+        F.concat(zwsp, text, zwsp),
+    )
+    return F.when(c.isNotNull(), F.btrim(spaced, F.lit(" \u200b")))
 
 
 def normalize_text_sql(col: Column | str) -> Column:

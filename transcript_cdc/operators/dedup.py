@@ -111,9 +111,8 @@ def lww_dedup_clustered(
     row survives, same as ``window``). Output rows stream in
     (cluster..., key..., order) ascending order — callers that also
     ``sortWithinPartitions`` the same prefix get that sort for free when
-    no order-destroying node sits between (the Arrow normalizer does
-    destroy plan-visible ordering, so the ingest path keeps an explicit
-    trailing sort; it re-sorts already-sorted runs).
+    no order-destroying node sits between (the MOR epoch's normalizer is
+    a JVM projection, so Catalyst drops its trailing layout sort).
 
     Reference analogue: same LWW contract as ``lww_dedup`` (cursor-order +
     DuplicatePolicy.OVERWRITE, ETL/batch_ecs/source/pipeline.py:53) —
