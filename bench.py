@@ -88,9 +88,9 @@ def run_cdc_replay(spark, n_events_target: int, epochs: int = 4, modes=("cow", "
 
         shuffle_p = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         out: dict = {}
-        # One-time JVM/codegen warmup: a miniature replay through the
-        # same code paths (window dedup, merge/append, normalizer,
-        # parquet write) per storage mode, so the timed
+        # One-time JVM/codegen/Arrow-python-worker warmup: a miniature
+        # replay through the same code paths (window dedup, merge/append,
+        # normalizer, parquet write) per storage mode, so the timed
         # epochs measure the engine and not first-call compilation. A
         # 10^10-event deployment pays this constant once; without it epoch
         # 0 carries ~3x the steady-state wall (see sustained_events_per_sec,

@@ -32,21 +32,16 @@ _PY_ONLY_WHITESPACE = ("\x85", "\xa0", "\u2007", "\u202f")
 
 
 def normalize_text(col: Column | str) -> Column:
-    """The exact normalizer (the engine's ingest path uses this), as one
-    JVM expression:
-
-    - NFC by ICU4J's ``Normalizer.compose`` and ZWSP removal run on
-      non-ASCII values only (both are the identity on ASCII);
-    - commons-lang3's ``StringUtils.normalizeSpace`` collapses whitespace
-      runs to one space. Its final ``String.trim`` would also strip
-      control characters below U+0020 that Python keeps, so the text is
-      wrapped in ZWSP sentinels (no ZWSP is left in it at that point) and
-      only the sentinels and spaces are trimmed after the call.
-
-    ``reflect`` throws on null, so nulls short-circuit. It is
-    nondeterministic to Catalyst, so no subexpression is shared: each
-    reflected call appears once. For the same reason the expression may
-    not sit inside an aggregate."""
+    """The exact normalizer of the ingest path, one JVM expression.
+    Non-ASCII values get ICU4J's NFC and lose their ZWSPs (both are the
+    identity on ASCII). commons-lang3's ``normalizeSpace`` collapses
+    whitespace runs; its closing ``String.trim`` would also strip control
+    characters below U+0020 that Python keeps, so the text goes in
+    between ZWSP sentinels (none is left in it by then) and only the
+    sentinels and spaces are trimmed. ``reflect`` throws on null, hence
+    the null guard; it is nondeterministic to Catalyst, so each call
+    appears once (no shared subexpression) and the expression may not
+    sit inside an aggregate."""
     c = F.col(col) if isinstance(col, str) else col
     zwsp = F.lit("\u200b")
     nfc = F.reflect(

@@ -16,7 +16,7 @@ copy-on-write core ``CowEpoch``, which StreamingIngest.apply_batch shares:
   changes(lsn∈(lo,hi])     parquet scan, lsn range pushed down (streaming:
                            one foreachBatch micro-batch)
     → lww_dedup            SHUFFLE 1: hash(conv_id,turn_idx) window
-    → normalize_text       JVM expression (ICU NFC), narrow, winners only
+    → normalize_text       JVM expression, narrow, winners only
     → __bucket = pmod(xxhash64(conv_id), N), persisted; control pass
     → route by __range_tok SHUFFLE 2, split points from the hot files'
                            footer stats + the batch key lists, computed
